@@ -1,6 +1,32 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** Seconds `run` took, NEGATED when it throws: the failure sentinel
+    * that never wins a min over runs and never adds to a total.
+    */
+  def timed(run: => Unit): Double = {
+    val t0 = System.nanoTime()
+    val ok = try { run; true } catch { case _: Throwable => false }
+    val dt = (System.nanoTime() - t0) / 1e9
+    if (ok) dt else -dt
+  }
+
+  /** Headline sums of a sweep: `total` adds successful queries only,
+    * so a failing query can never make a run look faster; failures
+    * are counted and named instead.
+    */
+  final case class Summary(total: Double, nFailed: Int,
+      failed: Seq[String]) {
+    def failedJson: String =
+      s""""n_failed":$nFailed,"failed":""" +
+        failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+  }
+
+  def summarise(results: Seq[(String, Double)]): Summary = {
+    val (ok, bad) = results.partition(_._2 > 0)
+    Summary(ok.map(_._2).sum, bad.size, bad.map(_._1))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -91,17 +117,14 @@ object Bench {
     // never win a min (see better() below) and are visible in the
     // per_query line as negatives.
     def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
-      val dt = (System.nanoTime() - t0) / 1e9
+      val t = timed(fn(spark, sfDir).count())
       // Per-query independence (r18): release any in-query persist()
       // the action left behind, so the next query (and any retry of
       // this one) computes from the parquet inputs — Verify's policy.
       // Outside the timer: the query already paid for building the
       // blocks; dropping them is inter-query cleanup.
       try spark.catalog.clearCache() catch { case _: Throwable => }
-      if (ok) dt else -dt
+      t
     }
     // min over clean runs, where a failed run (negative sentinel)
     // never beats a successful one, and a success always replaces a
@@ -112,19 +135,18 @@ object Bench {
     // loaded up front: they both gate the retry sweep (below) and feed
     // the floor_delta report line.
     val floors: Map[String, Double] = {
-      val floorsFile = Seq("BASELINE_floors.json",
-        "/root/repo/BASELINE_floors.json")
-        .map(java.nio.file.Paths.get(_))
-        .find(java.nio.file.Files.exists(_))
-      floorsFile.map { p =>
+      // relative to the working directory: a run from the checkout
+      val p = java.nio.file.Paths.get("BASELINE_floors.json")
+      if (!java.nio.file.Files.exists(p)) Map.empty
+      else {
         val s = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
         """"([A-Za-z0-9_]+)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(s)
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }.getOrElse(Map.empty)
+      }
     }
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     val p1 = ordered.map { case (name, fn) => name -> time(fn) }
-    val p1Total = p1.map(_._2).sum
+    val p1Total = summarise(p1).total
     val retryThreshold = 2.0
     // A query is worth re-timing when it is slow in absolute terms OR
     // sits at flag level (≥3× floor and ≥0.5 s over) — the r17 flag
@@ -244,8 +266,10 @@ object Bench {
     // BEFORE the final summary: the driver tail-parses the LAST line.
     locally {
       if (floors.nonEmpty) {
-        val floorTotal =
-          results.flatMap { case (k, _) => floors.get(k) }.sum
+        // floors of the queries the total counts (successes only)
+        val floorTotal = results.collect {
+          case (k, v) if v > 0 && floors.contains(k) => floors(k)
+        }.sum
         val regressed = results.flatMap { case (k, v) =>
           floors.get(k).filter(f => v >= f * 3 && v - f >= 0.5)
             .map(f => (k, v, f))
@@ -256,8 +280,8 @@ object Bench {
         val rq = regressed.map { case (k, v, f) =>
           "\"" + k + "\":{\"sec\":" + r3(v) + ",\"floor\":" + r3(f) + "}"
         }.mkString("{", ",", "}")
-        val total = results.map(_._2).sum
-        println(s"""{"metric":"floor_delta","floor_total":${r3(floorTotal)},"total":${r3(total)},"n_regressed":${regressed.size},"regressions":$rq}""")
+        val sum = summarise(results)
+        println(s"""{"metric":"floor_delta","floor_total":${r3(floorTotal)},"total":${r3(sum.total)},${sum.failedJson},"n_regressed":${regressed.size},"regressions":$rq}""")
       }
     }
     // ...then a SHORT final line: the driver's tail-capture truncated
@@ -271,8 +295,8 @@ object Bench {
     val hq = results.filter(r => headline(r._1))
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","first_pass_total":${r3(p1Total)},"queries":$hq,"sf":"$sfDir"}""")
+    val sum = summarise(results)
+    println(s"""{"metric":"total","value":${r3(sum.total)},"unit":"sec","first_pass_total":${r3(p1Total)},${sum.failedJson},"queries":$hq,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

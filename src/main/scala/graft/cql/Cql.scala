@@ -4896,6 +4896,67 @@ object Cql {
       case p => fail(s"unsupported predicate: $p")
     }
 
+  /** The scan filters of a SELECT that binds every partition-key
+    * part by `=` — the driver-local read's pushdown (see `select`).
+    * Key terms translate the way Catalyst translates the same
+    * predicates for the DataFrame scan: bigint/int/text key values,
+    * an int part takes an in-range bigint literal (unwrap-cast), and
+    * a one-value IN list becomes an equality (OptimizeIn) — so the
+    * scan's pruning and its strictCql guard see exactly what they
+    * would see there. Data-column terms stay Spark filters above the
+    * local relation; the scan's guard waives them only under ALLOW
+    * FILTERING (`relaxed`), so without it they keep the DataFrame
+    * scan, which refuses them. None = not a single-partition read, or
+    * a key term of another shape: the caller keeps the DataFrame scan.
+    */
+  private def partitionKeyFilters(spec: graft.sources.KeySpec,
+      terms: Seq[String], relaxed: Boolean)
+      : Option[Seq[org.apache.spark.sql.sources.Filter]] = {
+    import org.apache.spark.sql.sources._
+    import org.apache.spark.sql.types.{DataType, IntegerType, LongType,
+      StringType}
+    val parts = (spec.pkParts ++ spec.ckParts)
+      .map(p => p.name.toLowerCase -> p).toMap
+    def value(dt: DataType, v: Any): Option[Any] = (dt, v) match {
+      case (LongType, l: Long) => Some(l)
+      case (IntegerType, l: Long) if l.isValidInt => Some(l.toInt)
+      case (StringType, s: String) => Some(s)
+      case _ => None
+    }
+    // per term: None = no local read, Some(None) = a Spark-side filter
+    def one(t: String): Option[Option[Filter]] = t match {
+      case InRe(c, vs) if parts.contains(c.toLowerCase) =>
+        val p = parts(c.toLowerCase)
+        val xs = splitValues(vs).toSeq
+          .map(v => value(p.dataType, literal(v)))
+        if (xs.exists(_.isEmpty)) None
+        else xs.flatten.distinct match {
+          case Seq(x) => Some(Some(EqualTo(p.name, x)))
+          case ys => Some(Some(In(p.name, ys.toArray)))
+        }
+      case PredRe(c, op, v) if parts.contains(c.toLowerCase) =>
+        val p = parts(c.toLowerCase)
+        value(p.dataType, literal(v)).map(x => Some(op match {
+          case "=" => EqualTo(p.name, x)
+          case "<" => LessThan(p.name, x)
+          case "<=" => LessThanOrEqual(p.name, x)
+          case ">" => GreaterThan(p.name, x)
+          case ">=" => GreaterThanOrEqual(p.name, x)
+        }))
+      case _ => if (relaxed) Some(None) else None
+    }
+    val each = terms.map(one)
+    if (each.exists(_.isEmpty)) None
+    else {
+      val fs = each.flatMap(_.get)
+      val bound = spec.pkParts.forall(p => fs.exists {
+        case EqualTo(n, _) => n == p.name
+        case _ => false
+      })
+      if (bound) Some(fs) else None
+    }
+  }
+
   /** Parse WHERE into (pkSet, ckEq, ckLo, ckHi) for the write paths —
     * the Cassandra-shaped key-only predicate DELETE/UPDATE require.
     * Bounds are tracked as Longs so the exclusive-bound adjustment
@@ -6156,30 +6217,32 @@ object Cql {
           graft.sources.CellView.refresh(spark, dir)
         val relaxed = allowFiltering || fnNarrows ||
           distinctStatics.nonEmpty
-        var reader = spark.read.format(Fmt).option("reconcile", "true")
-          .option("strictCql", (!relaxed).toString)
-          .option("allowFiltering", relaxed.toString)
+        val aggOnly = cols != "*" && splitItems(cols).forall(isAggItem)
+        // the scan's options — one map, handed to either the
+        // DataFrame reader or the driver-local read below
+        val opts = scala.collection.mutable.LinkedHashMap(
+          "reconcile" -> "true",
+          "strictCql" -> (!relaxed).toString,
+          "allowFiltering" -> relaxed.toString)
         // WITH CLUSTERING ORDER BY (... DESC): serve the DECLARED
         // order — partitions stream tail-first through the C39
         // reverse cursor, so LIMIT takes the newest rows and PER
         // PARTITION LIMIT keeps the last n (THE time-series idiom).
         // Explicit ORDER BY, paging, DISTINCT and aggregates define
         // their own order and skip the reversal.
-        val aggOnly = cols != "*" && splitItems(cols).forall(isAggItem)
         if (order.isEmpty && page.isEmpty && group.isEmpty &&
             !distinct && !aggOnly &&
             graft.sources.CellSource.clusteringDesc(dir))
-          reader = reader.option("reverse", "true")
+          opts("reverse") = "true"
         // counter tables read in shard-SUM mode (C10): value = Σ
         // deltas per (pk, ck, col), wt = max shard wt
-        if (isCounter(dir)) reader = reader.option("counter", "true")
+        if (isCounter(dir)) opts("counter") = "true"
         // a DDL-created frozen<udt> table serves binary cells BEFORE
         // its first flush (headers win once they exist)
-        if (udtL.isDefined) reader = reader.option("valueType", "binary")
+        if (udtL.isDefined) opts("valueType") = "binary"
         // TTL(c) needs the winning cell's absolute expiry pseudo-column
-        if (hasTtl) reader = reader.option("withTtl", "true")
-        if (hasTok && !tokEmpty)
-          reader = reader.option("tokenRange", s"$tokLo:$tokHi")
+        if (hasTtl) opts("withTtl") = "true"
+        if (hasTok && !tokEmpty) opts("tokenRange") = s"$tokLo:$tokHi"
         page.foreach { st =>
           // route on the TABLE's key layout, not the state string's
           // content — on a default-layout table the col segment is a
@@ -6193,14 +6256,36 @@ object Cql {
                 val i = kv.indexOf('=')
                 if (i <= 0) fail(s"PAGE AFTER pair must be " +
                   s"name=value, got '$kv'")
-                reader = reader.option(
-                  s"pageAfter.${kv.substring(0, i).trim.toLowerCase}",
-                  kv.substring(i + 1).trim)
+                opts(s"pageAfter.${kv.substring(0, i).trim.toLowerCase}") =
+                  kv.substring(i + 1).trim
               }
-          } else reader = reader.option("pageAfter", st)
+          } else opts("pageAfter") = st
         }
-        ppl.foreach(n => reader = reader.option("perPartitionLimit", n))
-        val loaded = reader.load(dir)
+        ppl.foreach(n => opts("perPartitionLimit") = n.toString)
+        // A single-partition SELECT whose only operators above the
+        // scan are filters, projections and LIMIT reads DRIVER-LOCAL
+        // (Cassandra's replica-local read): the same scan builder,
+        // options and pushed key filters, run on the driver, wrapped
+        // as a local relation that Catalyst folds on the driver — no
+        // Spark job. Forms that need an operator above the scan
+        // (ORDER BY, GROUP BY and aggregates, DISTINCT, paging,
+        // token() ranges, collection/unfrozen-UDT reassembly) and the
+        // index routes above keep the DataFrame scan.
+        val pointFilters =
+          if (hasTok || page.isDefined || order.isDefined ||
+              group.isDefined || distinct || aggOnly ||
+              (cols != "*" && (cqlCollectionOf(dir).isDefined ||
+                (udtL.isDefined && udtUnfrozenOf(dir))))) None
+          else partitionKeyFilters(spec, regularTerms, relaxed)
+        val loaded = pointFilters match {
+          case Some(fs) =>
+            import scala.jdk.CollectionConverters._
+            val (schema, rows) = graft.sources.CellSource
+              .localReconciledRowsWhere(dir, fs, opts.toMap)
+            spark.createDataFrame(rows.asJava, schema)
+          case None =>
+            spark.read.format(Fmt).options(opts).load(dir)
+        }
         if (tokEmpty) loaded.filter(lit(false)) else loaded
       }
     preds.foreach { case (_, p) => df = df.filter(p) }
@@ -9425,7 +9510,8 @@ object Cql {
     lazy val keyedLocal: (org.apache.spark.sql.types.StructType,
         Seq[org.apache.spark.sql.Row]) = {
       val per = pkTuples.map(t => graft.sources.CellSource
-        .localReconciledRowsWhere(dir, pkNames.zip(t)))
+        .localReconciledRowsWhere(dir, pkNames.zip(t).map {
+          case (n, v) => org.apache.spark.sql.sources.EqualTo(n, v) }))
       (per.head._1, per.toSeq.flatMap(_._2))
     }
     def fieldIdx(n: String): Int = {
@@ -9594,7 +9680,7 @@ object Cql {
     */
   /** r19 — bounded point reads of DEFAULT-layout tables run DRIVER-
     * LOCAL through the connector's own reconcile planner and merge
-    * readers ([[graft.sources.CellSource.localReconciledRows]]):
+    * readers ([[graft.sources.CellSource.localReconciledRowsWhere]]):
     * identical semantics to `spark.read...option("reconcile","true")
     * .load(dir).filter(pk IN ...).collect()` (same planning, same
     * pruning, same external row types), zero Spark jobs. Callers
@@ -9604,7 +9690,9 @@ object Cql {
     */
   private def localReconciled(dir: String,
       pks: Seq[Long]): Seq[org.apache.spark.sql.Row] =
-    graft.sources.CellSource.localReconciledRows(dir, Some(pks.toSet))
+    graft.sources.CellSource.localReconciledRowsWhere(dir,
+      Seq(org.apache.spark.sql.sources.In("pk",
+        pks.distinct.sorted.map(v => Long.box(v): Any).toArray)))._2
 
   private def listIndexTargets(dir: String, name: String,
       pks: Seq[Long], idx: Int): Seq[(Long, Int)] = {

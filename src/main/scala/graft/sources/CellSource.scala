@@ -782,102 +782,60 @@ object CellSource {
     }
   }
 
-  /** Driver-LOCAL reconciled point read (r19) — the CQL front door's
-    * bounded read-before-write statements (collection appends/
-    * replaces, list index addressing, LWT current-state reads) used
-    * to schedule one Spark JOB each over a handful of rows; at sf0.1
-    * a 10-statement lifecycle spent ~80 ms of driver-side planning
-    * and scheduling PER JOB with <15 ms of actual task work
-    * (StageStats, r19), and at 100 TB a single-partition point read
-    * must not cost a cluster round — it is a replica-local read,
-    * the same authority [[maxWt]] already serves header stats from.
+  /** Driver-LOCAL reconciled read — the CQL front door's bounded
+    * reads: single-partition SELECTs (`Cql.select`), LWT current-state
+    * reads, conditional-BATCH partition reads and collection
+    * read-before-write statements. Each used to schedule one Spark JOB
+    * over a handful of rows; at sf0.1 a 10-statement lifecycle spent
+    * ~80 ms of driver-side planning and scheduling PER JOB with
+    * <15 ms of actual task work (StageStats, r19), and at 100 TB a
+    * single-partition read must not cost a cluster round — it is a
+    * replica-local read, the same authority [[maxWt]] already serves
+    * header stats from.
     *
-    * This goes through the EXACT same front door as a DataFrame
-    * read — inferSchema → CellTable.newScanBuilder (table-prop
-    * defaults, dropped columns, renames) → pushed `pk IN` pruning
-    * (Summary range + bloom + sparse index) → the reconcile merge
-    * readers — only executed on the driver thread instead of through
-    * the scheduler. Rows come back EXTERNAL-typed via the same
-    * Catalyst converter collect() uses, so call sites compare values
-    * exactly as before.
+    * This goes through the EXACT same front door as a DataFrame read
+    * with the same `options` — inferSchema → CellTable.newScanBuilder
+    * (table-prop defaults, dropped columns, renames; `reconcile` is
+    * forced on, and `strictCql`, `allowFiltering`, `reverse`,
+    * `counter`, `valueType`, `withTtl`, `perPartitionLimit` and
+    * `queryTime` act as they do there) → `filters` pushed into the
+    * builder exactly as Spark pushes them (pk point/IN pruning, typed
+    * point probes, clustering slices, the strictCql guard) → the
+    * reconcile merge readers — only executed on the driver thread
+    * instead of through the scheduler, row-at-a-time. Any key layout:
+    * filters name columns as the served schema does (declared names,
+    * renames applied).
     *
-    * DEFAULT key layout only (pk bigint, ck int): the typed readers
-    * have named key parts and keep the DataFrame path.
+    * Pushed filters may legally be inexact (pruning is file- and
+    * range-granular), so every `EqualTo` and `In` is re-applied here
+    * on the external rows; other filter kinds only narrow the read
+    * and stay the caller's residual. Rows come back EXTERNAL-typed
+    * via the same Catalyst converter collect() uses, with the schema
+    * the read served.
     */
-  def localReconciledRows(dir: String, pks: Option[Set[Long]],
-      queryTime: Long = Long.MaxValue)
-      : Seq[org.apache.spark.sql.Row] = {
-    val norm = CellPlanning.normalize(dir)
-    require(CellPlanning.keySpecOf(norm,
-        CellPlanning.listFiles(norm)).isDefault,
-      s"localReconciledRows serves default-keyed tables only; $dir " +
-        "is typed (use the DataFrame read)")
-    val omap = new java.util.HashMap[String, String]()
-    omap.put("path", norm)
-    omap.put("reconcile", "true")
-    omap.put("columnar", "false")
-    if (queryTime != Long.MaxValue)
-      omap.put("queryTime", queryTime.toString)
-    val cis = new CaseInsensitiveStringMap(omap)
-    val provider = new CellSource
-    val schema = provider.inferSchema(cis)
-    val sb = provider.getTable(schema, Array.empty, omap)
-      .asInstanceOf[SupportsRead].newScanBuilder(cis)
-    pks.foreach { s =>
-      sb.asInstanceOf[SupportsPushDownFilters].pushFilters(
-        Array(In("pk",
-          s.toSeq.sorted.map(v => Long.box(v): Any).toArray)))
-    }
-    val batch = sb.build().toBatch
-    val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToScalaConverter(schema)
-    val rf = batch.createReaderFactory()
-    val out = Vector.newBuilder[org.apache.spark.sql.Row]
-    batch.planInputPartitions().foreach { p =>
-      val r = rf.createReader(p)
-      try {
-        while (r.next())
-          out += conv(r.get().copy())
-            .asInstanceOf[org.apache.spark.sql.Row]
-      } finally r.close()
-    }
-    out.result()
-  }
-
-  /** [[localReconciledRows]] generalized to ANY key layout (r19):
-    * the typed LWT/collection point reads bind key parts by NAME, so
-    * the filter set is (name, external value) equalities — pushed
-    * into the scan builder exactly as the DataFrame filters were
-    * (typed point probes prune files/chunks) AND re-applied here on
-    * the external rows (pushed filters may legally be inexact;
-    * re-applying an equality is idempotent). Returns the schema the
-    * read served (declared names, renames applied) and the rows.
-    */
-  def localReconciledRowsWhere(dir: String, eq: Seq[(String, Any)],
-      queryTime: Long = Long.MaxValue)
+  def localReconciledRowsWhere(dir: String, filters: Seq[Filter],
+      options: Map[String, String] = Map.empty)
       : (StructType, Seq[org.apache.spark.sql.Row]) = {
     val norm = CellPlanning.normalize(dir)
     val omap = new java.util.HashMap[String, String]()
+    options.foreach { case (k, v) => omap.put(k, v) }
     omap.put("path", norm)
     omap.put("reconcile", "true")
     omap.put("columnar", "false")
-    if (queryTime != Long.MaxValue)
-      omap.put("queryTime", queryTime.toString)
     val cis = new CaseInsensitiveStringMap(omap)
     val provider = new CellSource
     val schema = provider.inferSchema(cis)
     val sb = provider.getTable(schema, Array.empty, omap)
       .asInstanceOf[SupportsRead].newScanBuilder(cis)
-    if (eq.nonEmpty)
-      sb.asInstanceOf[SupportsPushDownFilters].pushFilters(
-        eq.map { case (n, v) => EqualTo(n, v): Filter }.toArray)
+    if (filters.nonEmpty)
+      sb.asInstanceOf[SupportsPushDownFilters].pushFilters(filters.toArray)
     val batch = sb.build().toBatch
     val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
       .createToScalaConverter(schema)
-    val idx = eq.map { case (n, v) =>
+    def idx(n: String): Int = {
       val i = schema.fields.indexWhere(_.name.equalsIgnoreCase(n))
       require(i >= 0, s"no column $n in ${schema.fieldNames.mkString(",")}")
-      (i, v)
+      i
     }
     def same(a: Any, b: Any): Boolean = (a, b) match {
       case (x: Array[Byte], y: Array[Byte]) =>
@@ -885,6 +843,10 @@ object CellSource {
       case (x: java.math.BigDecimal, y: java.math.BigDecimal) =>
         x.compareTo(y) == 0
       case _ => a == b
+    }
+    val exact: Seq[(Int, Seq[Any])] = filters.collect {
+      case EqualTo(n, v) => (idx(n), Seq(v))
+      case In(n, vs) => (idx(n), vs.toSeq)
     }
     val rf = batch.createReaderFactory()
     val out = Vector.newBuilder[org.apache.spark.sql.Row]
@@ -894,7 +856,8 @@ object CellSource {
         while (r.next()) {
           val row = conv(r.get().copy())
             .asInstanceOf[org.apache.spark.sql.Row]
-          if (idx.forall { case (i, v) => same(row.get(i), v) })
+          if (exact.forall { case (i, vs) =>
+              vs.exists(same(row.get(i), _)) })
             out += row
         }
       } finally r.close()

@@ -6,6 +6,7 @@ import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.sources.EqualTo
 
 /** Coordinator-side write protocols beyond the plain flush: CQL
   * lightweight transactions (C55) and logged batches (C56).
@@ -189,13 +190,13 @@ object CellTransactions {
     withBallot(d, lockTimeoutMs, nowMs) {
       // r19: the CAS round's current-state read runs DRIVER-LOCAL
       // through the same reconcile front door
-      // (CellSource.localReconciledRows — identical planning, merge
-      // and external value types as the DataFrame read it replaces):
-      // an LWT's point read is a replica-local read, not a cluster
-      // job, and at sf0.1 the scheduled job was ~80 ms of pure
-      // driver latency per statement.
-      val row = CellSource
-        .localReconciledRows(norm, Some(Set(pk)), queryTimeMs)
+      // (CellSource.localReconciledRowsWhere — identical planning,
+      // merge and external value types as the DataFrame read it
+      // replaces): an LWT's point read is a replica-local read, not a
+      // cluster job, and at sf0.1 the scheduled job was ~80 ms of
+      // pure driver latency per statement.
+      val row = CellSource.localReconciledRowsWhere(norm,
+          Seq(EqualTo("pk", pk)), queryTimeOption(queryTimeMs))._2
         .filter(_.getInt(1) == ck)
       // `cur` is the condition column's winner; for a row-presence
       // condition it is None/Some(0) purely as an existence flag and
@@ -254,8 +255,9 @@ object CellTransactions {
       // same reconcile front door (pushed key-part equalities, same
       // merge readers, collect()-identical external values) — see
       // casApply.
-      val (schema, row) = CellSource.localReconciledRowsWhere(
-        norm, keyVals, queryTimeMs)
+      val (schema, row) = CellSource.localReconciledRowsWhere(norm,
+        keyVals.map { case (n, v) => EqualTo(n, v) },
+        queryTimeOption(queryTimeMs))
       val colIdx = schema.fieldIndex("col")
       val valIdx = schema.fieldIndex("value")
       val cur: Option[Any] = condCol match {
@@ -338,8 +340,8 @@ object CellTransactions {
       // r19: driver-local partition read — same reconcile front door
       // as the DataFrame read it replaces, zero Spark jobs (see
       // casApply).
-      val part = CellSource
-        .localReconciledRows(norm, Some(Set(pk)), queryTimeMs)
+      val part = CellSource.localReconciledRowsWhere(norm,
+        Seq(EqualTo("pk", pk)), queryTimeOption(queryTimeMs))._2
       val byCell: Map[(Int, String), Any] = part.iterator
         .map(r => (r.getInt(1), r.getString(2)) -> r.get(3)).toMap
       val liveCks: Set[Int] = part.iterator.map(_.getInt(1)).toSet
@@ -445,8 +447,9 @@ object CellTransactions {
       // r19: ONE driver-local partition read serves every condition
       // (it used to be one Spark job per condition) — same reconcile
       // front door, pushed pk-part equalities, external values.
-      val (schema, part) = CellSource.localReconciledRowsWhere(
-        norm, pkVals, queryTimeMs)
+      val (schema, part) = CellSource.localReconciledRowsWhere(norm,
+        pkVals.map { case (n, v) => EqualTo(n, v) },
+        queryTimeOption(queryTimeMs))
       val colIdx = schema.fieldIndex("col")
       val valIdx = schema.fieldIndex("value")
       val ckIdx = spec.ckParts.map(p =>
@@ -488,6 +491,13 @@ object CellTransactions {
     */
   final class ContentionException(msg: String)
     extends RuntimeException(msg)
+
+  /** The read option pinning a CAS round's `queryTime` (TTL expiry
+    * reference); `Long.MaxValue` is the reader's own "none" sentinel.
+    */
+  private def queryTimeOption(queryTimeMs: Long): Map[String, String] =
+    if (queryTimeMs == Long.MaxValue) Map.empty
+    else Map("queryTime" -> queryTimeMs.toString)
 
   private def withBallot[A](dir: Path, timeoutMs: Long, nowMs: Long)
       (body: => A): A = {

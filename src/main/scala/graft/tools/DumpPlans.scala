@@ -8,9 +8,10 @@ import graft.Registry
   * into PLANS.md — the written evidence that each flagship plan is the
   * one designed for (pushdown reaching the scan, dims broadcast,
   * partial aggregation, TakeOrderedAndProject, the custom TopKPerKey
-  * phases). Regenerate after plan-affecting changes:
+  * phases). Regenerate after plan-affecting changes, from the
+  * checkout whose PLANS.md it rewrites (or name the output file):
   *
-  *   tools/run.sh graft.tools.DumpPlans /root/testdata/sf0.01
+  *   tools/run.sh graft.tools.DumpPlans <sfDir> [<PLANS.md path>]
   */
 object DumpPlans {
   private val headline = Seq(
@@ -122,7 +123,9 @@ object DumpPlans {
         org.apache.spark.sql.execution.FormattedMode)
       sb.append(s"\n## $name\n\n```\n$formatted```\n")
     }
-    val out = Paths.get("/root/repo/PLANS.md")
+    val out =
+      if (args.length > 1) Paths.get(args(1))
+      else Paths.get(sys.props("user.dir"), "PLANS.md")
     val prior = if (Files.exists(out))
       new String(Files.readAllBytes(out), "UTF-8") else ""
     val kept = prior.indexOf(KeepMarker) match {
@@ -130,7 +133,7 @@ object DumpPlans {
       case i => prior.substring(i)
     }
     Files.write(out, (sb.toString + kept).getBytes("UTF-8"))
-    println(s"[plans] wrote /root/repo/PLANS.md (${headline.size} queries)")
+    println(s"[plans] wrote $out (${headline.size} queries)")
     spark.stop()
   }
 }

@@ -3616,6 +3616,90 @@ class CqlSpec extends GraftSpec {
       Map((1, "qty") -> 101L, (2, "qty") -> 102L, (3, "qty") -> 103L))
   }
 
+  test("single-partition SELECTs read driver-local: zero Spark jobs " +
+      "on both key layouts, the reconcile scan's rows") {
+    val root = Files.createTempDirectory("cql-zjob").toString
+    spark.conf.set("spark.sql.catalog.zjcat", "graft.sources.CellCatalog")
+    spark.conf.set("spark.sql.catalog.zjcat.root", root)
+    try {
+      def cq(stmt: String) = Cql.catalogExecute(spark, stmt, "zjcat")
+      def plan(df: org.apache.spark.sql.DataFrame) =
+        df.queryExecution.executedPlan.toString
+      cq("CREATE KEYSPACE ks")
+      Seq(("d", "pk", "bigint", 5L: Any, "5", "6"),
+          ("u", "user", "text", "u-5": Any, "'u-5'", "'u-6'")).foreach {
+        case (t, kc, kt, kv, k, other) =>
+          val tn = s"ks.$t"
+          cq(s"CREATE TABLE $tn ($kc $kt, ck int, col text, " +
+            s"value bigint, wt bigint, PRIMARY KEY (($kc), ck))")
+          // one flush file per statement: an overwrite, a row DELETE,
+          // a TTL'd cell, a later update, another partition
+          Seq(s"INSERT INTO $tn ($kc, ck, qty) VALUES ($k, 1, 1)",
+            s"INSERT INTO $tn ($kc, ck, qty) VALUES ($k, 1, 2)",
+            s"INSERT INTO $tn ($kc, ck, qty) VALUES ($k, 2, 3)",
+            s"DELETE FROM $tn WHERE $kc = $k AND ck = 2",
+            s"INSERT INTO $tn ($kc, ck, price) VALUES ($k, 3, 4) " +
+              "USING TTL 1",
+            s"UPDATE $tn SET price = 6 WHERE $kc = $k AND ck = 1",
+            s"INSERT INTO $tn ($kc, ck, qty) VALUES ($other, 1, 9)")
+            .foreach(cq)
+          val dir = s"$root/ks/$t"
+          assert(new java.io.File(dir).listFiles()
+            .count(_.getName.endsWith(".cells")) >= 7, t)
+          def reference(ck: Option[Int]) = {
+            val r = spark.read.format("graft.sources.CellSource")
+              .option("reconcile", "true").load(dir)
+              .filter(col(kc) === lit(kv))
+            ck.fold(r)(c => r.filter(col("ck") === c))
+              .select("ck", "col", "value").collect()
+              .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
+          }
+          var part: org.apache.spark.sql.DataFrame = null
+          var partRows = Set.empty[(Int, String, Long)]
+          val partJobs = countJobs {
+            part = cq(s"SELECT ck, col, value FROM $tn WHERE $kc = $k")
+            partRows = part.collect()
+              .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
+          }
+          assert(partJobs === 0, s"$t partition SELECT")
+          assert(partRows === reference(None), t)
+          assert(partRows ===
+            Set((1, "qty", 2L), (1, "price", 6L), (3, "price", 4L)), t)
+          assert(!plan(part).contains("CellReconcileScan"), plan(part))
+          var rowRows = Set.empty[(Int, String, Long)]
+          val rowJobs = countJobs {
+            rowRows = cq(s"SELECT ck, col, value FROM $tn " +
+                s"WHERE $kc = $k AND ck = 1").collect()
+              .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
+          }
+          assert(rowJobs === 0, s"$t row SELECT")
+          assert(rowRows === reference(Some(1)), t)
+          // the withTtl option reaches the local read
+          var ttl = Seq.empty[Any]
+          val ttlJobs = countJobs {
+            ttl = cq(s"SELECT TTL(price) AS t FROM $tn " +
+              s"WHERE $kc = $k AND ck = 3").collect().map(_.get(0)).toSeq
+          }
+          assert(ttlJobs === 0, s"$t TTL SELECT")
+          assert(ttl === Seq(1L), t)
+          // forms needing an operator above the scan, or not binding
+          // the partition, keep the cell scan
+          val ordered = cq(s"SELECT ck, col, value FROM $tn " +
+            s"WHERE $kc = $k ORDER BY ck")
+          assert(plan(ordered).contains("CellReconcileScan"), t)
+          assert(ordered.collect().map(_.getInt(0)).toSeq === Seq(1, 1, 3))
+          val filtered = cq(s"SELECT ck, col FROM $tn WHERE value = 9 " +
+            "ALLOW FILTERING")
+          assert(plan(filtered).contains("CellReconcileScan"), t)
+          assert(filtered.collect().map(r => (r.getInt(0), r.getString(1)))
+            .toSeq === Seq((1, "qty")), t)
+      }
+    } finally {
+      spark.conf.unset("spark.sql.catalog.zjcat")
+      spark.conf.unset("spark.sql.catalog.zjcat.root")
+    }
+  }
+
   test("script allocator: later statements shadow earlier ones") {
     val d = freshTable()
     Cql.executeScript(spark,
