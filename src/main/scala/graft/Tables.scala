@@ -14,6 +14,15 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** A scratch-output directory: the system property `knob` when set,
+    * else `target/<name>` under the working directory (`user.dir`),
+    * so a copy of the repository never writes into another checkout.
+    */
+  def scratchDir(knob: String, name: String): String =
+    sys.props.getOrElse(knob,
+      java.nio.file.Paths.get(sys.props("user.dir"), "target", name)
+        .toString)
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 

@@ -670,20 +670,21 @@ object Cql {
         // declared types re-route each field through the SAME
         // literal grammar INSERT VALUES uses (C63b, r15)
         mappedValueType(dir) match {
-          case Some((ct, vt)) => appendAnyCells(spark, dir, vt,
+          case Some((ct, vt)) => appendCells(dir, vt,
             jsonAnyCells(json, wt, mappedLiteral(ct)), ttlOpt)
           case None if isStringValued(dir) =>
-            appendStringCells(spark, dir, jsonStringCells(json, wt),
-              ttlOpt)
+            appendCells(dir, org.apache.spark.sql.types.StringType,
+              jsonStringCells(json, wt), ttlOpt)
           case None => otherScalarType(dir) match {
-            case Some(vt) => appendAnyCells(spark, dir, vt,
+            case Some(vt) => appendCells(dir, vt,
               jsonAnyCells(json, wt, scalarLiteral(vt)), ttlOpt)
             case None =>
-              appendCells(spark, dir, jsonCells(json, wt), ttlOpt)
+              appendCells(dir, org.apache.spark.sql.types.LongType,
+                jsonCells(json, wt), ttlOpt)
           }
         }
       }
-      else typedWrite(spark, dir, spec,
+      else appendRows(dir, spec,
         jsonCellsTyped(spec, json, wt), ttlOpt)
       if (usingTs != null) forgetWt(dir)
       spark.emptyDataFrame
@@ -773,14 +774,14 @@ object Cql {
         case Some(layout) if spec.isDefault =>
           // frozen<udt> value (C59b): packed blobs; unfrozen (C59d):
           // field cells + unset-field tombstones (whole overwrite)
-          appendBinaryCells(spark, dir,
+          appendCells(dir, org.apache.spark.sql.types.BinaryType,
             if (udtUnfrozenOf(dir))
               insertUnfrozenUdtCells(cols, vals, wt, layout,
                 storageField(dir))
             else insertUdtCells(cols, vals, wt, layout), ttlOpt)
         case Some(layout) => // typed layout: frozen blobs (C59c) or
           // unfrozen per-field cells + unset-field markers (C59e)
-          typedWrite(spark, dir, spec,
+          appendRows(dir, spec,
             if (udtUnfrozenOf(dir))
               insertUnfrozenUdtTypedRows(spec, cols, vals, wt, layout,
                 storageField(dir))
@@ -791,23 +792,23 @@ object Cql {
           // text but must validate uuid literals, not accept any
           // string the text grammar would
           mappedValueType(dir) match {
-            case Some((ct, vt)) => appendAnyCells(spark, dir, vt,
+            case Some((ct, vt)) => appendCells(dir, vt,
               insertScalarCells(fcallLiteral(ct, wt), cols, vals, wt,
                 graft.sources.CellSource.staticCols(dir)),
               ttlOpt)
             case None if isStringValued(dir) =>
-              appendStringCells(spark, dir, insertStringCells(cols,
-                vals, wt, graft.sources.CellSource.staticCols(dir)),
-                ttlOpt)
+              appendCells(dir, org.apache.spark.sql.types.StringType,
+                insertStringCells(cols, vals, wt,
+                  graft.sources.CellSource.staticCols(dir)), ttlOpt)
             case None if isBlobValued(dir) =>
-              appendBinaryCells(spark, dir,
+              appendCells(dir, org.apache.spark.sql.types.BinaryType,
                 insertBlobCells(cols, vals, wt), ttlOpt)
             case None => otherScalarType(dir) match {
-              case Some(vt) => appendAnyCells(spark, dir, vt,
+              case Some(vt) => appendCells(dir, vt,
                 insertScalarCells(fcallScalar(vt, wt), cols, vals, wt,
                   graft.sources.CellSource.staticCols(dir)),
                 ttlOpt)
-              case None => appendCells(spark, dir,
+              case None => appendCells(dir, org.apache.spark.sql.types.LongType,
                 insertCells(cols, vals, wt,
                   graft.sources.CellSource.staticCols(dir)), ttlOpt)
             }
@@ -816,7 +817,7 @@ object Cql {
           // typed vector tables (C70d): the bracket literal parses
           // through the declared grammar and writes binary cells
           mappedValueType(dir) match {
-            case Some((ct, vt)) => typedWrite(spark, dir, spec,
+            case Some((ct, vt)) => appendRows(dir, spec,
               insertTypedRows(spec, cols, vals, wt,
                 fcallLiteral(ct, wt)), ttlOpt, vt)
             case None =>
@@ -838,21 +839,22 @@ object Cql {
         // refused (Cassandra's rule).
         if (rawTtl.isDefined) fail("counters cannot have TTL")
         if (spec.isDefault)
-          appendCells(spark, dir, counterUpdateCells(sets, where, wt))
-        else typedWrite(spark, dir, spec,
+          appendCells(dir, org.apache.spark.sql.types.LongType,
+            counterUpdateCells(sets, where, wt))
+        else appendRows(dir, spec,
           counterUpdateTypedRows(spec, sets, where, wt), ttl = None)
       } else if (udtLayoutOf(dir).isDefined) {
         // frozen<udt> SET items are whole-value literals — routed
         // BEFORE the collection sniff ({...} would read as a map);
         // unfrozen (C59d) additionally patches single fields
         if (spec.isDefault)
-          appendBinaryCells(spark, dir,
+          appendCells(dir, org.apache.spark.sql.types.BinaryType,
             if (udtUnfrozenOf(dir))
               unfrozenUdtUpdateCells(sets, where, wt,
                 udtLayoutOf(dir).get, storageField(dir))
             else udtUpdateCells(sets, where, wt, udtLayoutOf(dir).get),
             ttlOpt)
-        else typedWrite(spark, dir, spec,
+        else appendRows(dir, spec,
           if (udtUnfrozenOf(dir))
             unfrozenUdtUpdateTypedRows(spec, sets, where, wt,
               udtLayoutOf(dir).get, storageField(dir))
@@ -869,7 +871,7 @@ object Cql {
             // collection syntax never routes there.
             if (hasCollectionSyntax(sets) && !ct.startsWith("vector<"))
               collectionUpdate(spark, dir, sets, where, wt, ttlOpt)
-            else appendAnyCells(spark, dir, vt,
+            else appendCells(dir, vt,
               updateScalarCells(fcallLiteral(ct, wt), sets, where, wt,
                 graft.sources.CellSource.staticCols(dir)),
               ttlOpt)
@@ -878,18 +880,18 @@ object Cql {
             // the default, TEXT on a text-valued table (C65o, r14)
             collectionUpdate(spark, dir, sets, where, wt, ttlOpt)
           case None if isStringValued(dir) =>
-            appendStringCells(spark, dir, updateStringCells(sets,
-              where, wt, graft.sources.CellSource.staticCols(dir)),
-              ttlOpt)
+            appendCells(dir, org.apache.spark.sql.types.StringType,
+              updateStringCells(sets, where, wt,
+                graft.sources.CellSource.staticCols(dir)), ttlOpt)
           case None if isBlobValued(dir) =>
-            appendBinaryCells(spark, dir,
+            appendCells(dir, org.apache.spark.sql.types.BinaryType,
               updateBlobCells(sets, where, wt), ttlOpt)
           case None => otherScalarType(dir) match {
-            case Some(vt) => appendAnyCells(spark, dir, vt,
+            case Some(vt) => appendCells(dir, vt,
               updateScalarCells(fcallScalar(vt, wt), sets, where, wt,
                 graft.sources.CellSource.staticCols(dir)),
               ttlOpt)
-            case None => appendCells(spark, dir,
+            case None => appendCells(dir, org.apache.spark.sql.types.LongType,
               updateCells(sets, where, wt,
                 graft.sources.CellSource.staticCols(dir)), ttlOpt)
           }
@@ -897,7 +899,7 @@ object Cql {
       } else mappedValueType(dir) match {
         // typed vector tables (C70d) route BEFORE the collection
         // sniff — the bracket form IS the vector literal
-        case Some((ct, vt)) => typedWrite(spark, dir, spec,
+        case Some((ct, vt)) => appendRows(dir, spec,
           updateTypedRows(spec, sets, where, wt, fcallLiteral(ct, wt)),
           ttlOpt, vt)
         case None if hasCollectionSyntax(sets) =>
@@ -954,7 +956,7 @@ object Cql {
                 (pk, ck, c, Array.empty[Byte], w)
             }
         }
-        appendBinaryCells(spark, dir, markers)
+        appendCells(dir, org.apache.spark.sql.types.BinaryType, markers)
       }
       else if (udtLayoutOf(dir).isDefined) {
         // typed udt tombstones: frozen tables reuse the plain typed
@@ -980,7 +982,7 @@ object Cql {
               .map(r =>
                 r.updated(r.length - 2, Array.empty[Byte]: Any))
         }
-        typedWrite(spark, dir, spec, rows, ttl = None,
+        appendRows(dir, spec, rows, ttl = None,
           org.apache.spark.sql.types.BinaryType)
       }
       else if (spec.isDefault) {
@@ -1057,46 +1059,14 @@ object Cql {
                 deleteMarkers(Option(colOpt), where, dts, statics)
             }
         }
-        mappedValueType(dir) match {
-          case Some((_, vt)) =>
-            // mapped-type tombstones (C65r): the storage layout's
-            // neutral in the value slot, same as the C65q scalars
-            appendAnyCells(spark, dir, vt, markers.map {
-              case (pk, ck, c, _, w) =>
-                (pk, ck, c, scalarNeutral(vt), w) })
-          case None if isStringValued(dir) =>
-            // text-valued tombstones carry the EMPTY STRING in the
-            // value slot (the marker col name is the whole message)
-            // — the string twin of the binary tables' empty blob
-            appendStringCells(spark, dir, markers.map {
-              case (pk, ck, c, _, w) => (pk, ck, c, "", w) })
-          case None if isBlobValued(dir) =>
-            // blob tombstones: the binary tables' empty-blob marker
-            appendBinaryCells(spark, dir, markers.map {
-              case (pk, ck, c, _, w) =>
-                (pk, ck, c, Array.empty[Byte], w) })
-          case None => otherScalarType(dir) match {
-            case Some(vt) =>
-              appendAnyCells(spark, dir, vt, markers.map {
-                case (pk, ck, c, _, w) =>
-                  (pk, ck, c, scalarNeutral(vt), w) })
-            case None => appendCells(spark, dir, markers)
-          }
-        }
+        // tombstones carry the table's value type; the marker's value
+        // slot is inert and takes its neutral (empty string on text
+        // storage, empty blob on blob tables, the mapped types'
+        // storage zero) — the marker col name is the whole message
+        appendCells(dir, graft.sources.CellSource.valueTypeOf(dir),
+          markers)
       }
-      else mappedValueType(dir) match {
-        // typed vector tombstones (C70d): the marker's value slot
-        // carries the binary layout's empty blob
-        case Some((_, vt))
-            if vt == org.apache.spark.sql.types.BinaryType =>
-          typedWrite(spark, dir, spec,
-            deleteTypedRows(spec, Option(colOpt), where, dts)
-              .map(r => r.updated(r.length - 2,
-                Array.empty[Byte]: Any)),
-            ttl = None, vt)
-        case _ =>
-          deleteTyped(spark, dir, spec, Option(colOpt), where, dts)
-      }
+      else deleteTyped(dir, spec, Option(colOpt), where, dts)
       if (usingTs != null) forgetWt(dir)
       spark.emptyDataFrame
     case _ => fail(s"unsupported CQL statement: $cql")
@@ -2077,15 +2047,12 @@ object Cql {
     }
     if (conditional)
       return conditionalBatch(spark, stmts.toSeq, resolve, batchTs)
-    // per-statement parse, by the TARGET table's key layout: a Left
-    // holds default (pk, ck, col, value, wt) cells, a Right typed
-    // rows (keyVals ++ (col, value, wt)) with the table's spec —
+    // per-statement parse into rows in the TARGET table's key layout
+    // (keyVals ++ (col, value, wt); `pk, ck` on the default layout) —
     // tables of either layout mix freely in one batch. Each row
     // carries its statement's optional USING TTL (relative, wt-units)
     // — resolved to an ABSOLUTE expiry once the batch wt is known.
-    type Parsed = (String, Either[
-      Seq[((Long, Int, String, Long, Long), Option[Long])],
-      (graft.sources.KeySpec, Seq[(Seq[Any], Option[Long])])])
+    type Parsed = (String, Seq[(Seq[Any], Option[Long])])
     def spec(dir: String) = graft.sources.CellSource.keySpec(dir)
     // C11i — one append-position map per table, shared across the
     // batch's collection statements: two appends to the same
@@ -2137,12 +2104,12 @@ object Cql {
           val ts = stmtTs(ts0)
           val ttl = effectiveTtl(dir, rawTtl)
           val sp = spec(dir)
-          if (sp.isDefault)
-            (dir, Left(insertCells(cols, vals, ts.getOrElse(AssignLater),
-              graft.sources.CellSource.staticCols(dir)).map((_, ttl))))
-          else
-            (dir, Right((sp, insertTypedRows(sp, cols, vals,
-              ts.getOrElse(AssignLater)).map((_, ttl)))))
+          val rows =
+            if (sp.isDefault)
+              insertCells(cols, vals, ts.getOrElse(AssignLater),
+                graft.sources.CellSource.staticCols(dir)).map(cellRow)
+            else insertTypedRows(sp, cols, vals, ts.getOrElse(AssignLater))
+          (dir, rows.map((_, ttl)))
         case UpdateRe(table, usingClause, sets, where) =>
           val dir = resolve(table)
           refuseUdt(dir, "LOGGED BATCH")
@@ -2176,12 +2143,9 @@ object Cql {
                   scala.collection.mutable.Map.empty))
               // tombstone markers never carry the statement TTL — an
               // expiring tombstone would resurrect removed elements
-              (dir, Left(
-                cc.map { case (pk, ck, c, v, w) =>
-                  ((pk, ck, c, v.asInstanceOf[Long], w), ttl) } ++
-                tt.map { case (pk, ck, c, v, w) =>
-                  ((pk, ck, c, v.asInstanceOf[Long], w),
-                    None: Option[Long]) }))
+              (dir,
+                cc.map(c => (cellRow(c), ttl)) ++
+                tt.map(c => (cellRow(c), None: Option[Long])))
             } else {
               // TYPED layouts (r18): the typed staging core journals
               // typed rows + tombstone rows under the same contract
@@ -2189,19 +2153,18 @@ object Cql {
                 sp0, sets, where, ts.getOrElse(AssignLater),
                 batchNextCkTyped.getOrElseUpdate(dir,
                   scala.collection.mutable.Map.empty))
-              (dir, Right((sp0,
-                rr.map((_, ttl)) ++
-                tt.map((_, None: Option[Long])))))
+              (dir, rr.map((_, ttl)) ++ tt.map((_, None: Option[Long])))
             }
           } else {
             refuseBatchValueType(dir)
             val sp = spec(dir)
-            if (sp.isDefault)
-              (dir, Left(updateCells(sets, where,
-                ts.getOrElse(AssignLater), graft.sources.CellSource.staticCols(dir)).map((_, ttl))))
-            else
-              (dir, Right((sp, updateTypedRows(sp, sets, where,
-                ts.getOrElse(AssignLater)).map((_, ttl)))))
+            val rows =
+              if (sp.isDefault)
+                updateCells(sets, where, ts.getOrElse(AssignLater),
+                  graft.sources.CellSource.staticCols(dir)).map(cellRow)
+              else updateTypedRows(sp, sets, where,
+                ts.getOrElse(AssignLater))
+            (dir, rows.map((_, ttl)))
           }
         case DeleteRe(colOpt, table, usingTs, where) =>
           val dir = resolve(table)
@@ -2210,12 +2173,12 @@ object Cql {
           val dts = stmtTs(Option(usingTs).map(_.toLong))
             .getOrElse(AssignLater)
           val sp = spec(dir)
-          if (sp.isDefault)
-            (dir, Left(deleteMarkers(Option(colOpt), where, dts,
-              graft.sources.CellSource.staticCols(dir)).map((_, None: Option[Long]))))
-          else
-            (dir, Right((sp, deleteTypedRows(sp, Option(colOpt),
-              where, dts).map((_, None: Option[Long])))))
+          val rows =
+            if (sp.isDefault)
+              deleteMarkers(Option(colOpt), where, dts,
+                graft.sources.CellSource.staticCols(dir)).map(cellRow)
+            else deleteTypedRows(sp, Option(colOpt), where, dts)
+          (dir, rows.map((_, None: Option[Long])))
         case s => fail(s"BATCH accepts INSERT/UPDATE/DELETE, got: $s")
       }
     // the batch journal + shared-wt protocol writes directly; the
@@ -2228,40 +2191,22 @@ object Cql {
     val batchWt = parsed.map(_._1).distinct
       .map(nextWt(spark, _)).max
     def wtOf(wt: Long): Long = if (wt == AssignLater) batchWt else wt
-    // any USING TTL in the batch switches the WHOLE journal to the
-    // expiry-carrying shape (the maintenance paths' withExpiry form);
-    // rows without a TTL carry Long.MaxValue = never
-    val hasTtl = parsed.exists(_._2 match {
-      case Left(cells) => cells.exists(_._2.isDefined)
-      case Right((_, rows)) => rows.exists(_._2.isDefined)
-    })
+    // any USING TTL in the batch marks the journal entry as
+    // expiry-carrying; rows without a TTL carry Long.MaxValue = never
+    val hasTtl = parsed.exists(_._2.exists(_._2.isDefined))
+    // one journal slice per table, staged driver-local as rows in the
+    // table's key layout (loggedBatchSlices → CellSource.localAppend)
     val writes = parsed
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (dir, group) =>
-        group.head._2 match {
-          case Left(_) =>
-            // r19: default-layout slices journal as ROWS — the
-            // staging write runs driver-local (loggedBatchSlices /
-            // localAppendCells), no one-task Spark job per table.
-            val cells = group.flatMap(_._2.left.getOrElse(Seq.empty))
-            val rows = cells.map { case ((pk, ck, c, v, wt), t) =>
-              val w = wtOf(wt)
-              // Long.MaxValue = never (the storage convention)
-              (pk, ck, c, v, w, t.map(w + _).getOrElse(Long.MaxValue))
-            }
-            (dir, Left(rows))
-          case Right((sp, _)) =>
-            val rows = group.flatMap(_._2.toOption.map(_._2)
-                .getOrElse(Seq.empty))
-              .map { case (r, t) =>
-                val w = wtOf(r.last.asInstanceOf[Long])
-                (r.init :+ w, t.map(w + _))
-              }
-            val df =
-              if (hasTtl) typedDfExpiry(spark, sp, rows)
-              else typedDf(spark, sp, rows.map(_._1))
-            (dir, Right(df))
+        val sp = spec(dir)
+        val nKey = sp.pkParts.length + sp.ckParts.length
+        val rows = group.flatMap(_._2).map { case (r, t) =>
+          val w = wtOf(r.last.asInstanceOf[Long])
+          (r.take(nKey), r(nKey).asInstanceOf[String], r(nKey + 1), w,
+            t.map(w + _).getOrElse(Long.MaxValue))
         }
+        (dir, Left((sp, org.apache.spark.sql.types.LongType, rows)))
       }
     val logDir = writes.head._1 + ".batchlog"
     graft.sources.CellTransactions.loggedBatchSlices(spark, writes,
@@ -2699,28 +2644,6 @@ object Cql {
       parsed.flatMap(_._2), parsed.flatMap(_._3))
     forgetWt(dir)
     lwtResult(spark, r)
-  }
-
-  /** Typed rows with a per-row ABSOLUTE expiry (Long.MaxValue =
-    * never) — the BATCH journal's withExpiry shape.
-    */
-  private def typedDfExpiry(spark: SparkSession,
-      spec: graft.sources.KeySpec,
-      rows: Seq[(Seq[Any], Option[Long])]): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(
-      spec.keyFields ++ Seq(
-        StructField("col", StringType, nullable = false),
-        StructField("value", LongType, nullable = false),
-        StructField("wt", LongType, nullable = false),
-        StructField("_expiry", LongType, nullable = false)))
-    val sparkRows = rows.map { case (r, e) =>
-      // Long.MaxValue = never (the storage convention)
-      org.apache.spark.sql.Row.fromSeq(r :+ e.getOrElse(Long.MaxValue))
-    }
-    spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(sparkRows).asJava,
-      schema)
   }
 
   private def fail(msg: String): Nothing =
@@ -4306,47 +4229,6 @@ object Cql {
           graft.sources.CellIndex.drop(idxDir)
         }
         spark.emptyDataFrame
-      case DeleteRe(colOpt, table, usingTs, where)
-          if colOpt == null && usingTs == null &&
-            // a conditional DELETE must reach the LWT arm below —
-            // DeleteRe's lazy WHERE group would absorb the trailing
-            // IF clause and run the CAS as a plain SQL DELETE
-            (cql match {
-              case DeleteIfRe(_, _, _, _, _, _, _) => false
-              case _ => true
-            }) &&
-            table.matches("\\w+\\.\\w+") && {
-              val Array(ks, t) = table.split("\\.")
-              // frozen<udt> typed tables keep the CQL typed-delete
-              // path: its markers carry the table's BINARY value type
-              // (the C38 writer would stamp long-valued files)
-              !graft.sources.CellSource.keySpec(s"$root/$ks/$t").isDefault &&
-                udtLayoutOf(s"$root/$ks/$t").isEmpty
-            } =>
-        // TYPED-table DELETE: the default-layout marker writer can't
-        // encode typed keys, but Spark SQL DELETE against the catalog
-        // lands on SupportsDelete's typed tombstone path (C38) — same
-        // marker protocol, typed-key aware. (USING TIMESTAMP and
-        // single-cell DELETE keep the default-layout-only grammar.)
-        val Array(ks, t) = table.split("\\.")
-        flushBuffered(spark, s"$root/$ks/$t")
-        // the C38 path resolves its own deletion timestamp (table
-        // max + 1) OUTSIDE the script allocator — invalidate the
-        // script counter or the next statement would re-issue the
-        // tombstone's writetime and tie instead of shadowing
-        forgetWt(s"$root/$ks/$t")
-        try spark.sql(s"DELETE FROM $catalog.$ks.$t WHERE " +
-          quoteUuidLiterals(where))
-        catch {
-          case e: org.apache.spark.sql.AnalysisException =>
-            // canDeleteWhere refused — re-parse the WHERE as CQL to
-            // name the actual shape violation (prefix gap, unbound pk
-            // part, …) instead of Spark's generic cannot-delete; if
-            // the CQL parse PASSES the mismatch is ours, rethrow
-            typedKeyPredicate(graft.sources.CellSource
-              .keySpec(s"$root/$ks/$t"), where, ckPrefix = true)
-            throw e
-        }
       // C67 — the driver/cqlsh metadata round: `system_schema`
       // virtual relations and DESCRIBE, served from catalog metadata
       // (bounded by table count; no Spark job, no data read)
@@ -4785,19 +4667,6 @@ object Cql {
   private val UuidShapeRe = java.util.regex.Pattern.compile(
     "[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-" +
       "[0-9a-fA-F]{4}-[0-9a-fA-F]{12}")
-
-  /** Unquoted uuid literals quoted (and lowercased) for splicing a
-    * CQL WHERE into a Spark SQL statement — Spark's parser reads the
-    * bare 8-4-4-4-12 form as a malformed exponent literal. Quoted
-    * segments pass through untouched.
-    */
-  private def quoteUuidLiterals(s: String): String =
-    s.split("'", -1).zipWithIndex.map { case (seg, i) =>
-      if (i % 2 == 0)
-        UuidShapeRe.matcher(seg).replaceAll(m =>
-          "'" + m.group().toLowerCase + "'")
-      else seg
-    }.mkString("'")
 
   private def literal(s: String): Any = {
     val t = s.trim
@@ -6955,9 +6824,9 @@ object Cql {
 
   // ---------------------------------------------------------------
   // Per-script write buffering (r12) — the memtable analog. Inside a
-  // script, default-layout cell appends accumulate per TABLE and
-  // flush as ONE file at script end, instead of one Spark write job
-  // (and one flush file) per statement — the shape a cqlsh ingest
+  // script, cell appends of either key layout accumulate per TABLE
+  // and flush as ONE file at script end, instead of one flush file
+  // per statement — the shape a cqlsh ingest
   // script pays for on a real cluster too, where the memtable absorbs
   // statements and the flush is the unit of I/O. Sequential-model
   // correctness is preserved by two rules: (a) every statement that
@@ -6968,13 +6837,17 @@ object Cql {
   // a buffered flush is semantically identical to N per-statement
   // flushes at the same writetimes.
 
-  private type BufRow = (Long, Int, String, Long, Long, Option[Long])
-  /** One table's buffered cells — default (pk, ck) rows or typed
-    * (CEL6/8) rows with the table's key spec; a table is ONE layout,
-    * so the kinds never mix within a key.
+  /** One table's buffered rows: the table's key spec and value type
+    * plus [[graft.sources.CellSource.LocalRow]]s (expiry already
+    * absolute). A table is ONE layout, so a key never mixes specs or
+    * value types.
     */
-  private sealed trait Buffered {
-    def maxWt: Long; def isEmpty: Boolean
+  private final class Buffered(val spec: graft.sources.KeySpec,
+      val valueType: org.apache.spark.sql.types.DataType) {
+    val rows = scala.collection.mutable
+      .ArrayBuffer.empty[graft.sources.CellSource.LocalRow]
+    def maxWt: Long = rows.iterator.map(_._4).max
+    def isEmpty: Boolean = rows.isEmpty
     /** Set once the buffer has been HANDED to a writer. A flush retry
       * after a commit-then-throw must not blindly re-write COUNTER
       * buffers: shard deltas SUM on read (C10), so a duplicate file
@@ -6982,58 +6855,6 @@ object Cql {
       * duplicate flush merges away. See [[flushAllBuffered]].
       */
     var writeAttempted: Boolean = false
-  }
-  private final class BufDefault(
-      val rows: scala.collection.mutable.ArrayBuffer[BufRow])
-      extends Buffered {
-    def maxWt: Long = rows.iterator.map(_._5).max
-    def isEmpty: Boolean = rows.isEmpty
-  }
-  private type BinRow = (Long, Int, String, Array[Byte], Long, Option[Long])
-  /** Binary-valued (frozen<udt>, C59b) twin of [[BufDefault]] — r13:
-    * UDT appends previously bypassed the buffer and paid one flush
-    * file per statement while every other layout paid one per script.
-    */
-  private final class BufBinary(
-      val rows: scala.collection.mutable.ArrayBuffer[BinRow])
-      extends Buffered {
-    def maxWt: Long = rows.iterator.map(_._5).max
-    def isEmpty: Boolean = rows.isEmpty
-  }
-  private type StrRow = (Long, Int, String, String, Long, Option[Long])
-  /** String-valued twin of [[BufDefault]] (C65o, r14): TEXT-valued
-    * default-layout tables write text cells through the same
-    * buffered commit path — the value slot is the string itself
-    * (byte-ordered LWW tie-break, UTF8Type's compare for the ASCII
-    * range), tombstones carry the empty string.
-    */
-  private final class BufString(
-      val rows: scala.collection.mutable.ArrayBuffer[StrRow])
-      extends Buffered {
-    def maxWt: Long = rows.iterator.map(_._5).max
-    def isEmpty: Boolean = rows.isEmpty
-  }
-  private type AnyRow = (Long, Int, String, Any, Long, Option[Long])
-  /** Generic scalar twin of [[BufDefault]] (C65q, r14): double/
-    * boolean/timestamp cells share ONE buffered path — the writer is
-    * value-tagged, only the literal grammar differs per type.
-    */
-  private final class BufAny(
-      val vt: org.apache.spark.sql.types.DataType,
-      val rows: scala.collection.mutable.ArrayBuffer[AnyRow])
-      extends Buffered {
-    def maxWt: Long = rows.iterator.map(_._5).max
-    def isEmpty: Boolean = rows.isEmpty
-  }
-  private final class BufTyped(val spec: graft.sources.KeySpec,
-      val valueType: org.apache.spark.sql.types.DataType,
-      val rows: scala.collection.mutable
-        .ArrayBuffer[(Seq[Any], Option[Long])])
-      extends Buffered {
-    // the wt slot is the row's last element (keyVals ++ col,value,wt)
-    def maxWt: Long =
-      rows.iterator.map(_._1.last.asInstanceOf[Long]).max
-    def isEmpty: Boolean = rows.isEmpty
   }
   private val scriptBuf = new ThreadLocal[
     scala.collection.mutable.LinkedHashMap[String, Buffered]]
@@ -7047,21 +6868,14 @@ object Cql {
   @volatile private[graft] var failFlushOf: String => Boolean =
     _ => false
 
-  private def writeBuffered(spark: SparkSession, dir: String,
-      b: Buffered): Unit = {
+  /** The memtable flush: one node-local write through
+    * [[graft.sources.CellSource.localAppend]], never a Spark job.
+    */
+  private def writeBuffered(dir: String, b: Buffered): Unit = {
     if (failFlushOf(dir))
       throw new java.io.IOException(s"injected flush failure: $dir")
-    writeBufferedReal(spark, dir, b)
-  }
-
-  private def writeBufferedReal(spark: SparkSession, dir: String,
-      b: Buffered): Unit = b match {
-    case d: BufDefault => writeCellRows(spark, dir, d.rows.toSeq)
-    case bb: BufBinary => writeBinaryCellRows(spark, dir, bb.rows.toSeq)
-    case s: BufString => writeStringCellRows(spark, dir, s.rows.toSeq)
-    case a: BufAny => writeAnyCellRows(spark, dir, a.vt, a.rows.toSeq)
-    case t: BufTyped =>
-      writeTypedRows(spark, dir, t.spec, t.valueType, t.rows.toSeq)
+    graft.sources.CellSource.localAppend(dir, b.spec, b.valueType,
+      b.rows.toSeq)
   }
 
   /** Flush (and drop) one table's buffered cells, if any.
@@ -7074,7 +6888,7 @@ object Cql {
     if (buf == null) return
     buf.get(wtKey(dir)).foreach { b =>
       if (!b.isEmpty) { b.writeAttempted = true
-        writeBuffered(spark, wtKey(dir), b) }
+        writeBuffered(wtKey(dir), b) }
     }
     buf.remove(wtKey(dir)); ()
   }
@@ -7101,7 +6915,7 @@ object Cql {
               // attempt either landed, or its increments are lost
               // with the error the caller already saw)
               ()
-            else { b.writeAttempted = true; writeBuffered(spark, k, b) }
+            else { b.writeAttempted = true; writeBuffered(k, b) }
           }
         }
         buf.remove(k); ()
@@ -7130,131 +6944,47 @@ object Cql {
     else buf.get(wtKey(dir)).filter(!_.isEmpty).map(_.maxWt)
   }
 
-  // r19: the memtable flush is a NODE-LOCAL write — every default-
-  // layout flush routes through CellSource.localAppendCells (the
-  // driver-local twin of the DSv2 commit: same roll sort, same file
-  // writer, same staged-link publish, same manifest + write-through
-  // 2i/MV maintenance) instead of scheduling a one-task Spark write
-  // job per flushed table. `USING TTL n` becomes the absolute expiry
-  // wt + ttl, exactly the CEL10 ttl=true write shape computed.
-  private def writeCellRows(spark: SparkSession, dir: String,
-      rows: Seq[BufRow]): Unit = {
-    if (rows.isEmpty) return
-    graft.sources.CellSource.localAppendCells(dir,
-      org.apache.spark.sql.types.LongType,
-      rows.map { case (pk, ck, c, v, wt, t) =>
-        (pk, ck, c, v: Any, wt, t.map(wt + _).getOrElse(Long.MaxValue))
-      })
-  }
-
-  private def appendCells(spark: SparkSession, dir: String,
-      rows: Seq[(Long, Int, String, Long, Long)],
-      ttl: Option[Long] = None): Unit = {
+  /** Buffer (inside a script) or flush one statement's rows, whatever
+    * the table's key layout and value type. Rows are the key parts'
+    * values in key order, then (col, value, wt); `USING TTL n`
+    * becomes the absolute expiry wt + n, the CEL10/CEL11 shape.
+    */
+  private def appendRows(dir: String, spec: graft.sources.KeySpec,
+      rows: Seq[Seq[Any]], ttl: Option[Long],
+      valueType: org.apache.spark.sql.types.DataType =
+        org.apache.spark.sql.types.LongType): Unit = {
     if (rows.isEmpty) return // zero-row statement: no empty flush
-    val buffered = rows.map { case (pk, ck, c, v, wt) =>
-      (pk, ck, c, v, wt, ttl) }
+    val nKey = spec.pkParts.length + spec.ckParts.length
+    val local = rows.map { r =>
+      val wt = r(nKey + 2).asInstanceOf[Long]
+      (r.take(nKey), r(nKey).asInstanceOf[String], r(nKey + 1), wt,
+        ttl.map(wt + _).getOrElse(Long.MaxValue))
+    }
     val buf = scriptBuf.get
-    if (buf != null) {
-      buf.getOrElseUpdate(wtKey(dir), new BufDefault(
-        scala.collection.mutable.ArrayBuffer.empty)) match {
-        case d: BufDefault => d.rows ++= buffered
-        case _ => fail(s"layout mix-up buffering cells for $dir")
-      }
-    } else writeCellRows(spark, dir, buffered)
+    if (buf == null)
+      graft.sources.CellSource.localAppend(dir, spec, valueType, local)
+    else {
+      val b = buf.getOrElseUpdate(wtKey(dir),
+        new Buffered(spec, valueType))
+      if (b.spec != spec || b.valueType != valueType)
+        fail(s"layout mix-up buffering cells for $dir")
+      b.rows ++= local
+    }
   }
 
-  /** Binary-valued twin of [[appendCells]] — the write shape of
-    * frozen<udt> tables (C59b): the cell value IS the packed blob,
-    * same commit path, same write-through maintenance. Buffers
-    * per-script like every other layout (r13 — previously wrote one
-    * flush file per statement, ~2× the buffered lifecycles' floor).
+  /** [[appendRows]] for default-layout (pk, ck, col, value, wt)
+    * cells.
     */
-  private def appendBinaryCells(spark: SparkSession, dir: String,
-      rows: Seq[(Long, Int, String, Array[Byte], Long)],
-      ttl: Option[Long] = None): Unit = {
-    if (rows.isEmpty) return
-    val buffered = rows.map { case (pk, ck, c, v, wt) =>
-      (pk, ck, c, v, wt, ttl) }
-    val buf = scriptBuf.get
-    if (buf != null) {
-      buf.getOrElseUpdate(wtKey(dir), new BufBinary(
-        scala.collection.mutable.ArrayBuffer.empty)) match {
-        case b: BufBinary => b.rows ++= buffered
-        case _ => fail(s"layout mix-up buffering binary cells for $dir")
-      }
-    } else writeBinaryCellRows(spark, dir, buffered)
-  }
+  private def appendCells(dir: String,
+      valueType: org.apache.spark.sql.types.DataType,
+      cells: Seq[(Long, Int, String, Any, Long)],
+      ttl: Option[Long] = None): Unit =
+    appendRows(dir, graft.sources.KeySpec.Default, cells.map(cellRow),
+      ttl, valueType)
 
-  /** String-valued twin of [[appendCells]] (C65o): TEXT-valued
-    * default-layout tables take the same buffered commit path; the
-    * write declares valueType=string so a still-empty dir resolves
-    * to the text schema (headers win once files exist).
-    */
-  private def appendStringCells(spark: SparkSession, dir: String,
-      rows: Seq[(Long, Int, String, String, Long)],
-      ttl: Option[Long] = None): Unit = {
-    if (rows.isEmpty) return
-    val buffered = rows.map { case (pk, ck, c, v, wt) =>
-      (pk, ck, c, v, wt, ttl) }
-    val buf = scriptBuf.get
-    if (buf != null) {
-      buf.getOrElseUpdate(wtKey(dir), new BufString(
-        scala.collection.mutable.ArrayBuffer.empty)) match {
-        case s: BufString => s.rows ++= buffered
-        case _ => fail(s"layout mix-up buffering cells for $dir")
-      }
-    } else writeStringCellRows(spark, dir, buffered)
-  }
-
-  /** C65q twin of [[appendCells]] for double/boolean/timestamp
-    * tables — one generic buffered path, value-tagged writer.
-    */
-  private def appendAnyCells(spark: SparkSession, dir: String,
-      vt: org.apache.spark.sql.types.DataType,
-      rows: Seq[(Long, Int, String, Any, Long)],
-      ttl: Option[Long] = None): Unit = {
-    if (rows.isEmpty) return
-    val buffered = rows.map { case (pk, ck, c, v, wt) =>
-      (pk, ck, c, v, wt, ttl) }
-    val buf = scriptBuf.get
-    if (buf != null) {
-      buf.getOrElseUpdate(wtKey(dir), new BufAny(vt,
-        scala.collection.mutable.ArrayBuffer.empty)) match {
-        case a: BufAny => a.rows ++= buffered
-        case _ => fail(s"layout mix-up buffering cells for $dir")
-      }
-    } else writeAnyCellRows(spark, dir, vt, buffered)
-  }
-
-  private def writeAnyCellRows(spark: SparkSession, dir: String,
-      vt: org.apache.spark.sql.types.DataType,
-      rows: Seq[AnyRow]): Unit = {
-    if (rows.isEmpty) return
-    graft.sources.CellSource.localAppendCells(dir, vt,
-      rows.map { case (pk, ck, c, v, wt, t) =>
-        (pk, ck, c, v, wt, t.map(wt + _).getOrElse(Long.MaxValue))
-      })
-  }
-
-  private def writeStringCellRows(spark: SparkSession, dir: String,
-      rows: Seq[StrRow]): Unit = {
-    if (rows.isEmpty) return
-    graft.sources.CellSource.localAppendCells(dir,
-      org.apache.spark.sql.types.StringType,
-      rows.map { case (pk, ck, c, v, wt, t) =>
-        (pk, ck, c, v: Any, wt, t.map(wt + _).getOrElse(Long.MaxValue))
-      })
-  }
-
-  private def writeBinaryCellRows(spark: SparkSession, dir: String,
-      rows: Seq[BinRow]): Unit = {
-    if (rows.isEmpty) return
-    graft.sources.CellSource.localAppendCells(dir,
-      org.apache.spark.sql.types.BinaryType,
-      rows.map { case (pk, ck, c, v, wt, t) =>
-        (pk, ck, c, v: Any, wt, t.map(wt + _).getOrElse(Long.MaxValue))
-      })
-  }
+  /** A default-layout cell as an [[appendRows]] row. */
+  private def cellRow(c: (Long, Int, String, Any, Long)): Seq[Any] =
+    Seq(c._1, c._2, c._3, c._4, c._5)
 
   /** A UDT literal `{field: value, ...}` against a declared layout →
     * the packed C59 blob. Unnamed fields pack as null (Cassandra's
@@ -7851,75 +7581,6 @@ object Cql {
       case t => fail(s"unsupported typed key part type: $t")
     }
 
-  /** Append fully-keyed typed cell rows (keyVals ++ (col, value, wt)
-    * [+ ttl]) through the typed write path, which tokenizes, sorts,
-    * and indexes the flush exactly like a DataFrame write.
-    */
-  private def typedWrite(spark: SparkSession, dir: String,
-      spec: graft.sources.KeySpec, rows: Seq[Seq[Any]],
-      ttl: Option[Long],
-      valueType: org.apache.spark.sql.types.DataType =
-        org.apache.spark.sql.types.LongType): Unit = {
-    if (rows.isEmpty) return
-    val buf = scriptBuf.get
-    if (buf != null) {
-      buf.getOrElseUpdate(wtKey(dir), new BufTyped(spec, valueType,
-        scala.collection.mutable.ArrayBuffer.empty)) match {
-        case t: BufTyped =>
-          if (t.spec != spec || t.valueType != valueType)
-            fail(s"layout mix-up buffering typed rows for $dir")
-          t.rows ++= rows.map((_, ttl))
-        case _ => fail(s"layout mix-up buffering typed rows for $dir")
-      }
-    } else writeTypedRows(spark, dir, spec, valueType,
-      rows.map((_, ttl)))
-  }
-
-  /** One flush of typed rows with PER-ROW ttl grants (the buffer
-    * mixes statements): plain shape when no row carries one, the
-    * CEL11 nullable-ttl shape otherwise. `valueType` is long for
-    * ordinary typed tables, binary on frozen<udt> ones (C59b/C59c).
-    */
-  // r19: typed memtable flushes are node-local too —
-  // CellSource.localAppendKeyedCells is the keyed twin of the
-  // default-layout local flush (same staged-link commit contract,
-  // same KeyCodec/value coercions as the keyed CAS writer).
-  private def writeTypedRows(spark: SparkSession, dir: String,
-      spec: graft.sources.KeySpec,
-      valueType: org.apache.spark.sql.types.DataType,
-      rows: Seq[(Seq[Any], Option[Long])]): Unit = {
-    if (rows.isEmpty) return
-    val nKey = spec.pkParts.length + spec.ckParts.length
-    graft.sources.CellSource.localAppendKeyedCells(dir, spec,
-      valueType,
-      rows.map { case (r, t) =>
-        val wt = r(nKey + 2).asInstanceOf[Long]
-        (r.take(nKey), r(nKey).asInstanceOf[String], r(nKey + 1),
-          wt, t.map(wt + _).getOrElse(Long.MaxValue))
-      })
-  }
-
-  /** The typed rows as a DataFrame in the table's write schema —
-    * shared by the direct write and the BATCH journal path.
-    */
-  private def typedDf(spark: SparkSession, spec: graft.sources.KeySpec,
-      rows: Seq[Seq[Any]], ttl: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(
-      spec.keyFields ++ Seq(
-        StructField("col", StringType, nullable = false),
-        StructField("value", LongType, nullable = false),
-        StructField("wt", LongType, nullable = false)) ++
-        (if (ttl.isDefined)
-          Seq(StructField("ttl", LongType, nullable = true))
-        else Seq.empty))
-    val sparkRows = rows.map(r => org.apache.spark.sql.Row.fromSeq(
-      r ++ ttl.toSeq))
-    spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(sparkRows).asJava,
-      schema)
-  }
-
   /** Typed-table (CEL6) INSERT: the column list must bind EVERY pk
     * and ck part by name (CQL's own rule — an unbound key part is an
     * error, not a null), and data values stay bigint. `USING TTL`
@@ -7928,7 +7589,7 @@ object Cql {
   private def insertTyped(spark: SparkSession, dir: String,
       spec: graft.sources.KeySpec, cols: String, vals: String,
       wt: Long, ttl: Option[Long] = None): Unit =
-    typedWrite(spark, dir, spec,
+    appendRows(dir, spec,
       insertTypedRows(spec, cols, vals, wt), ttl)
 
   /** The typed INSERT's rows (keyVals ++ (col, value, wt)) — shared
@@ -8056,7 +7717,7 @@ object Cql {
   private def updateTyped(spark: SparkSession, dir: String,
       spec: graft.sources.KeySpec, sets: String, where: String,
       wt: Long, ttl: Option[Long]): Unit =
-    typedWrite(spark, dir, spec,
+    appendRows(dir, spec,
       updateTypedRows(spec, sets, where, wt), ttl)
 
   private def updateTypedRows(spec: graft.sources.KeySpec,
@@ -8087,15 +7748,17 @@ object Cql {
 
   /** Typed-table DELETE: the same marker protocol as the default
     * layout — partition (`!del*`), row (`!delrow`), int-ck range
-    * (`!delr:lo:hi`), single cell (`!del:<col>`) — with typed keys.
-    * An empty range (lo > hi) contributes NO markers (CQL matches
-    * zero rows; escalating would wipe the partition).
+    * (`!delr:lo:hi`), clustering prefix (`!delpfx:<j>`), single cell
+    * (`!del:<col>`) — with typed keys. An empty range (lo > hi)
+    * contributes NO markers (CQL matches zero rows; escalating would
+    * wipe the partition). Markers carry the table's value type; their
+    * value slot takes its neutral (empty blob on vector tables, empty
+    * string on text storage).
     */
-  private def deleteTyped(spark: SparkSession, dir: String,
-      spec: graft.sources.KeySpec, colOpt: Option[String],
-      where: String, dts: Long): Unit =
-    typedWrite(spark, dir, spec,
-      deleteTypedRows(spec, colOpt, where, dts), ttl = None)
+  private def deleteTyped(dir: String, spec: graft.sources.KeySpec,
+      colOpt: Option[String], where: String, dts: Long): Unit =
+    appendRows(dir, spec, deleteTypedRows(spec, colOpt, where, dts),
+      ttl = None, graft.sources.CellSource.valueTypeOf(dir))
 
   private def deleteTypedRows(spec: graft.sources.KeySpec,
       colOpt: Option[String], where: String,
@@ -8884,24 +8547,6 @@ object Cql {
     case t => fail(s"unsupported scalar value type: $t")
   }
 
-  /** The type's inert marker value (tombstone value slots). */
-  private def scalarNeutral(
-      vt: org.apache.spark.sql.types.DataType): Any = vt match {
-    case org.apache.spark.sql.types.DoubleType => 0.0
-    case org.apache.spark.sql.types.BooleanType => false
-    case org.apache.spark.sql.types.TimestampType =>
-      new java.sql.Timestamp(0L)
-    // mapped-type storage layouts (C65r): the tombstone value slot
-    // is inert — the marker col name is the whole message
-    case org.apache.spark.sql.types.StringType => ""
-    case org.apache.spark.sql.types.IntegerType => 0
-    case org.apache.spark.sql.types.LongType => 0L
-    case org.apache.spark.sql.types.BinaryType => Array.empty[Byte]
-    case d: org.apache.spark.sql.types.DecimalType =>
-      new java.math.BigDecimal(java.math.BigInteger.ZERO, d.scale)
-    case t => fail(s"unsupported scalar value type: $t")
-  }
-
   /** C65q/C65r INSERT cells: [[insertCells]]'s key/static grammar
     * with the type's literal in the value slot. Static columns
     * (C65x) land at the partition's marker position exactly as on
@@ -9199,33 +8844,13 @@ object Cql {
       ttl: Option[Long]): Unit = {
     val (cells, tombs) = stageCollectionCells(spark, dir, sets, where,
       wt, scala.collection.mutable.Map.empty)
-    val mapped = mappedValueType(dir)
-    val str = mapped.isEmpty && isStringValued(dir)
-    mapped match {
-      case Some((_, vt)) =>
-        // mapped element cells ride the value-tagged buffered path
-        // every other write on this table uses; tombstone value
-        // slots carry the storage layout's neutral (never the TTL —
-        // an expiring tombstone would resurrect removed elements)
-        appendAnyCells(spark, dir, vt, cells, ttl)
-        appendAnyCells(spark, dir, vt, tombs.map {
-          case (pk, ck, c, _, w) => (pk, ck, c, scalarNeutral(vt), w)
-        }, ttl = None)
-      case None if str =>
-        appendStringCells(spark, dir, cells.map {
-          case (pk, ck, c, v, w) =>
-            (pk, ck, c, v.asInstanceOf[String], w)
-        }, ttl)
-        appendStringCells(spark, dir, tombs.map {
-          case (pk, ck, c, _, w) => (pk, ck, c, "", w) }, ttl = None)
-      case None =>
-        appendCells(spark, dir, cells.map {
-          case (pk, ck, c, v, w) => (pk, ck, c, v.asInstanceOf[Long], w)
-        }, ttl)
-        appendCells(spark, dir, tombs.map {
-          case (pk, ck, c, v, w) => (pk, ck, c, v.asInstanceOf[Long], w)
-        }, ttl = None)
-    }
+    // element cells ride the table's value type (bigint, text, or a
+    // mapped type's storage); tombstone value slots take its neutral
+    // and never the TTL — an expiring tombstone would resurrect
+    // removed elements
+    val vt = graft.sources.CellSource.valueTypeOf(dir)
+    appendCells(dir, vt, cells, ttl)
+    appendCells(dir, vt, tombs, ttl = None)
   }
 
   /** The parse/read/stage core of [[collectionUpdate]]: resolves the
@@ -9473,8 +9098,8 @@ object Cql {
       wt: Long, ttl: Option[Long]): Unit = {
     val (rows, tombs) = stageCollectionRowsTyped(spark, dir, spec,
       sets, where, wt, scala.collection.mutable.Map.empty)
-    typedWrite(spark, dir, spec, rows, ttl)
-    typedWrite(spark, dir, spec, tombs, ttl = None)
+    appendRows(dir, spec, rows, ttl)
+    appendRows(dir, spec, tombs, ttl = None)
   }
 
   /** The parse/read/stage core of [[collectionUpdateTyped]] — the

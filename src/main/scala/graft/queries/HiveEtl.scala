@@ -19,11 +19,13 @@ import graft.{GQuery, Tables}
   */
 object HiveEtl {
 
+  /** Root of the multi-insert outputs (`graft.multiins.dir`). */
+  private[graft] def multiInsDir: String =
+    Tables.scratchDir("graft.multiins.dir", "multiins")
+
   private def multiInsert(s: SparkSession, d: String): DataFrame = {
     Tables.orders(s, d).createOrReplaceTempView("orders_v")
-    val base = sys.props.getOrElse("graft.multiins.dir",
-      "/root/repo/target/multiins") + "-" +
-      Paths.get(d).getFileName.toString
+    val base = multiInsDir + "-" + Paths.get(d).getFileName.toString
     s.sql(
       s"""FROM orders_v
          |INSERT OVERWRITE DIRECTORY '$base/hi' USING parquet

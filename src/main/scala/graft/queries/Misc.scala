@@ -87,6 +87,10 @@ object Misc {
   private val parquetScanSql =
     "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey"
 
+  /** Root of the SerDe fixture copies (`graft.serde.dir`). */
+  private[graft] def serdeDir: String =
+    Tables.scratchDir("graft.serde.dir", "serde")
+
   /** Q_SRC3/Q_SRC4 — CSV and JSON sources: the engine materializes a
     * deterministic copy of `nation` in the format once per sf (fixture
     * prep, same pattern as CellSnapshots), then reads it back with an
@@ -94,8 +98,7 @@ object Misc {
     * lossless round-trip is exactly the SerDe contract.
     */
   private def serdeScan(s: SparkSession, d: String, fmt: String): DataFrame = {
-    val dir = java.nio.file.Paths.get(
-      sys.props.getOrElse("graft.serde.dir", "/root/repo/target/serde"),
+    val dir = java.nio.file.Paths.get(serdeDir,
       java.nio.file.Paths.get(d).getFileName.toString + "-" + fmt)
     val src = Tables.nation(s, d)
     this.synchronized {
@@ -142,8 +145,7 @@ object Misc {
     * original — sink + pruned scan must be lossless.
     */
   private def partitionedSink(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Paths.get(
-      sys.props.getOrElse("graft.serde.dir", "/root/repo/target/serde"),
+    val dir = java.nio.file.Paths.get(serdeDir,
       java.nio.file.Paths.get(d).getFileName.toString + "-bylang")
     this.synchronized {
       if (!java.nio.file.Files.exists(dir.resolve("_SUCCESS"))) {

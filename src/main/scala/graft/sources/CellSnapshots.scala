@@ -34,8 +34,8 @@ object CellSnapshots {
   /** Data files in the snapshot = write-side range partitions. */
   val SnapshotFiles = 8
 
-  private def root: String = sys.props.getOrElse(
-    "graft.cell.snapshots", "/root/repo/target/cell-snapshots")
+  private[graft] def root: String =
+    graft.Tables.scratchDir("graft.cell.snapshots", "cell-snapshots")
 
   def ensure(s: SparkSession, sfDir: String): String = synchronized {
     val sfName = Paths.get(sfDir).getFileName.toString

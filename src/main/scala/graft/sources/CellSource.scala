@@ -309,6 +309,41 @@ object ValueCodec {
     case DecimalTag => Decimal.createUnsafe(0L, prec, scale)
   }
 
+  /** (tag, decimal precision, decimal scale) of a value type. */
+  def layoutOf(dt: DataType): (Int, Int, Int) = dt match {
+    case d: DecimalType => (DecimalTag, d.precision, d.scale)
+    case t => (tagFor(t), 0, 0)
+  }
+
+  /** External (Row-side) value → the file writers' internal form:
+    * UTF8String for text, epoch micros for timestamps, Decimal at the
+    * declared precision/scale. None when `v` does not fit the tag —
+    * the caller decides whether that is an error or a marker's inert
+    * payload. The one coercion table of the driver-local write path,
+    * for key parts and cell values alike.
+    */
+  def toInternal(tag: Int, prec: Int, scale: Int, v: Any): Option[Any] =
+    (tag, v) match {
+      case (LongTag, x: java.lang.Long) => Some(x.longValue)
+      case (LongTag, x: java.lang.Integer) => Some(x.longValue)
+      case (IntTag, x: java.lang.Integer) => Some(x.intValue)
+      case (DoubleTag, x: java.lang.Double) => Some(x.doubleValue)
+      case (BoolTag, x: java.lang.Boolean) => Some(x.booleanValue)
+      case (StringTag, x: String) => Some(UTF8String.fromString(x))
+      case (StringTag, x: UTF8String) => Some(x)
+      case (BinaryTag, x: Array[Byte]) => Some(x)
+      case (TimestampTag, x: java.lang.Long) => Some(x.longValue)
+      case (TimestampTag, x: java.sql.Timestamp) =>
+        Some(org.apache.spark.sql.catalyst.util.DateTimeUtils
+          .fromJavaTimestamp(x))
+      case (DecimalTag, x: java.math.BigDecimal) =>
+        Some(Decimal(scala.math.BigDecimal(x), prec, scale))
+      case (DecimalTag, x: scala.math.BigDecimal) =>
+        Some(Decimal(x, prec, scale))
+      case (DecimalTag, x: Decimal) => Some(x)
+      case _ => None
+    }
+
   def compare(tag: Int, a: Any, b: Any): Int = tag match {
     case LongTag | TimestampTag =>
       java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
@@ -865,29 +900,35 @@ object CellSource {
     (schema, out.result())
   }
 
-  /** Keyed (CEL6/8) twin of [[localAppendCells]] (r19): the typed
-    * memtable flush as a driver-local staged-link publish. Rows are
-    * the table's write-schema rows — key part EXTERNAL values in
-    * key order, then (col, value, wt) — plus the absolute expiry
-    * (Long.MaxValue = never); coercion to file-internal reps runs
-    * through the same KeyCodec/value tables the keyed CAS writer
-    * uses.
+  /** One row of the driver-local write path: the key parts' EXTERNAL
+    * values in key order (`pk, ck` on the default layout), then col,
+    * value, wt and the absolute expiry (`Long.MaxValue` = never).
     */
-  def localAppendKeyedCells(dir: String, declaredSpec: KeySpec,
-      valueType: org.apache.spark.sql.types.DataType,
-      rows: Seq[(Seq[Any], String, Any, Long, Long)]): Unit = {
+  type LocalRow = (Seq[Any], String, Any, Long, Long)
+
+  /** The driver-local write path: memtable flushes, LWT and
+    * conditional-batch writes, DELETE markers and logged-batch
+    * journal slices all land here. A flush of a few statements'
+    * cells is a node-local write in the system being modeled, so it
+    * never schedules a Spark job; it keeps the DSv2 commit's
+    * contract step for step:
+    *  - the append type/layout check against the first existing file
+    *    (a mixed generation must not publish);
+    *  - [[writeLocalFile]]: one coercion of external values, the
+    *    layout's record order, the encoder the key spec picks;
+    *  - [[publishFlush]]: staged-link claim, manifest refresh,
+    *    write-through 2i/MV maintenance.
+    * C51e renames: headers never carry declared key names, so the
+    * layout check compares the STORAGE spec of `dir`.
+    */
+  def localAppend(dir: String, declaredSpec: KeySpec,
+      valueType: DataType, rows: Seq[LocalRow]): Unit = {
     if (rows.isEmpty) return
     val norm = CellPlanning.normalize(dir)
     val d = Paths.get(norm)
     Files.createDirectories(d)
-    // C51e renames: file headers NEVER carry declared names — write
-    // with the STORAGE spec, exactly as the DSv2 write builder does.
     val spec = CellPlanning.storageKeySpec(norm, declaredSpec)
-    val (tag, prec, scale) = valueType match {
-      case dt: DecimalType =>
-        (ValueCodec.DecimalTag, dt.precision, dt.scale)
-      case t => (ValueCodec.tagFor(t), 0, 0)
-    }
+    val (tag, prec, scale) = ValueCodec.layoutOf(valueType)
     val files = CellPlanning.listFiles(norm)
     files.headOption.foreach { f =>
       val h = readHeader(f)
@@ -897,168 +938,99 @@ object CellSource {
           ((tag, prec, scale)),
         s"append value type does not match existing table in $dir")
     }
-    def internalKey(p: KeyPart, v: Any): Any =
-      KeyCodec.toInternal(p.tag, v).getOrElse(throw
-        new IllegalArgumentException(s"bad ${p.name} value $v"))
-    def internalVal(v: Any): Any = tag match {
-      case ValueCodec.StringTag => v match {
-        case s: String => UTF8String.fromString(s)
-        case u: UTF8String => u
-        case o => throw new IllegalArgumentException(
-          s"text cell value of unexpected type: $o")
-      }
-      case ValueCodec.TimestampTag => v match {
-        case t: java.sql.Timestamp =>
-          org.apache.spark.sql.catalyst.util.DateTimeUtils
-            .fromJavaTimestamp(t)
-        case l: Long => l
-        case o => throw new IllegalArgumentException(
-          s"timestamp cell value of unexpected type: $o")
-      }
-      case ValueCodec.DecimalTag => v match {
-        case bd: java.math.BigDecimal =>
-          org.apache.spark.sql.types.Decimal(
-            scala.math.BigDecimal(bd), prec, scale)
-        case bd: scala.math.BigDecimal =>
-          org.apache.spark.sql.types.Decimal(bd, prec, scale)
-        case dec: org.apache.spark.sql.types.Decimal => dec
-        case o => throw new IllegalArgumentException(
-          s"decimal cell value of unexpected type: $o")
-      }
-      case _ => v
-    }
-    val nPk = spec.pkParts.length
-    val recs = rows.map { case (keyVals, colName, value, wt, exp) =>
-      val pkIv = spec.pkParts.zip(keyVals.take(nPk))
-        .map { case (p, v) => internalKey(p, v) }.toArray
-      val ckIv = spec.ckParts.zip(keyVals.drop(nPk))
-        .map { case (p, v) => internalKey(p, v) }.toArray
-      KeyedRec(KeyCodec.token(spec, pkIv), pkIv, rankOf(colName),
-        ckIv, colName, internalVal(value), wt, exp)
-    }.sortWith(keyedLess(spec))
-    val colNames = recs.iterator.map(_.col).toArray.distinct.sorted
-    val staged = Files.createTempFile(d, ".memtable-", ".cells.tmp")
-    writeFileKeyed(staged, recs, spec, colNames, tag, prec, scale,
-      DefaultIndexEvery, DefaultChunkRecords)
-    var next = files.map(f =>
-      CellPlanning.fileIndex(Paths.get(f).getFileName.toString))
-      .foldLeft(-1)(math.max) + 1
-    var done = false
-    while (!done) {
-      try {
-        Files.createLink(d.resolve(f"data-$next%04d.cells"), staged)
-        Files.delete(staged)
-        done = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-      }
-      next += 1
-    }
-    CellManifest.refresh(norm)
-    CellIndex.maintainAfterWrite(norm)
-    CellView.maintainAfterWrite(norm)
+    val staged = Files.createTempFile(d, ".flush-", ".cells.tmp")
+    try {
+      writeLocalFile(staged, declaredSpec, valueType, rows)
+      publishFlush(norm, files, Seq(staged))
+    } finally Files.deleteIfExists(staged)
   }
 
-  /** Driver-LOCAL memtable flush (r19) — the CQL script buffer's
-    * flush used to run as a one-task Spark WRITE JOB per table
-    * (`toDF.coalesce(1).write`): ~80 ms of scheduling for a
-    * few-dozen-row flush file. A memtable flush is a NODE-LOCAL
-    * write in the system being modeled, so this writes the flush
-    * file directly on the driver with the exact contract of the
-    * DSv2 path it replaces, step for step:
-    *  - the same roll sort ((pk, ck, col, wt, value-compare) — the
-    *    [[CellDataWriter.roll]] comparator) and the same
-    *    [[writeFileTypedE]] file writer;
-    *  - the batch commit's append type/layout check (a mixed
-    *    generation must not publish);
-    *  - the monotonic staged-link publish (never reuses a flush
-    *    index, atomic under racers — [[CellTransactions]]' protocol);
-    *  - manifest refresh + write-through 2i/MV maintenance
-    *    ([[CellIndex.maintainAfterWrite]] /
-    *    [[CellView.maintainAfterWrite]]), exactly what the DSv2
-    *    commit runs.
-    * DEFAULT key layout only; values are the EXTERNAL forms the CQL
-    * literal grammars produce and coerce to file-internal reps here
-    * (same table as the CAS writer's casCoerce).
+  /** Encode `rows` as ONE flush file at `target`: the one place the
+    * driver-local writers pick the encoder from the key spec —
+    * [[writeFileTypedE]] (CEL9/CEL10) for [[KeySpec.Default]],
+    * [[writeFileKeyed]] (CEL8/CEL11) otherwise — after sorting to the
+    * layout's record order and one coercion of external values
+    * ([[ValueCodec.toInternal]]). A tombstone marker's value slot is
+    * inert: it takes the tag's neutral when the given value does not
+    * fit; a data cell that does not fit is refused. Key names resolve
+    * to the STORAGE names of the target's directory (C51e).
     */
-  def localAppendCells(dir: String,
-      valueType: org.apache.spark.sql.types.DataType,
-      rows: Seq[(Long, Int, String, Any, Long, Long)]): Unit = {
-    if (rows.isEmpty) return
-    val norm = CellPlanning.normalize(dir)
+  private[sources] def writeLocalFile(target: java.nio.file.Path,
+      declaredSpec: KeySpec, valueType: DataType,
+      rows: Seq[LocalRow]): Unit = {
+    val spec = CellPlanning.storageKeySpec(target.getParent.toString,
+      declaredSpec)
+    val (tag, prec, scale) = ValueCodec.layoutOf(valueType)
+    def key(p: KeyPart, v: Any): Any =
+      ValueCodec.toInternal(p.tag, p.prec, p.scale, v).getOrElse(throw
+        new IllegalArgumentException(s"bad ${p.name} value $v"))
+    def value(col: String, v: Any): Any =
+      ValueCodec.toInternal(tag, prec, scale, v).getOrElse {
+        require(col.startsWith("!"), s"${valueType.simpleString} " +
+          s"cell $col cannot hold a value of unexpected type: $v")
+        ValueCodec.zeroOf(tag, prec, scale)
+      }
+    if (spec.isDefault) {
+      val recs = rows.map { case (k, c, v, wt, exp) =>
+        (key(spec.pkParts.head, k(0)).asInstanceOf[Long],
+          key(spec.ckParts.head, k(1)).asInstanceOf[Int], c,
+          value(c, v), wt, exp)
+      }.sortWith { (a, b) =>
+        if (a._1 != b._1) a._1 < b._1
+        else if (a._2 != b._2) a._2 < b._2
+        else if (a._3 != b._3) a._3 < b._3
+        else if (a._5 != b._5) a._5 < b._5
+        else ValueCodec.compare(tag, a._4, b._4) < 0
+      }
+      writeFileTypedE(target, recs,
+        recs.iterator.map(_._3).toArray.distinct.sorted, tag, prec,
+        scale, DefaultIndexEvery, DefaultChunkRecords)
+    } else {
+      val nPk = spec.pkParts.length
+      val recs = rows.map { case (k, c, v, wt, exp) =>
+        val pkIv = spec.pkParts.zip(k.take(nPk))
+          .map { case (p, x) => key(p, x) }.toArray
+        val ckIv = spec.ckParts.zip(k.drop(nPk))
+          .map { case (p, x) => key(p, x) }.toArray
+        KeyedRec(KeyCodec.token(spec, pkIv), pkIv, rankOf(c), ckIv, c,
+          value(c, v), wt, exp)
+      }.sortWith(keyedLess(spec))
+      writeFileKeyed(target, recs, spec,
+        recs.iterator.map(_.col).toArray.distinct.sorted, tag, prec,
+        scale, DefaultIndexEvery, DefaultChunkRecords)
+    }
+  }
+
+  /** The one publish step of every append into a table directory, the
+    * DSv2 batch commit's and [[localAppend]]'s alike. Flush indices
+    * are MONOTONIC and never reused (SSTable generation numbers):
+    * each staged file links at the next index above `existing`'s max.
+    * link(2) fails with EEXIST on a taken slot, so racing writers skip
+    * forward and nothing is ever overwritten (a no-replace move is
+    * check-then-rename, not atomic). Callers remove the staged names.
+    * Then the planning manifest is refreshed (best-effort: readers
+    * detect a stale one and fall back to headers), and registered
+    * 2i/MV absorb the new generation (C18f/C40 write-through
+    * maintenance; unregistered ones keep the lazy heal-on-read
+    * contract).
+    */
+  private[sources] def publishFlush(norm: String, existing: Seq[String],
+      staged: Seq[java.nio.file.Path]): Unit = {
     val d = Paths.get(norm)
-    Files.createDirectories(d)
-    val (tag, prec, scale) = valueType match {
-      case dt: DecimalType =>
-        (ValueCodec.DecimalTag, dt.precision, dt.scale)
-      case t => (ValueCodec.tagFor(t), 0, 0)
-    }
-    val files = CellPlanning.listFiles(norm)
-    require(CellPlanning.keySpecOf(norm, files).isDefault,
-      s"localAppendCells writes default-keyed tables only; $dir " +
-        "is typed")
-    files.headOption.foreach { f =>
-      val h = readHeader(f)
-      require((h.valueTag, h.decPrec, h.decScale) ==
-          ((tag, prec, scale)),
-        s"append value type does not match existing table in $dir")
-    }
-    // External → file-internal coercion, STRICT: an unexpected value
-    // type throws (the DataFrame encoder it replaces would have),
-    // never silently writes a neutral.
-    def coerce(v: Any): Any = tag match {
-      case ValueCodec.StringTag => v match {
-        case s: String => UTF8String.fromString(s)
-        case u: UTF8String => u
-        case o => throw new IllegalArgumentException(
-          s"text cell value of unexpected type: $o")
-      }
-      case ValueCodec.TimestampTag => v match {
-        case t: java.sql.Timestamp =>
-          org.apache.spark.sql.catalyst.util.DateTimeUtils
-            .fromJavaTimestamp(t)
-        case l: Long => l
-        case o => throw new IllegalArgumentException(
-          s"timestamp cell value of unexpected type: $o")
-      }
-      case ValueCodec.DecimalTag => v match {
-        case bd: java.math.BigDecimal =>
-          org.apache.spark.sql.types.Decimal(
-            scala.math.BigDecimal(bd), prec, scale)
-        case bd: scala.math.BigDecimal =>
-          org.apache.spark.sql.types.Decimal(bd, prec, scale)
-        case dec: org.apache.spark.sql.types.Decimal => dec
-        case o => throw new IllegalArgumentException(
-          s"decimal cell value of unexpected type: $o")
-      }
-      case _ => v
-    }
-    val coerced = rows.map { case (pk, ck, c, v, wt, exp) =>
-      (pk, ck, c, coerce(v), wt, exp) }
-    val sorted = coerced.sortWith { (a, b) =>
-      if (a._1 != b._1) a._1 < b._1
-      else if (a._2 != b._2) a._2 < b._2
-      else if (a._3 != b._3) a._3 < b._3
-      else if (a._5 != b._5) a._5 < b._5
-      else ValueCodec.compare(tag, a._4, b._4) < 0
-    }
-    val colNames = sorted.iterator.map(_._3).toArray.distinct.sorted
-    val staged = Files.createTempFile(d, ".memtable-", ".cells.tmp")
-    writeFileTypedE(staged, sorted, colNames, tag, prec, scale,
-      DefaultIndexEvery, DefaultChunkRecords)
-    var next = files.map(f =>
+    var next = existing.map(f =>
       CellPlanning.fileIndex(Paths.get(f).getFileName.toString))
       .foldLeft(-1)(math.max) + 1
-    var done = false
-    while (!done) {
-      try {
-        Files.createLink(d.resolve(f"data-$next%04d.cells"), staged)
-        Files.delete(staged)
-        done = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
+    staged.foreach { s =>
+      var done = false
+      while (!done) {
+        try {
+          Files.createLink(d.resolve(f"data-$next%04d.cells"), s)
+          done = true
+        } catch {
+          case _: java.nio.file.FileAlreadyExistsException =>
+        }
+        next += 1
       }
-      next += 1
     }
     CellManifest.refresh(norm)
     CellIndex.maintainAfterWrite(norm)
@@ -1081,6 +1053,13 @@ object CellSource {
       .foldLeft(Long.MinValue)(math.max)
     if (m == Long.MinValue) None else Some(m)
   }
+
+  /** The deterministic "wins LWW now" writetime of a coordinator-side
+    * write (DELETE markers, C38; the LWT and conditional-batch rounds,
+    * C55/C56d): the table's [[maxWt]] + 1, never below 1.
+    */
+  def lwwNowWt(dir: String): Long =
+    maxWt(dir).fold(0L)(math.max(0L, _)) + 1
 
   /** [[fileEstimate]] over every flush file of a table directory. */
   def dirEstimates(dir: String): Seq[(Long, Long, Long, Long, Int)] =
@@ -1899,140 +1878,71 @@ class CellTable(path: String,
       if (hasRange) Some((ckLo, ckHi)) else None))
   }
 
-  /** The type's neutral EXTERNAL (Row-side) value, for marker rows
-    * built as a DataFrame.
-    */
-  private def zeroExternal(dt: DataType): Any = dt match {
-    case LongType => 0L
-    case IntegerType => 0
-    case DoubleType => 0.0
-    case BooleanType => false
-    case StringType => ""
-    case BinaryType => Array.empty[Byte]
-    case TimestampType => new java.sql.Timestamp(0L)
-    case d: DecimalType =>
-      new java.math.BigDecimal(java.math.BigInteger.ZERO, d.scale)
-    case other => throw new IllegalArgumentException(
-      s"no neutral value for $other")
-  }
-
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     if (keySpec.isDefault) parseDelete(filters).isDefined
     else parseTypedDelete(filters).isDefined
 
-  /** Typed-table DELETE: marker rows append through the DSv2 typed
-    * write path (rank ordering puts partition/range markers ahead of
-    * every data row of their partition regardless of the neutral ck
-    * values they carry).
+  /** SQL DELETE: tombstone markers (C38), never a data rewrite, at
+    * the deterministic "wins LWW now" writetime, through the
+    * driver-local write path. Typed keys use the same marker protocol;
+    * rank ordering puts partition/range markers ahead of every data
+    * row of their partition regardless of the neutral ck values they
+    * carry. The markers' value type is the files' (path-handle tables
+    * may carry the default schema), else this handle's.
     */
-  private def deleteWhereTyped(filters: Array[Filter]): Unit = {
-    val (pks, ckEq, ckRange) = parseTypedDelete(filters).getOrElse(
-      throw new IllegalArgumentException(
-        "unsupported DELETE predicate " +
-          s"[${filters.mkString(", ")}] for typed key " +
-          s"(${keySpec.serial}): bind every partition-key part by " +
-          "equality (IN allowed on a single-part key), optionally " +
-          "every clustering part by equality or an int-ck range"))
-    val spark = org.apache.spark.sql.SparkSession.active
+  override def deleteWhere(filters: Array[Filter]): Unit = {
     val norm = CellPlanning.normalize(path)
     val files = CellPlanning.listFiles(norm)
-    val wt = files.map(CellSource.readHeader).iterator
-      .flatMap(_.chunkMaxWt.iterator).foldLeft(0L)(math.max) + 1
-    val ckZeros = keySpec.ckParts.map(p => zeroExternal(p.dataType))
-    // resolve the value type from the files (path-handle CellTables
-    // may carry the default schema); typed marker rows must match the
-    // TABLE's typed layout, not the handle's
-    val valueDt = files.headOption.map(CellSource.readHeader)
+    val wt = CellSource.lwwNowWt(norm)
+    val markers: Seq[(Seq[Any], String)] =
+      if (keySpec.isDefault) {
+        val (pks, ckLo, ckHi, hasCk) = parseDelete(filters).getOrElse(
+          throw new IllegalArgumentException(
+            "unsupported DELETE predicate " +
+              s"[${filters.mkString(", ")}]: Cassandra shape is " +
+              "pk = ? / pk IN (...), optionally AND an integer ck " +
+              "equality or range, on a default-keyed table"))
+        // Seq[Any]: Seq(pk, ck) would numerically widen ck to Long
+        if (hasCk && ckLo > ckHi) Seq.empty // contradiction
+        else pks.toSeq.sorted.map { pk =>
+          if (!hasCk)
+            (Seq[Any](pk, Int.MinValue), CellSource.PartitionTombstone)
+          else if (ckLo == ckHi)
+            (Seq[Any](pk, ckLo), CellSource.RowTombstone)
+          else (Seq[Any](pk, Int.MinValue),
+            CellSource.rangeTombstoneCol(ckLo, ckHi))
+        }
+      } else {
+        val (pks, ckEq, ckRange) = parseTypedDelete(filters).getOrElse(
+          throw new IllegalArgumentException(
+            "unsupported DELETE predicate " +
+              s"[${filters.mkString(", ")}] for typed key " +
+              s"(${keySpec.serial}): bind every partition-key part by " +
+              "equality (IN allowed on a single-part key), optionally " +
+              "every clustering part by equality or an int-ck range"))
+        val ckZeros = keySpec.ckParts
+          .map(p => ValueCodec.zeroOf(p.tag, p.prec, p.scale))
+        val (col, cks) = (ckRange, ckEq) match {
+          case (Some((lo, hi)), _) =>
+            (CellSource.rangeTombstoneCol(lo, hi), ckZeros)
+          case (None, Some(cks))
+              if cks.length == keySpec.ckParts.length =>
+            (CellSource.RowTombstone, cks.toSeq)
+          case (None, Some(pfx)) =>
+            // clustering-key PREFIX binding → prefix tombstone: bound
+            // values in the marker's leading ck parts, neutral tail
+            (CellSource.prefixTombstoneCol(pfx.length),
+              pfx.toSeq ++ ckZeros.drop(pfx.length))
+          case (None, None) => (CellSource.PartitionTombstone, ckZeros)
+        }
+        pks.map(pkVals => (pkVals.toSeq ++ cks, col))
+      }
+    val valueType = files.headOption.map(CellSource.readHeader)
       .map(h => ValueCodec.dataTypeFor(h.valueTag, h.decPrec,
         h.decScale))
       .getOrElse(tableSchema("value").dataType)
-    val typedSchema = CellSource.schemaFor(keySpec, valueDt)
-    val zeroV = zeroExternal(valueDt)
-    val marker = (ckRange, ckEq) match {
-      case (Some((lo, hi)), _) =>
-        (CellSource.rangeTombstoneCol(lo, hi), ckZeros)
-      case (None, Some(cks)) if cks.length == keySpec.ckParts.length =>
-        (CellSource.RowTombstone, cks.toSeq)
-      case (None, Some(pfx)) =>
-        // clustering-key PREFIX binding → prefix tombstone: bound
-        // values in the marker's leading ck parts, neutral tail
-        (CellSource.prefixTombstoneCol(pfx.length),
-          pfx.toSeq ++ ckZeros.drop(pfx.length))
-      case (None, None) => (CellSource.PartitionTombstone, ckZeros)
-    }
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      new java.util.ArrayList()
-    pks.foreach { pkVals =>
-      rows.add(org.apache.spark.sql.Row.fromSeq(
-        pkVals.toSeq ++ marker._2 ++ Seq(marker._1, zeroV, wt)))
-    }
-    val pkSyntax = "((" + keySpec.pkParts.map(_.name).mkString(",") +
-      ")," + keySpec.ckParts.map(_.name).mkString(",") + ")"
-    var w = spark.createDataFrame(rows, typedSchema).coalesce(1)
-      .write.format("graft.sources.CellSource")
-      .option("primaryKey", pkSyntax)
-    (keySpec.pkParts ++ keySpec.ckParts).foreach { p =>
-      w = w.option(s"keyType.${p.name}", p.dataType.simpleString)
-    }
-    w.mode("append").save(path)
-  }
-
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    if (!keySpec.isDefault) { deleteWhereTyped(filters); return }
-    val (pks, ckLo, ckHi, hasCk) = parseDelete(filters).getOrElse(
-      throw new IllegalArgumentException(
-        "unsupported DELETE predicate " +
-          s"[${filters.mkString(", ")}]: Cassandra shape is " +
-          "pk = ? / pk IN (...), optionally AND an integer ck " +
-          "equality or range, on a default-keyed table"))
-    if (pks.isEmpty || (hasCk && ckLo > ckHi)) return // contradiction
-    val norm = CellPlanning.normalize(path)
-    val dir = Paths.get(norm)
-    Files.createDirectories(dir)
-    val files = CellPlanning.listFiles(norm)
-    val headers = files.map(CellSource.readHeader)
-    val wt = headers.iterator.flatMap(_.chunkMaxWt.iterator)
-      .foldLeft(0L)(math.max) + 1
-    val (tag, prec, scale) = headers.headOption
-      .map(h => (h.valueTag, h.decPrec, h.decScale))
-      .getOrElse(tableSchema("value").dataType match {
-        case d: DecimalType => (ValueCodec.DecimalTag, d.precision, d.scale)
-        case dt => (ValueCodec.tagFor(dt), 0, 0)
-      })
-    val zero = ValueCodec.zeroOf(tag, prec, scale)
-    val markers: Seq[(Long, Int, String, Any, Long)] =
-      pks.toSeq.sorted.map { pk =>
-        if (!hasCk)
-          (pk, Int.MinValue, CellSource.PartitionTombstone, zero, wt)
-        else if (ckLo == ckHi)
-          (pk, ckLo, CellSource.RowTombstone, zero, wt)
-        else
-          (pk, Int.MinValue, CellSource.rangeTombstoneCol(ckLo, ckHi),
-            zero, wt)
-      }
-    val cols = markers.map(_._3).distinct.sorted.toArray
-    // Stage, then atomically claim the next flush slot — the same
-    // link(2) protocol as the batch committer, so a DELETE racing an
-    // append never overwrites a flush.
-    val staged = Files.createTempFile(dir, ".delete-", ".tmp")
-    CellSource.writeFileTyped(staged,
-      markers.sortBy(m => (m._1, m._2, m._3, m._5)), cols, tag, prec,
-      scale, CellSource.DefaultIndexEvery, CellSource.DefaultChunkRecords)
-    var next = files.map(f =>
-      CellPlanning.fileIndex(Paths.get(f).getFileName.toString))
-      .foldLeft(-1)(math.max) + 1
-    var done = false
-    while (!done) {
-      try {
-        Files.createLink(dir.resolve(f"data-$next%04d.cells"), staged)
-        Files.delete(staged)
-        done = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-      }
-      next += 1
-    }
-    CellManifest.refresh(norm)
+    CellSource.localAppend(norm, keySpec, valueType,
+      markers.map { case (k, c) => (k, c, 0L, wt, Long.MaxValue) })
   }
 
   /** SQL TRUNCATE TABLE: drop every flush, then publish one EMPTY
@@ -2048,36 +1958,16 @@ class CellTable(path: String,
     val next = files.map(f =>
       CellPlanning.fileIndex(Paths.get(f).getFileName.toString))
       .foldLeft(-1)(math.max) + 1
-    val (tag, prec, scale) = files.headOption
-      .map(CellSource.readHeader)
-      .map(h => (h.valueTag, h.decPrec, h.decScale))
-      .getOrElse {
-        // created-but-never-flushed: the `_type` marker (written at
-        // catalog CREATE) is the value-type authority — stamping the
-        // long default here would lock a binary/string table out of
-        // its own first write
-        val marker = dir.resolve("_type")
-        val dt =
-          if (Files.exists(marker))
-            ValueCodec.parseType(Files.readString(marker).trim)
-          else LongType
-        dt match {
-          case d: org.apache.spark.sql.types.DecimalType =>
-            (ValueCodec.DecimalTag, d.precision, d.scale)
-          case other => (ValueCodec.tagFor(other), 0, 0)
-        }
-      }
+    // created-but-never-flushed: the `_type` marker (written at
+    // catalog CREATE) is the value-type authority — stamping the long
+    // default here would lock a binary/string table out of its own
+    // first write
+    val valueType = CellSource.valueTypeOf(norm)
     val spec = keySpec // resolve BEFORE the files vanish
     files.foreach(f => Files.delete(Paths.get(f)))
-    val target = dir.resolve(f"data-$next%04d.cells")
-    if (spec.isDefault)
-      CellSource.writeFileTyped(target, Seq.empty, Array.empty, tag,
-        prec, scale, CellSource.DefaultIndexEvery,
-        CellSource.DefaultChunkRecords)
-    else // typed table: the empty file must carry the key layout
-      CellSource.writeFileKeyed(target, Seq.empty, spec, Array.empty,
-        tag, prec, scale, CellSource.DefaultIndexEvery,
-        CellSource.DefaultChunkRecords)
+    // a typed table's empty file must carry the key layout
+    CellSource.writeLocalFile(dir.resolve(f"data-$next%04d.cells"),
+      spec, valueType, Seq.empty)
     CellManifest.refresh(norm)
     true
   }
@@ -4116,7 +4006,7 @@ class CellBatchWrite(path: String, truncateFirst: Boolean,
       }
     }
     // Flush indices are MONOTONIC, NEVER reused — SSTable generation
-    // numbers: next is computed from the PRE-truncate listing, so a
+    // numbers: the claim starts above the PRE-truncate listing, so a
     // truncate-rewrite (compaction) publishes its generation at
     // indices ABOVE everything it replaced. A running micro-batch
     // stream (index-based offsets) then sees the compacted files as
@@ -4124,46 +4014,14 @@ class CellBatchWrite(path: String, truncateFirst: Boolean,
     // silently missing every post-compaction flush under restarted
     // numbering.
     val existing = CellPlanning.listFiles(path)
-    var next = existing.map(f =>
-      CellPlanning.fileIndex(Paths.get(f).getFileName.toString))
-      .foldLeft(-1)(math.max) + 1
     if (truncateFirst)
       existing.foreach(f => Files.delete(Paths.get(f)))
-    messages.foreach {
-      case CellCommitMessage(staged) => staged.foreach { s =>
-        // Concurrent appends race for flush slots. Files.move's
-        // no-replace check is NOT atomic (check-then-rename: two
-        // racers can both pass the check and the second rename
-        // silently overwrites). link(2) IS atomic — it fails with
-        // EEXIST if the slot is taken — so losers skip forward until
-        // they claim a free index; nothing is ever overwritten.
-        var done = false
-        while (!done) {
-          try {
-            Files.createLink(dir.resolve(f"data-$next%04d.cells"),
-              Paths.get(s))
-            Files.delete(Paths.get(s))
-            done = true
-          } catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-          }
-          next += 1
-        }
-      }
-      case _ =>
+    val staged = messages.toSeq.flatMap {
+      case CellCommitMessage(s) => s.map(Paths.get(_))
+      case _ => Nil
     }
-    // Publish the planning manifest for the new generation (appends
-    // read O(new files) headers only; see CellManifest). Best-effort:
-    // a crash before this line leaves a stale manifest, which readers
-    // detect and fall back from.
-    CellManifest.refresh(path)
-    // Write-through 2i and MV maintenance (C18f / C40): registered
-    // indexes and views absorb the flushes just published, via the
-    // same delta refresh the read-side heals use — Cassandra
-    // maintains both at write time. Unregistered ones keep the lazy
-    // heal-on-read contract.
-    CellIndex.maintainAfterWrite(path)
-    CellView.maintainAfterWrite(path)
+    CellSource.publishFlush(dir.toString, existing, staged)
+    staged.foreach(Files.deleteIfExists)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =

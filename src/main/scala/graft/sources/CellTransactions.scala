@@ -212,11 +212,11 @@ object CellTransactions {
       def reported = if (condCol.isDefined) cur else None
       if (!ok) CasResult(applied = false, reported)
       else {
-        val files = CellPlanning.listFiles(norm)
-        val wt = files.map(CellSource.readHeader).iterator
-          .flatMap(_.chunkMaxWt.iterator).foldLeft(0L)(math.max) + 1
-        appendRow(d, files, pk, ck, writeCol, writeValue, wt,
-          ttlWt.map(wt + _).getOrElse(Long.MaxValue))
+        val wt = CellSource.lwwNowWt(norm)
+        CellSource.localAppend(norm, KeySpec.Default,
+          CellSource.valueTypeOf(norm),
+          Seq((Seq[Any](pk, ck), writeCol, writeValue, wt,
+            ttlWt.map(wt + _).getOrElse(Long.MaxValue))))
         CasResult(applied = true, reported)
       }
     }
@@ -270,11 +270,9 @@ object CellTransactions {
       def reported = if (condCol.isDefined) cur else None
       if (!ok) CasResult(applied = false, reported)
       else {
-        val files = CellPlanning.listFiles(norm)
-        val wt = files.map(CellSource.readHeader).iterator
-          .flatMap(_.chunkMaxWt.iterator).foldLeft(0L)(math.max) + 1
-        appendRowKeyed(d, files, spec, keyVals.map(_._2), writeCol,
-          writeValue, wt)
+        CellSource.localAppend(norm, spec, CellSource.valueTypeOf(norm),
+          Seq((keyVals.map(_._2), writeCol, writeValue,
+            CellSource.lwwNowWt(norm), Long.MaxValue)))
         CasResult(applied = true, reported)
       }
     }
@@ -328,14 +326,12 @@ object CellTransactions {
       CellPlanning.listFiles(norm)).isDefault,
       s"conditional BATCH supports default-keyed tables " +
         s"(pk bigint, ck int); $dir is typed")
-    // validate the value tag BEFORE the partition read (casValueType
-    // itself admits only the Long/String pair the CAS machinery
-    // serves — a double/boolean/timestamp table refuses here, not
-    // from a read-path ClassCastException or a mistagged flush);
-    // since r16 the batch round carries the SAME Long/String value
-    // pair the single-statement CAS does, so text-storage tables
-    // (incl. the uuid/inet/ascii mapped grammars) ride it too
-    casValueType(d, CellPlanning.listFiles(norm))
+    // the value layout resolves BEFORE the partition read: the first
+    // header's tag, else the catalog `_type` marker — on the
+    // canonical first-write LWT (`CREATE TABLE (… v text); INSERT …
+    // IF NOT EXISTS`) a long default would refuse the text write, or
+    // stamp a bigint-tagged first file over a declared type
+    val valueType = CellSource.valueTypeOf(norm)
     withBallot(d, lockTimeoutMs, nowMs) {
       // r19: driver-local partition read — same reconcile front door
       // as the DataFrame read it replaces, zero Spark jobs (see
@@ -391,12 +387,18 @@ object CellTransactions {
           CasResult(applied = false,
             if (condCol.isDefined) cur else None)
         case None =>
-          val files = CellPlanning.listFiles(norm)
-          val wt = files.map(CellSource.readHeader).iterator
-            .flatMap(_.chunkMaxWt.iterator).foldLeft(0L)(math.max) + 1
-          appendRows(d, files,
-            writes.map { case (ck, c, v) => (pk, ck, c, v) }, wt,
-            ttlWt.map(wt + _).getOrElse(Long.MaxValue))
+          // one staged-link flush, all at the shared writetime;
+          // tombstone markers riding an expiring batch keep NO
+          // expiry, static cells (`!s:`) are data and DO carry it
+          // (C55f + C55g)
+          val wt = CellSource.lwwNowWt(norm)
+          val expiry = ttlWt.map(wt + _).getOrElse(Long.MaxValue)
+          CellSource.localAppend(norm, KeySpec.Default, valueType,
+            writes.map { case (ck, c, v) =>
+              (Seq[Any](pk, ck), c, v, wt,
+                if (c.startsWith("!") &&
+                    !c.startsWith(CellSource.StaticPrefix)) Long.MaxValue
+                else expiry) })
           CasResult(applied = true, None)
       }
     }
@@ -471,12 +473,10 @@ object CellTransactions {
           CasResult(applied = false,
             if (condCol.isDefined) cur else None)
         case None =>
-          val files = CellPlanning.listFiles(norm)
-          val wt = files.map(CellSource.readHeader).iterator
-            .flatMap(_.chunkMaxWt.iterator).foldLeft(0L)(math.max) + 1
-          appendRowsKeyed(d, files, spec,
+          val wt = CellSource.lwwNowWt(norm)
+          CellSource.localAppend(norm, spec, CellSource.valueTypeOf(norm),
             writes.map { case (ckVals, c, v) =>
-              (pkVals.map(_._2) ++ ckVals, c, v) }, wt)
+              (pkVals.map(_._2) ++ ckVals, c, v, wt, Long.MaxValue) })
           CasResult(applied = true, None)
       }
     }
@@ -519,221 +519,6 @@ object CellTransactions {
     try body finally Files.deleteIfExists(lock)
   }
 
-  /** One-row flush through the staged-link commit (the DELETE marker
-    * path's exact protocol, C38) — no Spark job for a single cell.
-    */
-  private def appendRow(dir: Path, files: Seq[String], pk: Long, ck: Int,
-      colName: String, value: Any, wt: Long,
-      expiry: Long = Long.MaxValue): Unit = {
-    val (tag, prec, scale) = casValueType(dir, files)
-    val staged = Files.createTempFile(dir, ".cas-", ".tmp")
-    CellSource.writeFileTypedE(staged,
-      Seq((pk, ck, colName, casCoerce(tag, prec, scale, value, colName), wt,
-        expiry)),
-      Array(colName), tag, prec,
-      scale, CellSource.DefaultIndexEvery, CellSource.DefaultChunkRecords)
-    publishStaged(dir, files, staged)
-  }
-
-  /** The CAS write value against the table's value tag: a tombstone
-    * marker's value slot is inert (the col name is the whole message)
-    * and takes the tag's neutral; a DATA write must already carry the
-    * right type — a mismatch is a caller bug, not data. Since C55j
-    * (r18) every storage tag coerces: the EXTERNAL value the facade's
-    * literal grammar produced becomes the file writer's INTERNAL
-    * representation (UTF8String for text, epoch micros for
-    * timestamps, unscaled Decimal for decimals).
-    */
-  private def casCoerce(tag: Int, prec: Int, scale: Int, v: Any,
-      colName: String): Any = {
-    def marker(kind: String): Any = {
-      require(colName.startsWith("!"),
-        s"CAS write of $v to a $kind-valued table")
-      ValueCodec.zeroOf(tag, prec, scale)
-    }
-    tag match {
-      case ValueCodec.LongTag => v match {
-        case l: Long => l
-        case _ => marker("bigint")
-      }
-      case ValueCodec.IntTag => v match {
-        case i: Int => i
-        case _ => marker("int")
-      }
-      case ValueCodec.DoubleTag => v match {
-        case d: Double => d
-        case _ => marker("double")
-      }
-      case ValueCodec.BoolTag => v match {
-        case b: Boolean => b
-        case _ => marker("boolean")
-      }
-      case ValueCodec.StringTag => v match {
-        // the file writer consumes Spark-INTERNAL strings
-        case s: String =>
-          org.apache.spark.unsafe.types.UTF8String.fromString(s)
-        case u: org.apache.spark.unsafe.types.UTF8String => u
-        case _ => marker("text")
-      }
-      case ValueCodec.TimestampTag => v match {
-        // internal representation: epoch MICROS (the file writer's
-        // long slot) — C55h timestamp LWT
-        case t: java.sql.Timestamp =>
-          org.apache.spark.sql.catalyst.util.DateTimeUtils
-            .fromJavaTimestamp(t)
-        case l: Long => l
-        case _ => marker("timestamp")
-      }
-      case ValueCodec.BinaryTag => v match {
-        // packed frozen<udt> blobs (C55i) / plain 0x blobs (C55j)
-        case b: Array[Byte] => b
-        case _ => marker("binary")
-      }
-      case ValueCodec.DecimalTag => v match {
-        case bd: java.math.BigDecimal =>
-          org.apache.spark.sql.types.Decimal(
-            scala.math.BigDecimal(bd), prec, scale)
-        case d: org.apache.spark.sql.types.Decimal => d
-        case _ => marker("decimal")
-      }
-      case t => throw new IllegalArgumentException(
-        s"unknown cell value tag $t")
-    }
-  }
-
-  /** Multi-row sibling of [[appendRow]]: the conditional batch's
-    * cells as ONE staged-link flush — all at the shared writetime,
-    * sorted to the file contract (pk, ck, col). Values coerce
-    * through [[casCoerce]] per cell, so text-valued batches carry
-    * Spark-internal strings and tombstone members the tag's neutral.
-    */
-  private def appendRows(dir: Path, files: Seq[String],
-      cells: Seq[(Long, Int, String, Any)], wt: Long,
-      expiry: Long = Long.MaxValue): Unit = {
-    val (tag, prec, scale) = casValueType(dir, files)
-    val rows = cells.sortBy(c => (c._1, c._2, c._3))
-      .map { case (pk, ck, c, v) =>
-        // tombstone markers riding an expiring batch keep NO expiry;
-        // static cells (`!s:`) are data and DO carry it (C55f + C55g)
-        (pk, ck, c, casCoerce(tag, prec, scale, v, c), wt,
-          if (c.startsWith("!") &&
-              !c.startsWith(CellSource.StaticPrefix)) Long.MaxValue
-          else expiry) }
-    val cols = cells.map(_._3).distinct.sorted.toArray
-    val staged = Files.createTempFile(dir, ".cas-", ".tmp")
-    CellSource.writeFileTypedE(staged, rows, cols, tag, prec, scale,
-      CellSource.DefaultIndexEvery, CellSource.DefaultChunkRecords)
-    publishStaged(dir, files, staged)
-  }
-
-  /** Keyed twin of [[appendRow]]: one CEL8 record through the keyed
-    * file writer, same staged-link publish.
-    */
-  private def appendRowKeyed(dir: Path, files: Seq[String],
-      spec: KeySpec, keyValues: Seq[Any], colName: String, value: Long,
-      wt: Long): Unit = {
-    val (tag, prec, scale) = casValueType(dir, files)
-    // the keyed CAS round writes bigint cells (its value parameter is
-    // Long); a text-valued typed table must refuse rather than hand a
-    // Long to the string codec
-    require(tag == ValueCodec.LongTag,
-      "keyed CAS writes bigint cells; table is not bigint-valued")
-    def internal(p: KeyPart, v: Any): Any =
-      KeyCodec.toInternal(p.tag, v).getOrElse(throw
-        new IllegalArgumentException(s"bad ${p.name} value $v"))
-    val pkIv = spec.pkParts.zip(keyValues.take(spec.pkParts.length))
-      .map { case (p, v) => internal(p, v) }.toArray
-    val ckIv = spec.ckParts.zip(keyValues.drop(spec.pkParts.length))
-      .map { case (p, v) => internal(p, v) }.toArray
-    val rec = CellSource.KeyedRec(KeyCodec.token(spec, pkIv), pkIv,
-      CellSource.rankOf(colName), ckIv, colName, value, wt)
-    val staged = Files.createTempFile(dir, ".cas-", ".tmp")
-    CellSource.writeFileKeyed(staged, Seq(rec), spec, Array(colName),
-      tag, prec, scale, CellSource.DefaultIndexEvery,
-      CellSource.DefaultChunkRecords)
-    publishStaged(dir, files, staged)
-  }
-
-  /** Multi-row sibling of [[appendRowKeyed]] (r18): the typed
-    * conditional batch's cells as ONE staged-link keyed flush — all
-    * at the shared writetime, sorted to the keyed file contract.
-    */
-  private def appendRowsKeyed(dir: Path, files: Seq[String],
-      spec: KeySpec, rows: Seq[(Seq[Any], String, Long)],
-      wt: Long): Unit = {
-    val (tag, prec, scale) = casValueType(dir, files)
-    require(tag == ValueCodec.LongTag,
-      "keyed CAS writes bigint cells; table is not bigint-valued")
-    def internal(p: KeyPart, v: Any): Any =
-      KeyCodec.toInternal(p.tag, v).getOrElse(throw
-        new IllegalArgumentException(s"bad ${p.name} value $v"))
-    val recs = rows.map { case (keyValues, colName, value) =>
-      val pkIv = spec.pkParts.zip(keyValues.take(spec.pkParts.length))
-        .map { case (p, v) => internal(p, v) }.toArray
-      val ckIv = spec.ckParts.zip(keyValues.drop(spec.pkParts.length))
-        .map { case (p, v) => internal(p, v) }.toArray
-      CellSource.KeyedRec(KeyCodec.token(spec, pkIv), pkIv,
-        CellSource.rankOf(colName), ckIv, colName, value, wt)
-    }.sortWith(CellSource.keyedLess(spec))
-    val cols = recs.iterator.map(_.col).toArray.distinct.sorted
-    val staged = Files.createTempFile(dir, ".cas-", ".tmp")
-    CellSource.writeFileKeyed(staged, recs, spec, cols, tag, prec,
-      scale, CellSource.DefaultIndexEvery,
-      CellSource.DefaultChunkRecords)
-    publishStaged(dir, files, staged)
-  }
-
-  /** The table's value layout for a CAS write: the first file
-    * header's tag once files exist, else the catalog `_type` marker —
-    * the SAME resolution order as [[CellSource.valueTypeOf]]. Reading
-    * the marker here matters on the canonical first-write LWT
-    * (`CREATE TABLE (… v text); INSERT … IF NOT EXISTS`): defaulting
-    * to long would refuse the text write, and worse, an integer LWT
-    * on a fresh double/boolean/timestamp table would stamp a
-    * bigint-tagged first file that permanently outranks the declared
-    * type. Non-long/text declared types are refused up front.
-    */
-  private def casValueType(dir: Path, files: Seq[String]): (Int, Int, Int) =
-    files.headOption
-      .map(CellSource.readHeader)
-      .map(h => (h.valueTag, h.decPrec, h.decScale))
-      .getOrElse {
-        val marker = dir.resolve("_type")
-        val dt =
-          if (Files.exists(marker))
-            ValueCodec.parseType(Files.readString(marker).trim)
-          else org.apache.spark.sql.types.LongType
-        // the canonical first-write LWT on a DECLARED decimal table
-        // must stamp the declared precision/scale, not (0, 0)
-        dt match {
-          case d: org.apache.spark.sql.types.DecimalType =>
-            (ValueCodec.DecimalTag, d.precision, d.scale)
-          case _ => (ValueCodec.tagFor(dt), 0, 0)
-        }
-      }
-    // every cell tag serves the CAS round since C55j (r18): the
-    // facade gates which DECLARED types are legal; this layer only
-    // coerces values to the storage layout (casCoerce)
-
-  private def publishStaged(dir: Path, files: Seq[String],
-      staged: Path): Unit = {
-    var next = files.map(f =>
-      CellPlanning.fileIndex(Paths.get(f).getFileName.toString))
-      .foldLeft(-1)(math.max) + 1
-    var done = false
-    while (!done) {
-      try {
-        Files.createLink(dir.resolve(f"data-$next%04d.cells"), staged)
-        Files.delete(staged)
-        done = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-      }
-      next += 1
-    }
-    CellManifest.refresh(dir.toString)
-  }
-
   // ---- C56: logged batch -------------------------------------------
 
   /** C56 — LOGGED BATCH (CQL `BEGIN BATCH ... APPLY BATCH`): a
@@ -767,19 +552,18 @@ object CellTransactions {
       writes.map { case (t, df) => (t, Right(df)) }, logDir,
       applyNow, withExpiry)
 
-  /** [[loggedBatch]] with per-slice choice of staging path (r19):
-    * `Left(rows)` — DEFAULT-layout long-valued cells (pk, ck, col,
-    * value, wt, absolute expiry; Long.MaxValue = never) staged
-    * DRIVER-LOCALLY through [[CellSource.localAppendCells]] (a batch
-    * statement's few cells must not cost a one-task write job);
-    * `Right(df)` — the DSv2 staging write (typed layouts, and any
-    * caller that already holds a DataFrame). Journal protocol
-    * identical either way: same staging layout, same atomic publish,
-    * same replay.
+  /** [[loggedBatch]] with per-slice choice of staging path:
+    * `Left((spec, valueType, rows))` — rows in the target's key
+    * layout, staged DRIVER-LOCALLY through [[CellSource.localAppend]]
+    * (a batch statement's few cells must not cost a one-task write
+    * job); `Right(df)` — the DSv2 staging write, for callers that
+    * already hold a DataFrame. Journal protocol identical either way:
+    * same staging layout, same atomic publish, same replay.
     */
   def loggedBatchSlices(spark: SparkSession,
-      writes: Seq[(String,
-        Either[Seq[(Long, Int, String, Long, Long, Long)], DataFrame])],
+      writes: Seq[(String, Either[(KeySpec,
+        org.apache.spark.sql.types.DataType, Seq[CellSource.LocalRow]),
+        DataFrame])],
       logDir: String,
       applyNow: Boolean = true,
       withExpiry: Boolean = false): String = {
@@ -793,15 +577,16 @@ object CellTransactions {
     Files.createDirectories(root)
     val id = f"batch-${System.nanoTime()}%016x"
     val staging = root.resolve(s".staging-$id")
+    Files.createDirectories(staging)
     writes.zipWithIndex.foreach { case ((t, slice), k) =>
       val slot = staging.resolve(f"t$k%03d").toString
       slice match {
-        case Left(rows) =>
-          Files.createDirectories(staging)
-          CellSource.localAppendCells(slot,
-            org.apache.spark.sql.types.LongType,
-            rows.map { case (pk, ck, c, v, wt, exp) =>
-              (pk, ck, c, v: Any, wt, exp) })
+        case Left((spec, valueType, rows)) =>
+          // the slot has no `_props`: stage with the target's STORAGE
+          // key names, so the slice's headers match the target's
+          CellSource.localAppend(slot,
+            CellPlanning.storageKeySpec(CellPlanning.normalize(t), spec),
+            valueType, rows)
         case Right(df) =>
           // a TYPED target's journal slice must stage with the
           // target's key layout (a fresh staging dir would otherwise
@@ -884,25 +669,8 @@ object CellTransactions {
               ((hs.valueTag, hs.decPrec, hs.decScale, hs.keySpec)),
             s"batch slice layout does not match target $target")
         }
-        var next = existing.map(f =>
-          CellPlanning.fileIndex(Paths.get(f).getFileName.toString))
-          .foldLeft(-1)(math.max) + 1
-        slotFiles.foreach { s =>
-          var done = false
-          while (!done) {
-            try {
-              Files.createLink(
-                tDir.resolve(f"data-$next%04d.cells"), Paths.get(s))
-              done = true
-            } catch {
-              case _: java.nio.file.FileAlreadyExistsException =>
-            }
-            next += 1
-          }
-        }
-        CellManifest.refresh(tNorm)
-        CellIndex.maintainAfterWrite(tNorm)
-        CellView.maintainAfterWrite(tNorm)
+        CellSource.publishFlush(tNorm, existing,
+          slotFiles.map(Paths.get(_)))
       }
     }
     deleteTree(entry)

@@ -3585,7 +3585,7 @@ class CqlSpec extends GraftSpec {
   test("executeScript resolves the table max ONCE per table") {
     // r15: the timestamp mint is HEADER-served (CellSource.maxWt) —
     // NO Spark job per statement at all. r19: the memtable FLUSH is
-    // node-local too (CellSource.localAppendCells — the driver-local
+    // node-local too (CellSource.localAppend — the driver-local
     // twin of the DSv2 commit), so a default-layout INSERT schedules
     // ZERO Spark jobs whether standalone or scripted; what this pin
     // now protects is that no job sneaks back into the statement
@@ -3697,6 +3697,66 @@ class CqlSpec extends GraftSpec {
     } finally {
       spark.conf.unset("spark.sql.catalog.zjcat")
       spark.conf.unset("spark.sql.catalog.zjcat.root")
+    }
+  }
+
+  test("CQL writes flush driver-local: zero Spark jobs on both key " +
+      "layouts for INSERT, UPDATE, DELETE and both BATCH kinds") {
+    val root = Files.createTempDirectory("cql-zjw").toString
+    spark.conf.set("spark.sql.catalog.zwcat", "graft.sources.CellCatalog")
+    spark.conf.set("spark.sql.catalog.zwcat.root", root)
+    try {
+      def cq(stmt: String) = Cql.catalogExecute(spark, stmt, "zwcat")
+      cq("CREATE KEYSPACE ks")
+      Seq(("d", "pk", "bigint", "5", "6"),
+          ("u", "user", "text", "'u-5'", "'u-6'")).foreach {
+        case (t, kc, kt, k, k2) =>
+          val tn = s"ks.$t"
+          cq(s"CREATE TABLE $tn ($kc $kt, ck int, col text, " +
+            s"value bigint, wt bigint, PRIMARY KEY (($kc), ck))")
+          def part(key: String): Set[(Int, String, Long)] =
+            cq(s"SELECT ck, col, value FROM $tn WHERE $kc = $key")
+              .collect()
+              .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
+          def step(what: String, stmt: String,
+              key: String = k)(want: Set[(Int, String, Long)]): Unit = {
+            val jobs = countJobs(cq(stmt))
+            assert(jobs === 0, s"$t $what scheduled $jobs Spark jobs")
+            assert(part(key) === want, s"$t $what")
+          }
+          step("INSERT",
+            s"INSERT INTO $tn ($kc, ck, qty) VALUES ($k, 1, 1)")(
+            Set((1, "qty", 1L)))
+          step("INSERT", s"INSERT INTO $tn ($kc, ck, qty) VALUES " +
+            s"($k2, 1, 9)", k2)(Set((1, "qty", 9L)))
+          step("UPDATE", s"UPDATE $tn SET qty = 2, price = 5 " +
+            s"WHERE $kc = $k AND ck = 2")(
+            Set((1, "qty", 1L), (2, "qty", 2L), (2, "price", 5L)))
+          step("cell DELETE",
+            s"DELETE price FROM $tn WHERE $kc = $k AND ck = 2")(
+            Set((1, "qty", 1L), (2, "qty", 2L)))
+          step("row DELETE",
+            s"DELETE FROM $tn WHERE $kc = $k AND ck = 2")(
+            Set((1, "qty", 1L)))
+          step("partition DELETE", s"DELETE FROM $tn WHERE $kc = $k2",
+            k2)(Set.empty)
+          step("logged BATCH", "BEGIN BATCH " +
+            s"INSERT INTO $tn ($kc, ck, qty) VALUES ($k, 3, 3); " +
+            s"UPDATE $tn SET price = 7 WHERE $kc = $k AND ck = 1; " +
+            s"INSERT INTO $tn ($kc, ck, qty) VALUES ($k2, 2, 8); " +
+            s"DELETE FROM $tn WHERE $kc = $k2 AND ck = 2 " +
+            "APPLY BATCH")(
+            Set((1, "qty", 1L), (1, "price", 7L), (3, "qty", 3L)))
+          assert(part(k2) === Set.empty, s"$t batch row DELETE")
+          step("UNLOGGED BATCH", "BEGIN UNLOGGED BATCH " +
+            s"INSERT INTO $tn ($kc, ck, qty) VALUES ($k, 4, 4); " +
+            s"DELETE qty FROM $tn WHERE $kc = $k AND ck = 3 " +
+            "APPLY BATCH")(
+            Set((1, "qty", 1L), (1, "price", 7L), (4, "qty", 4L)))
+      }
+    } finally {
+      spark.conf.unset("spark.sql.catalog.zwcat")
+      spark.conf.unset("spark.sql.catalog.zwcat.root")
     }
   }
 

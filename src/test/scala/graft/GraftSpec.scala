@@ -7,7 +7,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * startup under this sandbox costs seconds).
   */
 trait GraftSpec extends AnyFunSuite {
-  GraftSpec.useCheckoutTarget()
   lazy val spark: SparkSession = GraftSpec.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 }
@@ -20,16 +19,6 @@ object GraftSpec {
     */
   def targetDir(name: String): java.io.File =
     new java.io.File(sys.props("user.dir"), s"target/$name")
-
-  /** Points the engine's scratch-output knobs, which default to fixed
-    * paths, at this checkout's target/ unless they are already set.
-    */
-  def useCheckoutTarget(): Unit =
-    Seq("graft.cell.snapshots" -> "cell-snapshots",
-        "graft.serde.dir" -> "serde",
-        "graft.multiins.dir" -> "multiins").foreach { case (k, d) =>
-      if (!sys.props.contains(k)) sys.props(k) = targetDir(d).toString
-    }
 
   lazy val session: SparkSession = {
     val s = SparkSession.builder()

@@ -9,6 +9,21 @@ class RegistrySpec extends GraftSpec {
       s"dup names: ${names.diff(names.distinct)}")
   }
 
+  test("scratch-output defaults lie under the working directory") {
+    val target = java.nio.file.Paths.get(sys.props("user.dir"), "target")
+    Seq[(String, () => String)](
+      "graft.cell.snapshots" -> (() => graft.sources.CellSnapshots.root),
+      "graft.multiins.dir" -> (() => graft.queries.HiveEtl.multiInsDir),
+      "graft.serde.dir" -> (() => graft.queries.Misc.serdeDir)
+    ).foreach { case (knob, dir) =>
+      val set = sys.props.get(knob)
+      sys.props -= knob
+      try assert(java.nio.file.Paths.get(dir()).startsWith(target),
+        s"$knob default ${dir()} is not under $target")
+      finally set.foreach(sys.props(knob) = _)
+    }
+  }
+
   test("every oracle key has a query") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }

@@ -6,13 +6,16 @@ bench runs of the current code. Usage:
 
     python3 tools/refloor.py bench1.json bench2.json [...]
 
-Writes /root/repo/BASELINE_floors.json (same format: one sorted
-"name": seconds entry per declared query) and prints the old/new sums.
+Writes BASELINE_floors.json at the root of this checkout (same format:
+one sorted "name": seconds entry per declared query) and prints the
+old/new sums.
 """
 import json
+import os
 import sys
 
-REPO = "/root/repo/BASELINE_floors.json"
+REPO = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..",
+                    "BASELINE_floors.json")
 
 def per_query(path):
     with open(path) as f:

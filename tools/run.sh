@@ -13,9 +13,10 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+REPO="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 exec java $ADD_OPENS \
   -Dspark.ui.enabled=false \
   -XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing \
   -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "$REPO/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
