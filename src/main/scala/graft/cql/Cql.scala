@@ -2206,7 +2206,7 @@ object Cql {
           (r.take(nKey), r(nKey).asInstanceOf[String], r(nKey + 1), w,
             t.map(w + _).getOrElse(Long.MaxValue))
         }
-        (dir, Left((sp, org.apache.spark.sql.types.LongType, rows)))
+        (dir, (sp, org.apache.spark.sql.types.LongType, rows))
       }
     val logDir = writes.head._1 + ".batchlog"
     graft.sources.CellTransactions.loggedBatchSlices(spark, writes,

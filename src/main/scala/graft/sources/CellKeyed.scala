@@ -10,23 +10,26 @@ import org.apache.spark.unsafe.types.UTF8String
   * "PRIMARY KEY ((p1, p2), c1)"; VERDICT r6 "Next round" §1): records
   * carry a precomputed partition TOKEN followed by typed key-part
   * values, so all file/chunk pruning stays on the long token while
-  * rows surface the real key columns. The merge cursor mirrors
-  * [[CellMergeCursor]] — same LWW/counter combine, same marker state
-  * machine — with typed lexicographic key comparison in place of the
-  * fixed `(pk: Long, ck: Int)` order.
+  * rows surface the real key columns.
   *
-  * Row-at-a-time for now: typed keys are variable-width, and the
-  * declared typed queries are point/merge shapes where decode is not
-  * the bottleneck; a vectorized twin can follow the CEL5 pattern if a
-  * wide typed scan ever becomes hot.
+  * The reconcile half of this file is the ONE merge path for every key
+  * layout: [[CellKeyedStream]] also decodes default-layout records
+  * (`pk(8) ck(4) colId value wt [expiry]`) as `token = pk` (the
+  * identity token of a lone `bigint` pk), `pkVals = [pk]`,
+  * `ckVals = [ck]` and one constant rank, so the heap order over a
+  * default file is exactly its `(pk, ck, col)` order and one LWW /
+  * counter / marker / TTL state machine serves both layouts.
   */
 
-/** Per-file decoded record stream of one CEL6 sub-split: token, typed
-  * pk parts, marker rank, typed ck parts, column name, typed value,
-  * writetime.
+/** Per-file decoded record stream of one sub-split: token, typed pk
+  * parts, marker rank, typed ck parts, column name, typed value,
+  * writetime. The decoder follows the file header's layout — the
+  * same fact [[CellReaderFactory]] picks its reader by.
   */
 private[sources] final class CellKeyedStream(p: CellInputPartition) {
   private val spec = p.keySpec
+  // default-layout records carry no token or rank byte
+  private val defaultLayout = spec.isDefault
   private val cursor = new ChunkCursor(p)
   private var remaining = 0
   var token = 0L
@@ -36,7 +39,37 @@ private[sources] final class CellKeyedStream(p: CellInputPartition) {
   var colName: String = _
   var value: Any = _
   var wt = 0L
-  var expiry = Long.MaxValue // CEL11 per-record expiry
+  var expiry = Long.MaxValue // CEL10/CEL11 per-record expiry
+
+  /** One default-layout record. Key arrays are never mutated once
+    * built, so a run of records sharing a pk (or a row) shares one.
+    */
+  private def readDefault(b: java.nio.ByteBuffer): Unit = {
+    val pk = b.getLong()
+    val ck = b.getInt()
+    if (pkVals == null || pk != token) {
+      pkVals = Array[Any](pk); ckVals = Array[Any](ck)
+    } else if (ckVals(0).asInstanceOf[Int] != ck) ckVals = Array[Any](ck)
+    token = pk
+  }
+
+  private def readKeyed(b: java.nio.ByteBuffer): Unit = {
+    token = b.getLong()
+    val pk = new Array[Any](spec.pkParts.length)
+    var i = 0
+    spec.pkParts.foreach { part =>
+      pk(i) = ValueCodec.read(b, part.tag, part.prec, part.scale)
+      i += 1
+    }
+    rank = b.get()
+    val ck = new Array[Any](spec.ckParts.length)
+    var j = 0
+    spec.ckParts.foreach { part =>
+      ck(j) = ValueCodec.read(b, part.tag, part.prec, part.scale)
+      j += 1
+    }
+    pkVals = pk; ckVals = ck
+  }
 
   /** Next record with token in [lo, hi]; false (and closed) when the
     * sub-split is exhausted.
@@ -46,26 +79,12 @@ private[sources] final class CellKeyedStream(p: CellInputPartition) {
       while (remaining > 0) {
         remaining -= 1
         val b = cursor.buf
-        token = b.getLong()
-        val pk = new Array[Any](spec.pkParts.length)
-        var i = 0
-        spec.pkParts.foreach { part =>
-          pk(i) = ValueCodec.read(b, part.tag, part.prec, part.scale)
-          i += 1
-        }
-        rank = b.get()
-        val ck = new Array[Any](spec.ckParts.length)
-        var j = 0
-        spec.ckParts.foreach { part =>
-          ck(j) = ValueCodec.read(b, part.tag, part.prec, part.scale)
-          j += 1
-        }
+        if (defaultLayout) readDefault(b) else readKeyed(b)
         // colId is an UNSIGNED byte (up to 255 columns)
         colName = p.colNames(b.get() & 0xff)
         value = ValueCodec.read(b, p.valueTag, p.decPrec, p.decScale)
         wt = b.getLong()
         expiry = if (p.hasExpiry) b.getLong() else Long.MaxValue
-        pkVals = pk; ckVals = ck
         if (token >= lo && token <= hi) return true
       }
       if (!cursor.nextChunk()) { cursor.close(); return false }
@@ -288,21 +307,9 @@ class CellKeyedColumnarReader(part: CellInputPartition,
   }
 }
 
-/** K-way merge over typed keys — [[CellMergeCursor]]'s semantics
-  * (LWW / counter shard-SUM winners, tombstone + TTL marker state)
-  * with the CEL6 record order: (token, pk parts, rank, ck parts,
-  * col). Clustering-RANGE tombstones (`!delr:<lo>:<hi>`) apply only
-  * to single-`int`-clustering-key tables, where the marker's textual
-  * bounds are unambiguous; other layouts consume the marker without
-  * effect (writing one there is a modeling error, not data loss —
-  * the marker survives compaction via keepMarkers either way).
-  * Clustering-PREFIX tombstones (`!delpfx:<j>`, multi-part ck
-  * layouts) shadow every row whose first j clustering parts equal
-  * the marker row's — Cassandra's prefix-bounded RangeTombstone.
-  */
-/** What the keyed reconcile reader needs from a winner stream —
-  * implemented by the forward merge cursor and its reversing wrapper
-  * (the typed twin of [[ReconcileCursor]]).
+/** What the reconcile readers need from a winner stream — the k-way
+  * merge cursor, its reversing wrapper and its paging wrapper all
+  * provide it, over either key layout.
   */
 private[sources] trait KeyedCursor {
   def nextWinner(): Boolean
@@ -312,7 +319,7 @@ private[sources] trait KeyedCursor {
   def colName: String
   def value: Any
   def wt: Long
-  /** The winning version's CEL11 per-cell expiry (absolute ms;
+  /** The winning version's CEL10/CEL11 per-cell expiry (absolute ms;
     * Long.MaxValue = never).
     */
   def expiry: Long
@@ -327,25 +334,34 @@ private[sources] object KeyedCursor {
     val base: KeyedCursor =
       if (opts.reverse) new CellKeyedReverseCursor(part, opts)
       else new CellKeyedMergeCursor(part, opts)
-    opts.pageAfterTyped.fold(base)(pa =>
-      new CellKeyedPagedCursor(base, part, pa))
+    // the default layout's `pageAfter=pk:ck:col` is the typed cursor
+    // over its one pk and one ck part
+    val pageAfter = opts.pageAfterTyped.orElse(opts.pageAfter.map {
+      case (pk, ck, col) => (Array[Any](pk), Array[Any](ck), col)
+    })
+    pageAfter.fold(base)(pa => new CellKeyedPagedCursor(base, part, pa))
   }
+
+  /** Key layout of a reconcile partition's files (uniform: the planner
+    * refuses mixed layouts).
+    */
+  def specOf(part: CellReconcilePartition): KeySpec =
+    if (part.fileParts.isEmpty) KeySpec.Default
+    else part.fileParts(0).keySpec
 }
 
-/** C52b — typed paging wrapper (the typed twin of
-  * [[CellPagedCursor]]): drops winners at or before the cursor
-  * position in the stream's OWN order — (token, pk parts, ck parts,
-  * col) — so pages compose with tombstones, rewrites, and TTL exactly
-  * like the default layout's. The cursor's token already seeded the
-  * scan's lower bound, so only the cursor partition's (and token
+/** C52/C52b — Cassandra PAGING STATE: drops winners at or before the
+  * cursor position in the stream's OWN order — (token, pk parts, ck
+  * parts, col) — so pages compose with tombstones, rewrites, and TTL
+  * (markers at the cursor pk have already folded into shadowing state
+  * by the time winners reach here). The cursor's token already seeded
+  * the scan's lower bound, so only the cursor partition's (and token
   * collisions') already-served winners reach this skip.
   */
 private[sources] final class CellKeyedPagedCursor(inner: KeyedCursor,
     part: CellReconcilePartition,
     pa: (Array[Any], Array[Any], String)) extends KeyedCursor {
-  private val spec: KeySpec =
-    if (part.fileParts.isEmpty) KeySpec.Default
-    else part.fileParts(0).keySpec
+  private val spec = KeyedCursor.specOf(part)
   private val paToken = KeyCodec.token(spec, pa._1)
 
   private def beforeOrAtCursor: Boolean = {
@@ -384,20 +400,25 @@ private[sources] final class CellKeyedPagedCursor(inner: KeyedCursor,
   def decScale: Int = inner.decScale
 }
 
-/** Reversed clustering order over a typed (CEL6) table — the typed
-  * twin of [[CellReverseCursor]]: forward merge (markers must fold
-  * before the data they shadow), per-ck tail deque per partition, a
-  * ring of the LAST `perPartitionLimit` clustering rows when a limit
-  * is set, `reverseMaxRows` fail-fast otherwise.
+/** Reversed clustering order (C39, CQL `ORDER BY ck DESC`): winners
+  * stream out per partition in DESCENDING clustering order (columns of
+  * one row stay name-ascending). The inner merge still runs FORWARD —
+  * markers sort first and must fold into shadowing state before the
+  * data they cover — and each partition's surviving rows buffer in a
+  * per-ck tail deque. With PER PARTITION LIMIT n the deque is a RING
+  * holding only the LAST n clustering rows (CQL's reversed-limit
+  * semantics: last n, not first n — the inner cursor's own first-n
+  * counter is disabled), so memory is O(n·columns). Without a limit
+  * the buffer is one whole partition, fail-fast bounded by
+  * `reverseMaxRows` — the same wide-partition guard philosophy as
+  * `graft_collect_bounded`.
   */
 private[sources] final class CellKeyedReverseCursor(
     part: CellReconcilePartition, opts: ReconcileOptions)
     extends KeyedCursor {
   require(!opts.keepMarkers,
     "reverse reads cannot keepMarkers (compaction is forward-only)")
-  private val spec: KeySpec =
-    if (part.fileParts.isEmpty) KeySpec.Default
-    else part.fileParts(0).keySpec
+  private val spec = KeyedCursor.specOf(part)
   private val inner = new CellKeyedMergeCursor(part,
     opts.copy(perPartitionLimit = Int.MaxValue))
   private val ppl = opts.perPartitionLimit
@@ -414,6 +435,8 @@ private[sources] final class CellKeyedReverseCursor(
   var expiry = Long.MaxValue
 
   private var innerValid = inner.nextWinner()
+  // the current partition's surviving rows, one entry per ck in
+  // ASCENDING order; emitted back-to-front
   private val groups = new java.util.ArrayDeque[
     (Array[Any], scala.collection.mutable.ArrayBuffer[
       (String, Any, Long, Long)])]()
@@ -422,6 +445,7 @@ private[sources] final class CellKeyedReverseCursor(
   private var emit: Iterator[(Array[Any], String, Any, Long, Long)] =
     Iterator.empty
 
+  /** Buffer the next partition's winners; false when drained. */
   private def fillNextPk(): Boolean = {
     if (!innerValid) return false
     val cur = inner.pkVals
@@ -433,16 +457,16 @@ private[sources] final class CellKeyedReverseCursor(
         groups.addLast((inner.ckVals, scala.collection.mutable
           .ArrayBuffer.empty[(String, Any, Long, Long)]))
         if (ppl != Int.MaxValue && groups.size > ppl)
-          bufferedRows -= groups.removeFirst()._2.size
+          bufferedRows -= groups.removeFirst()._2.size // tail ring
       }
       groups.peekLast()._2 += ((inner.colName, inner.value, inner.wt,
         inner.expiry))
       bufferedRows += 1
       if (bufferedRows > maxRows)
         throw new IllegalStateException(
-          s"reverse read buffered > $maxRows rows of one partition; " +
-            "add perPartitionLimit, a ck slice, or raise " +
-            "reverseMaxRows")
+          s"reverse read buffered > $maxRows rows of partition " +
+            s"${cur.mkString(":")}; add perPartitionLimit, a ck slice, " +
+            "or raise reverseMaxRows")
       innerValid = inner.nextWinner()
     }
     outPk = cur
@@ -475,12 +499,29 @@ private[sources] final class CellKeyedReverseCursor(
   def close(): Unit = inner.close()
 }
 
+/** K-way merge core of every reconcile read: streams each file's
+  * (already key-sorted) records through a min-heap keyed on the
+  * stream order (token, pk parts, rank, ck parts, col name) and yields
+  * the LWW winner — max wt, ties to greater value under the typed
+  * codec order, matching [[graft.cassandra.CellModel.lwwMerge]] — or,
+  * in counter mode, the shard-SUM, once per key. Memory is O(open
+  * files), independent of range size. Default-layout files enter with
+  * `token = pk` and one constant rank (see [[CellKeyedStream]]).
+  *
+  * Clustering-RANGE tombstones (`!delr:<lo>:<hi>`) apply only to
+  * single-`int`-clustering-key tables (the default layout included),
+  * where the marker's textual bounds are unambiguous; other layouts
+  * consume the marker without effect (writing one there is a modeling
+  * error, not data loss — the marker survives compaction via
+  * keepMarkers either way). Clustering-PREFIX tombstones
+  * (`!delpfx:<j>`, multi-part ck layouts) shadow every row whose first
+  * j clustering parts equal the marker row's — Cassandra's
+  * prefix-bounded RangeTombstone.
+  */
 private[sources] final class CellKeyedMergeCursor(
     part: CellReconcilePartition,
     opts: ReconcileOptions = ReconcileOptions()) extends KeyedCursor {
-  private val spec: KeySpec =
-    if (part.fileParts.isEmpty) KeySpec.Default
-    else part.fileParts(0).keySpec
+  private val spec = KeyedCursor.specOf(part)
   private val queryTime = opts.queryTime
   private val keepMarkers = opts.keepMarkers
   private val gcGraceMs = opts.gcGraceMs
@@ -497,12 +538,20 @@ private[sources] final class CellKeyedMergeCursor(
     case KeyPart(_, ValueCodec.IntTag, _, _) :: Nil => true
     case _ => false
   }
+  /** Identity token (a lone `bigint` pk): equal tokens ARE equal pks. */
+  private val tokenIsPk = KeyCodec.identityToken(spec)
+  // pushed clustering slice (C37): the typed slice, or the default
+  // layout's int `[ckLower, ckUpper]` as the same slice over its ck
+  private val ckSlice: Option[CkSlice] = opts.ckSlice.orElse(
+    if (opts.ckLower == Int.MinValue && opts.ckUpper == Int.MaxValue) None
+    else Some(CkSlice(ValueCodec.IntTag, Some(opts.ckLower), loInc = true,
+      Some(opts.ckUpper), hiInc = true)))
 
   private val heap = new java.util.PriorityQueue[CellKeyedStream](
     math.max(1, part.fileParts.length),
     (a: CellKeyedStream, b: CellKeyedStream) => {
       var c = java.lang.Long.compare(a.token, b.token)
-      if (c == 0)
+      if (c == 0 && !tokenIsPk)
         c = KeyCodec.compareParts(spec.pkParts, a.pkVals, b.pkVals)
       if (c == 0) c = java.lang.Byte.compare(a.rank, b.rank)
       if (c == 0)
@@ -526,14 +575,19 @@ private[sources] final class CellKeyedMergeCursor(
   private var rank: Byte = 1
 
   private def samePk(t: CellKeyedStream): Boolean =
-    t.token == token &&
-      KeyCodec.compareParts(spec.pkParts, t.pkVals, pkVals) == 0
+    t.token == token && (tokenIsPk ||
+      KeyCodec.compareParts(spec.pkParts, t.pkVals, pkVals) == 0)
   private def sameKey(t: CellKeyedStream): Boolean =
     samePk(t) && t.rank == rank &&
       KeyCodec.compareParts(spec.ckParts, t.ckVals, ckVals) == 0 &&
       t.colName == colName
 
-  /** Raw key-winner step — LWW, or shard-SUM for counter DATA cells. */
+  /** Raw key-winner step: LWW by default; under counter mode, DATA
+    * versions are shard deltas that SUM (value = Σ shards, wt = max
+    * shard wt) while marker cells keep LWW (their values are
+    * metadata, not deltas). Markers included in the output either
+    * way.
+    */
   private def nextKeyWinner(): Boolean = {
     val s = heap.poll()
     if (s == null) return false
@@ -543,6 +597,8 @@ private[sources] final class CellKeyedMergeCursor(
       !(colName.length > 0 && colName.charAt(0) == '!')
     var bwt = s.wt; var bval = s.value; var bexp = s.expiry
     if (s.advance(part.pkLo, part.pkHi)) heap.add(s)
+    // Drain every version of this key (later versions of the same key
+    // in the same file re-enter the heap on advance).
     var top = heap.peek()
     while (top != null && sameKey(top)) {
       val t = heap.poll()
@@ -560,31 +616,72 @@ private[sources] final class CellKeyedMergeCursor(
     true
   }
 
-  // Tombstone/TTL state of the current pk / (pk, ck) — see
-  // [[CellMergeCursor.nextWinner]] for the protocol; identical here,
-  // with typed group-change detection.
+  // Tombstone/TTL state, carried across the sorted key stream (markers
+  // sort FIRST — rank 0 on typed layouts; '!' precedes every
+  // alphanumeric column name and partition markers sit at ck =
+  // Int.MinValue on the default layout): the live partition-deletion
+  // ts of the current pk, its default TTL, its range/prefix
+  // tombstones, and the per-(pk, ck) row and cell deletions. O(columns)
+  // state, reset on key-group change.
   private var havePos = false
   private var curToken = 0L
   private var curPk: Array[Any] = _
   private var curCk: Array[Any] = _
   private var pdts = Long.MinValue
-  private var ttlMs = Long.MinValue
+  private var ttlMs = Long.MinValue // partition-default TTL, if any
   private var cellDel = Map.empty[String, Long]
   private var rangeDel: List[(Int, Int, Long)] = Nil
   // active clustering-PREFIX tombstones of the current pk — (prefix
   // ck values, bound part count, ts); rank 0 completes the set before
   // any data row of the pk
   private var prefixDel: List[(Array[Any], Int, Long)] = Nil
-  private var rowDelTs = Long.MinValue
-  // PER PARTITION LIMIT — see [[CellMergeCursor]]; typed ck equality.
+  private var rowDelTs = Long.MinValue // row tombstone of current ck
+  // PER PARTITION LIMIT n (C22, CQL's clause) executed INSIDE the
+  // merge: count distinct cks that emitted a live cell for the
+  // current pk — cks stream in ascending order, so the first n
+  // counted ARE the first n clustering rows — and skip live cells of
+  // later rows. Shadowed rows never count (they emit nothing), same
+  // as the post-scan window they replace.
   private val ppLimit = opts.perPartitionLimit
   private var cksEmitted = 0
   private var lastEmitCk: Array[Any] = _
 
+  /** Expired at `queryTime`? A per-cell expiry (CEL10/11, `USING
+    * TTL`) OVERRIDES the `!ttl*` partition default — Cassandra's own
+    * precedence — and the default applies only to cells without one.
+    */
+  private def expired: Boolean = {
+    val effExp =
+      if (expiry != Long.MaxValue) expiry
+      else if (ttlMs != Long.MinValue) wt + ttlMs
+      else Long.MaxValue
+    effExp != Long.MaxValue && queryTime != Long.MaxValue &&
+      effExp < queryTime
+  }
+
+  /** Next LIVE cell: key winners minus tombstone-shadowed cells (C5
+    * semantics inside the scan): a `!del*` marker deletes every cell
+    * of its pk with wt <= deletion ts; a `!del:<col>` marker deletes
+    * that column's cells of its (pk, ck). Marker rows are consumed
+    * into state and — by default — never emitted. Tables without
+    * markers take the `colName.charAt(0) != '!'` fast path.
+    *
+    * Under `keepMarkers` (the COMPACTION read mode) the marker winner
+    * is ALSO re-emitted after being folded into state, so a
+    * compaction rewrite preserves the table's deletion/TTL metadata:
+    * the `!ttl*` config marker always survives (dropping it would
+    * silently disable all future expiry), and tombstones survive
+    * while younger than the gc-grace window (`wt >= gcNowMs -
+    * gcGraceMs`, mirroring [[graft.cassandra.CellModel.tombstoneGc]])
+    * — older ones are purged WITH the data they shadow, which this
+    * same merge pass already dropped, exactly Cassandra's
+    * gc_grace-expired tombstone drop during compaction.
+    */
   def nextWinner(): Boolean = {
     while (nextKeyWinner()) {
-      val pkChanged = !havePos || curToken != token ||
-        KeyCodec.compareParts(spec.pkParts, curPk, pkVals) != 0
+      // group-change bookkeeping first, for markers and data alike
+      val pkChanged = !havePos || curToken != token || (!tokenIsPk &&
+        KeyCodec.compareParts(spec.pkParts, curPk, pkVals) != 0)
       if (pkChanged) {
         havePos = true; curToken = token; curPk = pkVals; curCk = ckVals
         pdts = Long.MinValue; ttlMs = Long.MinValue; cellDel = Map.empty
@@ -597,60 +694,37 @@ private[sources] final class CellKeyedMergeCursor(
         rowDelTs = Long.MinValue
       }
       if (colName.length > 0 && colName.charAt(0) == '!') {
-        if (colName == CellSource.PartitionTombstone)
-          pdts = math.max(pdts, wt)
-        else if (colName == CellSource.PartitionTtl)
-          ttlMs = value match {
-            case l: java.lang.Long => l.longValue()
-            case i: java.lang.Integer => i.longValue()
-            case _ => ttlMs
+        if (colName.startsWith(CellSource.StaticPrefix)) {
+          // STATIC column cell (C15b): per-partition DATA at the
+          // marker position — EMIT the LWW winner unless shadowed by
+          // a partition tombstone or its own cell tombstone
+          // (`!del:!s:<name>`, which sorts before it) or expired.
+          // Row/range tombstones never cover it (the static row is
+          // not a clustering row), slices and PER PARTITION LIMIT
+          // never count it, and compaction always keeps survivors.
+          val covered = (pdts != Long.MinValue && wt <= pdts) ||
+            cellDel.get(colName).exists(wt <= _)
+          if (!covered && (keepMarkers || !expired)) return true
+        } else {
+          foldMarker()
+          // marker rows are metadata, not output — except under
+          // keepMarkers, where surviving markers are re-emitted so
+          // the rewrite keeps shadowing/expiring future data
+          if (keepMarkers) {
+            val isTtl = colName == CellSource.PartitionTtl
+            val inGrace = gcGraceMs == Long.MaxValue ||
+              wt >= gcNowMs - gcGraceMs
+            if (isTtl || inGrace) return true
           }
-        else if (colName == CellSource.RowTombstone)
-          rowDelTs = math.max(rowDelTs, wt)
-        else if (colName.startsWith(CellSource.RangeTombstonePrefix)) {
-          if (intCk) {
-            val body = colName.substring(
-              CellSource.RangeTombstonePrefix.length)
-            val sep = body.indexOf(':')
-            if (sep > 0) {
-              val lo = body.substring(0, sep).toInt
-              val hi = body.substring(sep + 1).toInt
-              rangeDel = (lo, hi, wt) :: rangeDel
-            }
-          }
         }
-        else if (colName.startsWith(CellSource.PrefixTombstonePrefix)) {
-          // `!delpfx:<j>` — the first j clustering parts of THIS
-          // marker row are the bound prefix; j must be a proper
-          // prefix (a full binding would be a row tombstone)
-          val j = try colName.substring(
-            CellSource.PrefixTombstonePrefix.length).toInt
-          catch { case _: NumberFormatException => 0 }
-          if (j >= 1 && j < spec.ckParts.length)
-            // copy the bound prefix rather than hold the row array:
-            // streams currently allocate per record, but this state
-            // outlives the row and must not depend on that detail
-            // (r12 buffered flushes put marker and data rows in ONE
-            // file, so same-file shadowing is now the common case)
-            prefixDel = (ckVals.take(j), j, wt) :: prefixDel
-        }
-        else if (colName.startsWith(CellSource.CellTombstonePrefix)) {
-          val target = colName.substring(
-            CellSource.CellTombstonePrefix.length)
-          cellDel = cellDel.updated(target,
-            math.max(wt, cellDel.getOrElse(target, Long.MinValue)))
-        }
-        if (keepMarkers) {
-          val isTtl = colName == CellSource.PartitionTtl
-          val inGrace = gcGraceMs == Long.MaxValue ||
-            wt >= gcNowMs - gcGraceMs
-          if (isTtl || inGrace) return true
-        }
-      } else if (opts.ckSlice.exists(s => !s.contains(ckVals(0)))) {
-        // pushed TYPED clustering slice (C37 on CEL8): out-of-slice
-        // data rows drop pre-materialization and never count toward
-        // the per-partition limit (CQL clause order); marker rows
-        // took the branch above, so shadowing state stays complete
+      } else if (ckSlice.exists(s => !s.contains(ckVals(0)))) {
+        // pushed clustering slice (C37): out-of-slice data rows drop
+        // pre-materialization and never count toward the
+        // per-partition limit (CQL: slice first, then LIMIT). Marker
+        // rows took the branch above, so shadowing state for in-slice
+        // rows is already complete. Every version of an in-slice key
+        // shares its ck, so skipping here cannot change a surviving
+        // winner.
       } else {
         val coveredByPk = pdts != Long.MinValue && wt <= pdts
         val coveredByRow = rowDelTs != Long.MinValue && wt <= rowDelTs
@@ -665,18 +739,10 @@ private[sources] final class CellKeyedMergeCursor(
           case (pfx, j, ts) => wt <= ts &&
             KeyCodec.compareParts(spec.ckParts.take(j), ckVals, pfx) == 0
         }
-        // Effective expiry: a per-cell expiry (CEL11, `USING TTL`)
-        // OVERRIDES the `!ttl*` table default — Cassandra's own
-        // precedence — and the table default applies only to cells
-        // without one.
-        val effExp =
-          if (expiry != Long.MaxValue) expiry
-          else if (ttlMs != Long.MinValue) wt + ttlMs
-          else Long.MaxValue
-        val expired = effExp != Long.MaxValue &&
-          queryTime != Long.MaxValue && effExp < queryTime
-        // C58: dropped_columns hide pre-drop cells (see the default
-        // cursor); before PER PARTITION LIMIT counting
+        // C58: a cell written before its column's drop is invisible
+        // forever (Cassandra dropped_columns); the skip sits before
+        // PER PARTITION LIMIT counting, so hidden cells never consume
+        // the row budget
         val droppedHide =
           opts.droppedColumns.nonEmpty &&
             opts.droppedColumns.get(colName).exists(wt <= _)
@@ -697,6 +763,52 @@ private[sources] final class CellKeyedMergeCursor(
     false
   }
 
+  /** Fold the current marker winner into the shadowing state. */
+  private def foldMarker(): Unit =
+    if (colName == CellSource.PartitionTombstone)
+      pdts = math.max(pdts, wt)
+    else if (colName == CellSource.PartitionTtl)
+      ttlMs = value match {
+        case l: java.lang.Long => l.longValue()
+        case i: java.lang.Integer => i.longValue()
+        case _ => ttlMs
+      }
+    else if (colName == CellSource.RowTombstone)
+      rowDelTs = math.max(rowDelTs, wt)
+    else if (colName.startsWith(CellSource.RangeTombstonePrefix)) {
+      // `!delr:<lo>:<hi>` — bounds in the name, ts in wt
+      if (intCk) {
+        val body = colName.substring(
+          CellSource.RangeTombstonePrefix.length)
+        val sep = body.indexOf(':')
+        if (sep > 0) {
+          val lo = body.substring(0, sep).toInt
+          val hi = body.substring(sep + 1).toInt
+          rangeDel = (lo, hi, wt) :: rangeDel
+        }
+      }
+    }
+    else if (colName.startsWith(CellSource.PrefixTombstonePrefix)) {
+      // `!delpfx:<j>` — the first j clustering parts of THIS marker
+      // row are the bound prefix; j must be a proper prefix (a full
+      // binding would be a row tombstone)
+      val j = try colName.substring(
+        CellSource.PrefixTombstonePrefix.length).toInt
+      catch { case _: NumberFormatException => 0 }
+      if (j >= 1 && j < spec.ckParts.length)
+        // copy the bound prefix rather than hold the row array: this
+        // state outlives the row and must not depend on how streams
+        // allocate key arrays (r12 buffered flushes put marker and
+        // data rows in ONE file, so same-file shadowing is common)
+        prefixDel = (ckVals.take(j), j, wt) :: prefixDel
+    }
+    else if (colName.startsWith(CellSource.CellTombstonePrefix)) {
+      val target = colName.substring(
+        CellSource.CellTombstonePrefix.length)
+      cellDel = cellDel.updated(target,
+        math.max(wt, cellDel.getOrElse(target, Long.MinValue)))
+    }
+
   def close(): Unit = {
     val it = heap.iterator()
     while (it.hasNext) it.next().close()
@@ -704,8 +816,8 @@ private[sources] final class CellKeyedMergeCursor(
   }
 }
 
-/** Reconciling reader over one token range of a CEL6 table — the
-  * typed twin of [[CellReconcileReader]].
+/** Row-at-a-time reconcile reader over one token range, either key
+  * layout (`columnar=false`, e.g. the driver-local read).
   */
 class CellKeyedReconcileReader(part: CellReconcilePartition,
     cols: Array[String], opts: ReconcileOptions = ReconcileOptions())
@@ -743,10 +855,10 @@ class CellKeyedReconcileReader(part: CellReconcilePartition,
   override def close(): Unit = cursor.close()
 }
 
-/** Batched output over the typed winner stream — the typed twin of
-  * [[CellReconcileColumnarReader]]: the merge is rows by nature, but
-  * batching the OUTPUT keeps downstream operators on ColumnarToRow +
-  * whole-stage codegen, same as the plain scans.
+/** Batch-emitting reconcile reader, either key layout: the merge is
+  * rows by nature, but packing winners into fixed-size ColumnarBatches
+  * keeps downstream operators on ColumnarToRow + whole-stage codegen,
+  * same as the plain scans.
   */
 class CellKeyedReconcileColumnarReader(part: CellReconcilePartition,
     cols: Array[String], opts: ReconcileOptions = ReconcileOptions())

@@ -517,27 +517,6 @@ object KeyCodec {
       h
     }
 
-  /** External (filter-value) JVM type → internal representation for
-    * one key part; None when the value's type doesn't match the tag
-    * (the filter is then simply not pushed).
-    */
-  def toInternal(tag: Int, v: Any): Option[Any] = (tag, v) match {
-    case (ValueCodec.LongTag, x: java.lang.Long) => Some(x.longValue)
-    case (ValueCodec.LongTag, x: java.lang.Integer) => Some(x.longValue)
-    case (ValueCodec.IntTag, x: java.lang.Integer) => Some(x.intValue)
-    case (ValueCodec.StringTag, x: String) =>
-      Some(UTF8String.fromString(x))
-    case (ValueCodec.StringTag, x: UTF8String) => Some(x)
-    case (ValueCodec.TimestampTag, x: java.lang.Long) =>
-      Some(x.longValue)
-    case (ValueCodec.DoubleTag, x: java.lang.Double) =>
-      Some(x.doubleValue)
-    case (ValueCodec.BoolTag, x: java.lang.Boolean) =>
-      Some(x.booleanValue)
-    case (ValueCodec.BinaryTag, x: Array[Byte]) => Some(x)
-    case _ => None
-  }
-
   /** Typed lexicographic comparison of two key-part arrays. */
   def compareParts(parts: List[KeyPart], a: Array[Any],
       b: Array[Any]): Int = {
@@ -1541,7 +1520,7 @@ object CellSource {
 
   /** TYPED-snapshot test/fixture utility (CEL8 twin of
     * [[writeSnapshot]]): key tuples carry EXTERNAL values
-    * (String/Int/Long/...), converted through [[KeyCodec.toInternal]];
+    * (String/Int/Long/...), converted through [[ValueCodec.toInternal]];
     * rows land keyedLess-sorted across `files` token-ordered files.
     */
   def writeSnapshotKeyed(dir: String, pkSyntax: String,
@@ -1553,9 +1532,9 @@ object CellSource {
       startIndex: Int = 0): Unit = {
     val spec = KeySpec.fromSyntax(pkSyntax,
       n => ValueCodec.parseType(types(n)))
-    val tag = ValueCodec.tagFor(valueType)
+    val (tag, prec, scale) = ValueCodec.layoutOf(valueType)
     def internal(p: KeyPart, v: Any): Any =
-      KeyCodec.toInternal(p.tag, v).getOrElse(throw
+      ValueCodec.toInternal(p.tag, p.prec, p.scale, v).getOrElse(throw
         new IllegalArgumentException(s"bad ${p.name} value $v"))
     val recs = rows.map { case (pk, ck, col, v, wt) =>
       val pkIv = spec.pkParts.zip(pk)
@@ -1563,7 +1542,7 @@ object CellSource {
       val ckIv = spec.ckParts.zip(ck)
         .map { case (p, x) => internal(p, x) }.toArray
       KeyedRec(KeyCodec.token(spec, pkIv), pkIv, rankOf(col), ckIv,
-        col, KeyCodec.toInternal(tag, v).getOrElse(v), wt)
+        col, ValueCodec.toInternal(tag, prec, scale, v).getOrElse(v), wt)
     }.sortWith(keyedLess(spec))
     val p = Paths.get(dir)
     Files.createDirectories(p)
@@ -1573,7 +1552,7 @@ object CellSource {
         math.max(1, (recs.size + files - 1) / files)).toSeq
     fileChunks.zipWithIndex.foreach { case (chunk, i) =>
       writeFileKeyed(p.resolve(f"data-${startIndex + i}%04d.cells"),
-        chunk, spec, colNames, tag, 0, 0, indexEvery, chunkRecords)
+        chunk, spec, colNames, tag, prec, scale, indexEvery, chunkRecords)
     }
     CellManifest.refresh(dir)
   }
@@ -2247,9 +2226,9 @@ class CellScanBuilder(path: String, subsplitRecords: Int, columnar: Boolean,
       case _ =>
     }
     val pName = spec.pkParts.head.name
-    val pTag = spec.pkParts.head.tag
+    val pPart = spec.pkParts.head
     def tokenOf(v: Any): Option[Long] =
-      KeyCodec.toInternal(pTag, v)
+      ValueCodec.toInternal(pPart.tag, pPart.prec, pPart.scale, v)
         .map(iv => KeyCodec.token(spec, Array(iv)))
     if (KeyCodec.identityToken(spec)) {
       // single long pk part: token == value, ranges push exactly as
@@ -2308,7 +2287,7 @@ class CellScanBuilder(path: String, subsplitRecords: Int, columnar: Boolean,
           Option(Seq(Array.empty[Any]))) { (acc, p) =>
           acc.flatMap { tuples =>
             val ivs = byPart(p.name).head._2
-              .map(v => KeyCodec.toInternal(p.tag, v))
+              .map(v => ValueCodec.toInternal(p.tag, p.prec, p.scale, v))
             if (ivs.exists(_.isEmpty)) None
             else if (tuples.length * ivs.length > 1024) None
             else Some(for (t <- tuples; iv <- ivs)
@@ -2325,12 +2304,12 @@ class CellScanBuilder(path: String, subsplitRecords: Int, columnar: Boolean,
     // Clustering slice on the FIRST ck part (C37 lifted to typed
     // tables): CEL8 zone maps prune chunks, the typed merge cursor
     // skips out-of-slice rows pre-materialization. Values convert
-    // through KeyCodec.toInternal; a type mismatch simply isn't
+    // through ValueCodec.toInternal; a type mismatch simply isn't
     // pushed.
     if (spec.ckParts.nonEmpty) {
       val ck = spec.ckParts.head
       def low(v: Any, inc: Boolean): Boolean =
-        KeyCodec.toInternal(ck.tag, v).exists { iv =>
+        ValueCodec.toInternal(ck.tag, ck.prec, ck.scale, v).exists { iv =>
           ckLoT match {
             case None => ckLoT = Some(iv); ckLoInc = inc; true
             case Some(cur) =>
@@ -2341,7 +2320,7 @@ class CellScanBuilder(path: String, subsplitRecords: Int, columnar: Boolean,
           }
         }
       def high(v: Any, inc: Boolean): Boolean =
-        KeyCodec.toInternal(ck.tag, v).exists { iv =>
+        ValueCodec.toInternal(ck.tag, ck.prec, ck.scale, v).exists { iv =>
           ckHiT match {
             case None => ckHiT = Some(iv); ckHiInc = inc; true
             case Some(cur) =>
@@ -2368,7 +2347,8 @@ class CellScanBuilder(path: String, subsplitRecords: Int, columnar: Boolean,
         // like any slice; rows between the values drop in the exact
         // residual Spark re-applies above the scan
         case f @ In(c, vs) if c == ck.name && vs.nonEmpty =>
-          val ivs = vs.flatMap(v => KeyCodec.toInternal(ck.tag, v))
+          val ivs = vs.flatMap(v =>
+            ValueCodec.toInternal(ck.tag, ck.prec, ck.scale, v))
           if (ivs.length == vs.length) {
             val cmp = (a: Any, b: Any) => ValueCodec.compare(ck.tag, a, b)
             val lo = ivs.reduce((a, b) => if (cmp(a, b) <= 0) a else b)
@@ -2612,9 +2592,7 @@ class CellGroupAggScan(path: String, tags: Array[String],
   // plan typed token-range partitions; a pk's versions and groups all
   // meet inside its one range either way)
   private val inner = new CellReconcileScan(path, Long.MinValue,
-    Long.MaxValue,
-    if (spec.isDefault) CellSource.Schema
-    else CellSource.schemaFor(spec, LongType),
+    Long.MaxValue, CellSource.schemaFor(spec, LongType),
     subsplitRecords, columnar = false,
     opts, None, spec, Int.MaxValue, replicas)
   override def planInputPartitions(): Array[InputPartition] =
@@ -2624,31 +2602,26 @@ class CellGroupAggScan(path: String, tags: Array[String],
 }
 
 class CellGroupAggReaderFactory(tags: Array[String],
-    opts: ReconcileOptions, limit: Int,
-    spec: KeySpec = KeySpec.Default, ckN: Int = 0)
+    opts: ReconcileOptions, limit: Int, spec: KeySpec, ckN: Int = 0)
     extends PartitionReaderFactory {
   override def createReader(
       p: InputPartition): PartitionReader[InternalRow] = {
-    val r: PartitionReader[InternalRow] =
-      if (spec.isDefault)
-        new CellGroupAggReader(
-          p.asInstanceOf[CellReconcilePartition], tags, opts, ckN)
-      else new CellKeyedGroupAggReader(
-        p.asInstanceOf[CellReconcilePartition], tags, opts, spec, ckN)
+    val r: PartitionReader[InternalRow] = new CellKeyedGroupAggReader(
+      p.asInstanceOf[CellReconcilePartition], tags, opts, spec, ckN)
     if (limit == Int.MaxValue) r else new LimitedRowReader(r, limit)
   }
 }
 
-/** C49b — the typed twin of [[CellGroupAggReader]]: folds the TYPED
-  * merge cursor's winner stream into one row per partition key
-  * (grouping on the typed pk parts — same-pk winners are contiguous
-  * in the (token, pk) stream order).
+/** C49/C49b/C49c — folds the merge cursor's winner stream into one
+  * row per partition key, or per pk plus a clustering prefix
+  * (same-group winners are contiguous in the (token, pk, ck) stream
+  * order).
   */
 private[sources] final class CellKeyedGroupAggReader(
     part: CellReconcilePartition, tags: Array[String],
     opts: ReconcileOptions, spec: KeySpec, ckN: Int = 0)
     extends PartitionReader[InternalRow] {
-  private val cursor = graft.sources.KeyedCursor.of(part, opts)
+  private val cursor = KeyedCursor.of(part, opts)
   private val ckPrefix = spec.ckParts.take(ckN)
   private var valid = cursor.nextWinner()
   private var row: InternalRow = _
@@ -2670,43 +2643,6 @@ private[sources] final class CellKeyedGroupAggReader(
       valid = cursor.nextWinner()
     }
     val keys = if (ckN == 0) pk.toSeq else pk.toSeq ++ ck.toSeq
-    row = InternalRow.fromSeq(keys ++ tags.toSeq.map {
-      case "count" => n
-      case "minwt" => mn
-      case "maxwt" => mx
-    })
-    true
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = cursor.close()
-}
-
-private[sources] final class CellGroupAggReader(
-    part: CellReconcilePartition, tags: Array[String],
-    opts: ReconcileOptions, ckN: Int = 0)
-    extends PartitionReader[InternalRow] {
-  private val cursor = ReconcileCursor.of(part, opts)
-  private var valid = cursor.nextWinner()
-  private var row: InternalRow = _
-
-  override def next(): Boolean = {
-    if (!valid) return false
-    val pk = cursor.pk
-    val ck = cursor.ck
-    var n = 0L
-    var mn = Long.MaxValue
-    var mx = Long.MinValue
-    while (valid && cursor.pk == pk && (ckN == 0 || cursor.ck == ck)) {
-      n += 1
-      if (cursor.wt < mn) mn = cursor.wt
-      if (cursor.wt > mx) mx = cursor.wt
-      valid = cursor.nextWinner()
-    }
-    // NB: Seq(pk, ck) would numerically widen ck to Long (lub of
-    // Long/Int) and break the IntegerType schema slot — box explicitly.
-    val keys: Seq[Any] =
-      if (ckN == 0) Seq(Long.box(pk)) else Seq(Long.box(pk), Int.box(ck))
     row = InternalRow.fromSeq(keys ++ tags.toSeq.map {
       case "count" => n
       case "minwt" => mn
@@ -3069,34 +3005,22 @@ class CellReconcileReaderFactory(cols: Array[String], columnar: Boolean,
     opts: ReconcileOptions = ReconcileOptions(),
     limit: Int = Int.MaxValue)
     extends PartitionReaderFactory {
-  private def keyed(p: InputPartition): Boolean =
-    p.asInstanceOf[CellReconcilePartition].fileParts.headOption
-      .exists(!_.keySpec.isDefault)
-
   override def createReader(
       p: InputPartition): PartitionReader[InternalRow] = {
-    val r: PartitionReader[InternalRow] =
-      if (keyed(p))
-        new CellKeyedReconcileReader(
-          p.asInstanceOf[CellReconcilePartition], cols, opts)
-      else new CellReconcileReader(
-        p.asInstanceOf[CellReconcilePartition], cols, opts)
+    val r: PartitionReader[InternalRow] = new CellKeyedReconcileReader(
+      p.asInstanceOf[CellReconcilePartition], cols, opts)
     if (limit == Int.MaxValue) r else new LimitedRowReader(r, limit)
   }
 
   // The merged stream is rows by nature (one winner per key out of a
   // heap), but batching the OUTPUT keeps downstream operators on the
   // ColumnarToRow + whole-stage-codegen path, same as the plain scan.
-  // Typed-key (CEL6/8) partitions batch the same way (r7 second half).
   override def supportColumnarReads(p: InputPartition): Boolean =
     columnar
   override def createColumnarReader(
       p: InputPartition): PartitionReader[ColumnarBatch] = {
     val r: PartitionReader[ColumnarBatch] =
-      if (keyed(p))
-        new CellKeyedReconcileColumnarReader(
-          p.asInstanceOf[CellReconcilePartition], cols, opts)
-      else new CellReconcileColumnarReader(
+      new CellKeyedReconcileColumnarReader(
         p.asInstanceOf[CellReconcilePartition], cols, opts)
     if (limit == Int.MaxValue) r else new LimitedBatchReader(r, limit)
   }
@@ -3114,425 +3038,6 @@ class CellReconcileReaderFactory(cols: Array[String], columnar: Boolean,
 case class CellReconcilePartition(pkLo: Long, pkHi: Long,
     fileParts: Array[CellInputPartition],
     tablePath: String = "") extends InputPartition
-
-/** What the reconcile readers need from a winner stream — the k-way
-  * merge cursor and its reversing wrapper both provide it.
-  */
-private[sources] trait ReconcileCursor {
-  def nextWinner(): Boolean
-  def close(): Unit
-  def pk: Long
-  def ck: Int
-  def colName: String
-  def value: Any
-  def wt: Long
-  /** The winning version's CEL10 per-cell expiry (absolute ms;
-    * `Long.MaxValue` = never).
-    */
-  def expiry: Long
-  def valueTag: Int
-  def decPrec: Int
-  def decScale: Int
-}
-
-private[sources] object ReconcileCursor {
-  def of(part: CellReconcilePartition,
-      opts: ReconcileOptions): ReconcileCursor = {
-    val base: ReconcileCursor =
-      if (opts.reverse) new CellReverseCursor(part, opts)
-      else new CellMergeCursor(part, opts)
-    opts.pageAfter.fold(base)(pa => new CellPagedCursor(base, pa))
-  }
-}
-
-/** C52 — paging-state skip: drops winners at-or-before the page
-  * cursor (pk, ck, col). Only the cursor PARTITION pays a skip walk
-  * (the pk doubles as the scan's pushed lower bound, so earlier
-  * partitions' files were never opened), and the skip runs on merged
-  * winners — tombstone/TTL markers at the cursor pk have already
-  * folded into shadowing state by the time rows reach here.
-  */
-private[sources] final class CellPagedCursor(inner: ReconcileCursor,
-    pa: (Long, Int, String)) extends ReconcileCursor {
-  def nextWinner(): Boolean = {
-    var v = inner.nextWinner()
-    while (v && (inner.pk < pa._1 || (inner.pk == pa._1 &&
-        (inner.ck < pa._2 ||
-          (inner.ck == pa._2 && inner.colName <= pa._3)))))
-      v = inner.nextWinner()
-    v
-  }
-  def close(): Unit = inner.close()
-  def pk: Long = inner.pk
-  def ck: Int = inner.ck
-  def colName: String = inner.colName
-  def value: Any = inner.value
-  def wt: Long = inner.wt
-  def expiry: Long = inner.expiry
-  def valueTag: Int = inner.valueTag
-  def decPrec: Int = inner.decPrec
-  def decScale: Int = inner.decScale
-}
-
-/** Reversed clustering order (C39, CQL `ORDER BY ck DESC`): winners
-  * stream out per partition in DESCENDING ck (columns of one row stay
-  * name-ascending). The inner merge still runs FORWARD — markers sort
-  * first and must fold into shadowing state before the data they
-  * cover, so reading backward would see tombstones last — and each
-  * partition's surviving rows buffer in a per-ck tail deque. With
-  * PER PARTITION LIMIT n the deque is a RING holding only the LAST n
-  * clustering rows (CQL's reversed-limit semantics: last n, not first
-  * n — the inner cursor's own first-n counter is disabled), so memory
-  * is O(n·columns). Without a limit the buffer is one whole
-  * partition, fail-fast bounded by `reverseMaxRows` — the same
-  * wide-partition guard philosophy as `graft_collect_bounded`.
-  */
-private[sources] final class CellReverseCursor(part: CellReconcilePartition,
-    opts: ReconcileOptions) extends ReconcileCursor {
-  require(!opts.keepMarkers,
-    "reverse reads cannot keepMarkers (compaction is forward-only)")
-  private val inner = new CellMergeCursor(part,
-    opts.copy(perPartitionLimit = Int.MaxValue))
-  private val ppl = opts.perPartitionLimit
-  private val maxRows = opts.reverseMaxRows
-  def valueTag: Int = inner.valueTag
-  def decPrec: Int = inner.decPrec
-  def decScale: Int = inner.decScale
-
-  var pk = 0L; var ck = 0; var colName: String = null
-  var value: Any = null; var wt = 0L
-  var expiry = Long.MaxValue
-
-  private var innerValid = inner.nextWinner()
-  // the current partition's surviving rows, one entry per ck in
-  // ASCENDING order; emitted back-to-front
-  private val groups = new java.util.ArrayDeque[
-    (Int, scala.collection.mutable.ArrayBuffer[(String, Any, Long, Long)])]()
-  private var bufferedRows = 0
-  private var outPk = 0L
-  private var emit: Iterator[(Int, String, Any, Long, Long)] =
-    Iterator.empty
-
-  /** Buffer the next partition's winners; false when drained. */
-  private def fillNextPk(): Boolean = {
-    if (!innerValid) return false
-    val cur = inner.pk
-    groups.clear(); bufferedRows = 0
-    while (innerValid && inner.pk == cur) {
-      if (groups.isEmpty || groups.peekLast()._1 != inner.ck) {
-        groups.addLast((inner.ck,
-          scala.collection.mutable.ArrayBuffer.empty))
-        if (ppl != Int.MaxValue && groups.size > ppl)
-          bufferedRows -= groups.removeFirst()._2.size // tail ring
-      }
-      groups.peekLast()._2 += ((inner.colName, inner.value, inner.wt,
-        inner.expiry))
-      bufferedRows += 1
-      if (bufferedRows > maxRows)
-        throw new IllegalStateException(
-          s"reverse read buffered > $maxRows rows of partition $cur; " +
-            "add perPartitionLimit, a ck slice, or raise reverseMaxRows")
-      innerValid = inner.nextWinner()
-    }
-    outPk = cur
-    emit = new Iterator[(Int, String, Any, Long, Long)] {
-      private val it = groups.descendingIterator()
-      private var row: Iterator[(Int, String, Any, Long, Long)] =
-        Iterator.empty
-      def hasNext: Boolean = {
-        while (!row.hasNext && it.hasNext) {
-          val (c, cells) = it.next()
-          row = cells.iterator.map(x => (c, x._1, x._2, x._3, x._4))
-        }
-        row.hasNext
-      }
-      def next(): (Int, String, Any, Long, Long) = { hasNext; row.next() }
-    }
-    true
-  }
-
-  def nextWinner(): Boolean = {
-    while (!emit.hasNext) if (!fillNextPk()) return false
-    val (c, n, v, w, e) = emit.next()
-    pk = outPk; ck = c; colName = n; value = v; wt = w; expiry = e
-    true
-  }
-
-  def close(): Unit = inner.close()
-}
-
-/** K-way merge core shared by the row and columnar reconcile
-  * readers: streams each file's (already pk,ck,col-sorted) records
-  * through a min-heap keyed on (pk, ck, col name) and yields the LWW
-  * winner — max wt, ties to greater value under the typed codec
-  * order, matching [[graft.cassandra.CellModel.lwwMerge]] — once per
-  * key. Memory is O(open files), independent of range size.
-  */
-private[sources] final class CellMergeCursor(part: CellReconcilePartition,
-    opts: ReconcileOptions = ReconcileOptions()) extends ReconcileCursor {
-  private val queryTime = opts.queryTime
-  private val keepMarkers = opts.keepMarkers
-  private val gcGraceMs = opts.gcGraceMs
-  private val gcNowMs = opts.gcNowMs
-  val valueTag: Int =
-    if (part.fileParts.isEmpty) ValueCodec.LongTag
-    else part.fileParts(0).valueTag
-  val decPrec: Int =
-    if (part.fileParts.isEmpty) 0 else part.fileParts(0).decPrec
-  val decScale: Int =
-    if (part.fileParts.isEmpty) 0 else part.fileParts(0).decScale
-
-  /** Per-file stream; each file carries its own column table, so the
-    * merge keys on the NAME, not the file-local colId byte.
-    */
-  private final class MergeStream(p: CellInputPartition) {
-    private val cursor = new ChunkCursor(p)
-    private var remaining = 0
-    var pk = 0L; var ck = 0; var colName: String = null
-    var value: Any = null; var wt = 0L
-    var exp = Long.MaxValue // CEL10 per-record expiry
-    /** Next record inside [pkLo, pkHi]; false (and closed) when done. */
-    def advance(): Boolean = {
-      while (true) {
-        while (remaining > 0) {
-          remaining -= 1
-          val b = cursor.buf
-          // colId is an UNSIGNED byte (writer allows up to 255
-          // columns); a raw signed get() would index negative for
-          // ids >= 128.
-          pk = b.getLong(); ck = b.getInt()
-          colName = p.colNames(b.get() & 0xff)
-          value = ValueCodec.read(b, p.valueTag, p.decPrec, p.decScale)
-          wt = b.getLong()
-          exp = if (p.hasExpiry) b.getLong() else Long.MaxValue
-          if (pk >= part.pkLo && pk <= part.pkHi) return true
-        }
-        if (!cursor.nextChunk()) { cursor.close(); return false }
-        remaining = cursor.chunkRecs
-      }
-      false
-    }
-    def close(): Unit = cursor.close()
-  }
-
-  private val heap = new java.util.PriorityQueue[MergeStream](
-    math.max(1, part.fileParts.length),
-    (a: MergeStream, b: MergeStream) => {
-      var c = java.lang.Long.compare(a.pk, b.pk)
-      if (c == 0) c = Integer.compare(a.ck, b.ck)
-      if (c == 0) c = a.colName.compareTo(b.colName)
-      c
-    })
-  part.fileParts.foreach { fp =>
-    val st = new MergeStream(fp)
-    if (st.advance()) heap.add(st)
-  }
-
-  // The current winner, valid after nextWinner() returns true.
-  var pk = 0L; var ck = 0; var colName: String = null
-  var value: Any = null; var wt = 0L
-  var expiry = Long.MaxValue // the WINNING version's per-cell expiry
-
-  // Tombstone state, carried across the sorted key stream (markers
-  // sort FIRST: '!' precedes every alphanumeric column name, and
-  // partition markers are written at ck = Int.MinValue): the live
-  // partition-deletion ts for the current pk, and the per-(pk, ck)
-  // cell-deletion map. O(columns) state, reset on key-group change.
-  private var havePos = false
-  private var curPk = 0L
-  private var curCk = 0
-  private var pdts = Long.MinValue
-  private var ttlMs = Long.MinValue // partition-default TTL, if any
-  private var cellDel = Map.empty[String, Long]
-  // active clustering-range tombstones of the current pk — (lo, hi,
-  // ts); markers sit at ck = Int.MinValue so the set is complete
-  // before any data row of the pk is seen
-  private var rangeDel: List[(Int, Int, Long)] = Nil
-  private var rowDelTs = Long.MinValue // row tombstone of current (pk, ck)
-  // PER PARTITION LIMIT n (C22, CQL's clause) executed INSIDE the
-  // merge: count distinct cks that emitted a live cell for the
-  // current pk — cks stream in ascending order, so the first n
-  // counted ARE the first n clustering rows — and skip live cells of
-  // later rows. Shadowed rows never count (they emit nothing), same
-  // as the post-scan window they replace.
-  private val ppLimit = opts.perPartitionLimit
-  private var cksEmitted = 0
-  private var lastEmitCk = 0
-  private var haveEmitCk = false
-
-  /** Raw key-winner step: LWW by default; under counter mode, DATA
-    * versions are shard deltas that SUM (value = Σ shards, wt = max
-    * shard wt) while marker cells keep LWW (their values are
-    * metadata, not deltas). Markers included in the output either
-    * way.
-    */
-  private def nextKeyWinner(): Boolean = {
-    val s = heap.poll()
-    if (s == null) return false
-    pk = s.pk; ck = s.ck; colName = s.colName
-    val sumShards = opts.counter &&
-      !(colName.length > 0 && colName.charAt(0) == '!')
-    var bwt = s.wt; var bval = s.value; var bexp = s.exp
-    if (s.advance()) heap.add(s)
-    // Drain every version of this key (later versions of the same key
-    // in the same file re-enter the heap on advance).
-    var top = heap.peek()
-    while (top != null && top.pk == pk && top.ck == ck &&
-        top.colName == colName) {
-      val t = heap.poll()
-      if (sumShards) {
-        bval = ValueCodec.add(valueTag, bval, t.value)
-        if (t.wt > bwt) { bwt = t.wt; bexp = t.exp }
-      } else if (t.wt > bwt || (t.wt == bwt &&
-          ValueCodec.compare(valueTag, t.value, bval) > 0)) {
-        bwt = t.wt; bval = t.value; bexp = t.exp
-      }
-      if (t.advance()) heap.add(t)
-      top = heap.peek()
-    }
-    wt = bwt; value = bval; expiry = bexp
-    true
-  }
-
-  /** Next LIVE cell: key winners minus tombstone-shadowed cells (C5
-    * semantics inside the scan): a `!del*` marker deletes every cell
-    * of its pk with wt <= deletion ts; a `!del:<col>` marker deletes
-    * that column's cells of its (pk, ck). Marker rows are consumed
-    * into state and — by default — never emitted. Tables without
-    * markers take the `colName.charAt(0) != '!'` fast path.
-    *
-    * Under `keepMarkers` (the COMPACTION read mode) the marker winner
-    * is ALSO re-emitted after being folded into state, so a
-    * compaction rewrite preserves the table's deletion/TTL metadata:
-    * the `!ttl*` config marker always survives (dropping it would
-    * silently disable all future expiry), and tombstones survive
-    * while younger than the gc-grace window (`wt >= gcNowMs -
-    * gcGraceMs`, mirroring [[graft.cassandra.CellModel.tombstoneGc]])
-    * — older ones are purged WITH the data they shadow, which this
-    * same merge pass already dropped, exactly Cassandra's
-    * gc_grace-expired tombstone drop during compaction.
-    */
-  def nextWinner(): Boolean = {
-    while (nextKeyWinner()) {
-      // group-change bookkeeping first, for markers and data alike
-      if (!havePos || pk != curPk) {
-        havePos = true; curPk = pk; curCk = ck
-        pdts = Long.MinValue; ttlMs = Long.MinValue; cellDel = Map.empty
-        rangeDel = Nil; rowDelTs = Long.MinValue
-        cksEmitted = 0; haveEmitCk = false
-      } else if (ck != curCk) {
-        curCk = ck
-        cellDel = Map.empty
-        rowDelTs = Long.MinValue
-      }
-      if (colName.length > 0 && colName.charAt(0) == '!') {
-        if (colName.startsWith(CellSource.StaticPrefix)) {
-          // STATIC column cell (C15b): per-partition DATA at the
-          // marker position — EMIT the LWW winner unless shadowed by
-          // a partition tombstone or its own cell tombstone
-          // (`!del:!s:<name>`, which sorts before it) or expired.
-          // Row/range tombstones never cover it (the static row is
-          // not a clustering row), slices and PER PARTITION LIMIT
-          // never count it, and compaction always keeps survivors.
-          val covered = (pdts != Long.MinValue && wt <= pdts) ||
-            cellDel.get(colName).exists(wt <= _)
-          val effExp =
-            if (expiry != Long.MaxValue) expiry
-            else if (ttlMs != Long.MinValue) wt + ttlMs
-            else Long.MaxValue
-          val expired = effExp != Long.MaxValue &&
-            queryTime != Long.MaxValue && effExp < queryTime
-          if (!covered && (keepMarkers || !expired)) return true
-        } else {
-        if (colName == CellSource.PartitionTombstone)
-          pdts = math.max(pdts, wt)
-        else if (colName == CellSource.PartitionTtl)
-          ttlMs = value match {
-            case l: java.lang.Long => l.longValue()
-            case i: java.lang.Integer => i.longValue()
-            case _ => ttlMs
-          }
-        else if (colName == CellSource.RowTombstone)
-          rowDelTs = math.max(rowDelTs, wt)
-        else if (colName.startsWith(CellSource.RangeTombstonePrefix)) {
-          // `!delr:<lo>:<hi>` — bounds in the name, ts in wt
-          val body = colName.substring(
-            CellSource.RangeTombstonePrefix.length)
-          val sep = body.indexOf(':')
-          if (sep > 0) {
-            val lo = body.substring(0, sep).toInt
-            val hi = body.substring(sep + 1).toInt
-            rangeDel = (lo, hi, wt) :: rangeDel
-          }
-        }
-        else if (colName.startsWith(CellSource.CellTombstonePrefix)) {
-          val target = colName.substring(
-            CellSource.CellTombstonePrefix.length)
-          cellDel = cellDel.updated(target,
-            math.max(wt, cellDel.getOrElse(target, Long.MinValue)))
-        }
-        // marker rows are metadata, not output — except under
-        // keepMarkers, where surviving markers are re-emitted so the
-        // rewrite keeps shadowing/expiring future data
-        if (keepMarkers) {
-          val isTtl = colName == CellSource.PartitionTtl
-          val inGrace = gcGraceMs == Long.MaxValue ||
-            wt >= gcNowMs - gcGraceMs
-          if (isTtl || inGrace) return true
-        }
-        }
-      } else if (ck < opts.ckLower || ck > opts.ckUpper) {
-        // pushed clustering slice (C37): out-of-slice data rows are
-        // dropped pre-materialization and never count toward the
-        // per-partition limit (CQL: slice first, then LIMIT). Marker
-        // rows took the branch above, so shadowing state for
-        // in-slice rows is already complete. Every version of an
-        // in-slice key shares its ck, so skipping here cannot change
-        // a surviving winner.
-      } else {
-        val coveredByPk = pdts != Long.MinValue && wt <= pdts
-        val coveredByRow = rowDelTs != Long.MinValue && wt <= rowDelTs
-        val coveredByCell = cellDel.get(colName).exists(wt <= _)
-        val coveredByRange = rangeDel.nonEmpty && rangeDel.exists {
-          case (lo, hi, ts) => ck >= lo && ck <= hi && wt <= ts
-        }
-        // Effective expiry: a per-cell expiry (CEL10, `USING TTL`)
-        // OVERRIDES the `!ttl*` table default — Cassandra's own
-        // precedence — and the table default applies only to cells
-        // without one.
-        val effExp =
-          if (expiry != Long.MaxValue) expiry
-          else if (ttlMs != Long.MinValue) wt + ttlMs
-          else Long.MaxValue
-        val expired = effExp != Long.MaxValue &&
-          queryTime != Long.MaxValue && effExp < queryTime
-        // C58: a cell written before its column's drop is invisible
-        // forever (Cassandra dropped_columns); the skip sits before
-        // PER PARTITION LIMIT counting, so hidden cells never consume
-        // the row budget
-        val droppedHide =
-          opts.droppedColumns.nonEmpty &&
-            opts.droppedColumns.get(colName).exists(wt <= _)
-        if (!coveredByPk && !coveredByRow && !coveredByCell &&
-            !coveredByRange && !expired && !droppedHide) {
-          if (ppLimit == Int.MaxValue) return true
-          if (haveEmitCk && ck == lastEmitCk) return true
-          if (cksEmitted < ppLimit) {
-            cksEmitted += 1; lastEmitCk = ck; haveEmitCk = true
-            return true
-          } // else: row past the partition's limit — keep draining
-        }
-      }
-    }
-    false
-  }
-
-  def close(): Unit = {
-    val it = heap.iterator()
-    while (it.hasNext) it.next().close()
-    heap.clear()
-  }
-}
 
 /** Task-side scan metrics (Spark UI / `BatchScanExec.customMetrics`):
   * the observability hooks a production engine exposes — winners
@@ -3564,128 +3069,6 @@ private[sources] final class CellsReadMetric
     extends org.apache.spark.sql.connector.metric.CustomSumMetric {
   override def name(): String = "cells_read"
   override def description(): String = "raw cell versions decoded"
-}
-
-/** Row-at-a-time reconcile reader (`columnar=false` fallback). */
-class CellReconcileReader(part: CellReconcilePartition,
-    cols: Array[String], opts: ReconcileOptions = ReconcileOptions())
-    extends PartitionReader[InternalRow] {
-  private val cursor = ReconcileCursor.of(part, opts)
-  private var winners = 0L
-  override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(CellTaskMetric("winners_emitted", winners),
-      CellTaskMetric("merge_fan_in", part.fileParts.length.toLong))
-  private val fullSchema = CellSource.schemaFor(
-    ValueCodec.dataTypeFor(cursor.valueTag, cursor.decPrec,
-      cursor.decScale))
-  private val projIdx: Array[Int] =
-    cols.map(c => if (c == "_expiry") 5 else fullSchema.fieldIndex(c))
-  private var row: InternalRow = _
-
-  override def next(): Boolean = {
-    if (!cursor.nextWinner()) return false
-    winners += 1
-    val out = new Array[Any](projIdx.length)
-    var i = 0
-    while (i < projIdx.length) {
-      out(i) = projIdx(i) match {
-        case 0 => cursor.pk
-        case 1 => cursor.ck
-        case 2 => UTF8String.fromString(cursor.colName)
-        case 3 => cursor.value
-        case 4 => cursor.wt
-        case 5 => cursor.expiry
-      }
-      i += 1
-    }
-    row = new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(out)
-    true
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = cursor.close()
-}
-
-/** Batch-emitting reconcile reader: merged winners are packed into
-  * fixed-size ColumnarBatches so the plan above the merge runs
-  * ColumnarToRow + whole-stage codegen, like the plain scan.
-  */
-class CellReconcileColumnarReader(part: CellReconcilePartition,
-    cols: Array[String], opts: ReconcileOptions = ReconcileOptions())
-    extends PartitionReader[ColumnarBatch] {
-  private val BatchRows = 4096
-  private val cursor = ReconcileCursor.of(part, opts)
-  private var winners = 0L
-  override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(CellTaskMetric("winners_emitted", winners),
-      CellTaskMetric("merge_fan_in", part.fileParts.length.toLong))
-  private val valueType: DataType =
-    ValueCodec.dataTypeFor(cursor.valueTag, cursor.decPrec,
-      cursor.decScale)
-  private val fullSchema = CellSource.schemaFor(valueType)
-  // 5 = the CEL10 pseudo-column `_expiry` (the winner's expiry)
-  private val projIdx: Array[Int] =
-    cols.map(c => if (c == "_expiry") 5 else fullSchema.fieldIndex(c))
-  private val outSchema = StructType(projIdx.map {
-    case 5 => StructField("_expiry", LongType, nullable = false)
-    case f => fullSchema(f)
-  })
-  private var batch: ColumnarBatch = _
-
-  private def putValue(vec: OnHeapColumnVector, n: Int, v: Any): Unit =
-    cursor.valueTag match {
-      case ValueCodec.LongTag | ValueCodec.TimestampTag =>
-        vec.putLong(n, v.asInstanceOf[Long])
-      case ValueCodec.IntTag => vec.putInt(n, v.asInstanceOf[Int])
-      case ValueCodec.DoubleTag => vec.putDouble(n, v.asInstanceOf[Double])
-      case ValueCodec.BoolTag => vec.putBoolean(n, v.asInstanceOf[Boolean])
-      case ValueCodec.StringTag =>
-        val b = v.asInstanceOf[UTF8String].getBytes
-        vec.putByteArray(n, b, 0, b.length)
-      case ValueCodec.BinaryTag =>
-        val b = v.asInstanceOf[Array[Byte]]
-        vec.putByteArray(n, b, 0, b.length)
-      case ValueCodec.DecimalTag =>
-        vec.putDecimal(n, v.asInstanceOf[Decimal], cursor.decPrec)
-    }
-
-  override def next(): Boolean = {
-    if (batch != null) { batch.close(); batch = null }
-    val vectors = OnHeapColumnVector.allocateColumns(BatchRows, outSchema)
-    var n = 0
-    while (n < BatchRows && cursor.nextWinner()) {
-      winners += 1
-      var i = 0
-      while (i < projIdx.length) {
-        projIdx(i) match {
-          case 0 => vectors(i).putLong(n, cursor.pk)
-          case 1 => vectors(i).putInt(n, cursor.ck)
-          case 2 =>
-            val b = cursor.colName.getBytes("UTF-8")
-            vectors(i).putByteArray(n, b, 0, b.length)
-          case 3 => putValue(vectors(i), n, cursor.value)
-          case 4 => vectors(i).putLong(n, cursor.wt)
-          case 5 => vectors(i).putLong(n, cursor.expiry)
-        }
-        i += 1
-      }
-      n += 1
-    }
-    if (n == 0) { vectors.foreach(_.close()); return false }
-    batch = new ColumnarBatch(
-      vectors.map(v => v: org.apache.spark.sql.vectorized.ColumnVector))
-    batch.setNumRows(n)
-    true
-  }
-
-  override def get(): ColumnarBatch = batch
-  override def close(): Unit = {
-    if (batch != null) batch.close()
-    cursor.close()
-  }
 }
 
 /** DSv2 batch write: each task buffers up to `rollRecords` rows,
@@ -4171,7 +3554,7 @@ private[sources] object CellRuntimeFilter {
       : Option[Set[Long]] = {
     if (spec.pkParts.length != 1) return None
     val pName = spec.pkParts.head.name
-    val pTag = spec.pkParts.head.tag
+    val pPart = spec.pkParts.head
     def isPk(e: org.apache.spark.sql.connector.expressions.Expression) =
       e match {
         case nr: org.apache.spark.sql.connector.expressions.NamedReference =>
@@ -4181,7 +3564,7 @@ private[sources] object CellRuntimeFilter {
     def tokenOf(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[Long] = e match {
       case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-        KeyCodec.toInternal(pTag, l.value)
+        ValueCodec.toInternal(pPart.tag, pPart.prec, pPart.scale, l.value)
           .map(iv => KeyCodec.token(spec, Array(iv)))
       case _ => None
     }

@@ -542,28 +542,39 @@ object CellTransactions {
     * — double-applied shard deltas double-count — and are refused,
     * as Cassandra refuses counters in logged batches.
     *
-    * Returns the batch id (journal entry name while in flight).
+    * Each DataFrame is one target's slice, collected to the driver and
+    * staged like [[loggedBatchSlices]]' rows; with `withExpiry` it
+    * carries an absolute `_expiry` column. Returns the batch id
+    * (journal entry name while in flight).
     */
   def loggedBatch(spark: SparkSession,
       writes: Seq[(String, DataFrame)], logDir: String,
       applyNow: Boolean = true,
       withExpiry: Boolean = false): String =
-    loggedBatchSlices(spark,
-      writes.map { case (t, df) => (t, Right(df)) }, logDir,
-      applyNow, withExpiry)
+    loggedBatchSlices(spark, writes.map { case (t, df) =>
+      // the slice's key columns carry the target's DECLARED key names
+      // (C51e renames); staging maps them back to storage names
+      val norm = CellPlanning.normalize(t)
+      val spec = CellPlanning.keySpecOf(norm, CellPlanning.listFiles(norm))
+      val keys = (spec.pkParts ++ spec.ckParts)
+        .map(p => df.schema.fieldIndex(p.name))
+      val Seq(c, v, w) = Seq("col", "value", "wt").map(df.schema.fieldIndex)
+      val e = if (withExpiry) df.schema.fieldIndex("_expiry") else -1
+      val rows = df.collect().toSeq.map { r =>
+        (keys.map(r.get), r.getString(c), r.get(v), r.getLong(w),
+          if (e < 0) Long.MaxValue else r.getLong(e)): CellSource.LocalRow
+      }
+      (t, (spec, df.schema("value").dataType, rows))
+    }, logDir, applyNow, withExpiry)
 
-  /** [[loggedBatch]] with per-slice choice of staging path:
-    * `Left((spec, valueType, rows))` — rows in the target's key
-    * layout, staged DRIVER-LOCALLY through [[CellSource.localAppend]]
-    * (a batch statement's few cells must not cost a one-task write
-    * job); `Right(df)` — the DSv2 staging write, for callers that
-    * already hold a DataFrame. Journal protocol identical either way:
-    * same staging layout, same atomic publish, same replay.
+  /** [[loggedBatch]] over rows already in each target's declared key
+    * layout: `(target, (spec, valueType, rows))`. Every slice is
+    * staged DRIVER-LOCALLY through [[CellSource.localAppend]] (a batch
+    * statement's few cells must not cost a one-task write job).
     */
   def loggedBatchSlices(spark: SparkSession,
-      writes: Seq[(String, Either[(KeySpec,
-        org.apache.spark.sql.types.DataType, Seq[CellSource.LocalRow]),
-        DataFrame])],
+      writes: Seq[(String, (KeySpec, org.apache.spark.sql.types.DataType,
+        Seq[CellSource.LocalRow]))],
       logDir: String,
       applyNow: Boolean = true,
       withExpiry: Boolean = false): String = {
@@ -578,35 +589,12 @@ object CellTransactions {
     val id = f"batch-${System.nanoTime()}%016x"
     val staging = root.resolve(s".staging-$id")
     Files.createDirectories(staging)
-    writes.zipWithIndex.foreach { case ((t, slice), k) =>
-      val slot = staging.resolve(f"t$k%03d").toString
-      slice match {
-        case Left((spec, valueType, rows)) =>
-          // the slot has no `_props`: stage with the target's STORAGE
-          // key names, so the slice's headers match the target's
-          CellSource.localAppend(slot,
-            CellPlanning.storageKeySpec(CellPlanning.normalize(t), spec),
-            valueType, rows)
-        case Right(df) =>
-          // a TYPED target's journal slice must stage with the
-          // target's key layout (a fresh staging dir would otherwise
-          // default); part types come from the DataFrame's own schema
-          val norm = CellPlanning.normalize(t)
-          val spec =
-            CellPlanning.keySpecOf(norm, CellPlanning.listFiles(norm))
-          var w = df.coalesce(1).write.format("graft.sources.CellSource")
-            .option("withTtl", withExpiry.toString)
-          if (!spec.isDefault) {
-            w = w.option("primaryKey", spec.syntax)
-            // schema inference on the fresh staging dir resolves part
-            // TYPES from keyType.<n> options (the write builder reads
-            // them from the input schema, but analysis runs first)
-            (spec.pkParts ++ spec.ckParts).foreach { p =>
-              w = w.option(s"keyType.${p.name}", p.dataType.simpleString)
-            }
-          }
-          w.mode("append").save(slot)
-      }
+    writes.zipWithIndex.foreach { case ((t, (spec, valueType, rows)), k) =>
+      // the slot has no `_props`: stage with the target's STORAGE key
+      // names, so the slice's headers match the target's
+      CellSource.localAppend(staging.resolve(f"t$k%03d").toString,
+        CellPlanning.storageKeySpec(CellPlanning.normalize(t), spec),
+        valueType, rows)
     }
     Files.writeString(staging.resolve("targets"),
       writes.zipWithIndex.map { case ((t, _), k) =>

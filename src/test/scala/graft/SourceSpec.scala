@@ -537,7 +537,9 @@ class SourceSpec extends GraftSpec {
   test("reconcile == lwwMerge on random multi-file layouts (property)") {
     // Random cell relations with heavy key collisions, split into
     // random flush files: the connector's k-way merge must equal the
-    // relational lwwMerge exactly, whatever the file layout.
+    // relational lwwMerge exactly, whatever the file layout — and
+    // whatever the key layout: each trial is also written as a typed
+    // `(id bigint) / (c int)` table through the same merge cursor.
     val rnd = new scala.util.Random(20260813L)
     (1 to 4).foreach { trial =>
       val nCells = 300 + rnd.nextInt(700)
@@ -565,6 +567,21 @@ class SourceSpec extends GraftSpec {
       assert(got.except(want).isEmpty && want.except(got).isEmpty,
         s"trial $trial: layout $nFlushes flushes, $nCells cells")
       assert(got.count() === want.count(), s"trial $trial dup keys")
+      val dt = Files.createTempDirectory(s"cells-prop-typed-$trial")
+        .toString
+      byFlush.values.zipWithIndex.foreach { case (flush, i) =>
+        CellSource.writeSnapshotKeyed(dt, "((id),c)",
+          Map("id" -> "bigint", "c" -> "int"),
+          flush.map(c => (Seq(c._1), Seq(c._2), c._3, c._4, c._5)),
+          startIndex = i)
+      }
+      val typed = spark.read.format("graft.sources.CellSource")
+        .option("reconcile", "true")
+        .option("subsplitRecords", "64")
+        .load(dt).toDF("pk", "ck", "col", "value", "wt")
+      assert(typed.except(want).isEmpty && want.except(typed).isEmpty,
+        s"trial $trial typed: layout $nFlushes flushes, $nCells cells")
+      assert(typed.count() === want.count(), s"trial $trial typed dups")
     }
   }
 
@@ -618,10 +635,12 @@ class SourceSpec extends GraftSpec {
 
   test("full marker protocol == reference model on random layouts (property)") {
     // Random data + random markers of EVERY kind (partition, cell,
-    // range, row tombstones and TTL), split into random flush files:
-    // the connector's carried-state merge must equal a plain-Scala
-    // reference model of the read condition, and a marker-preserving
-    // compaction must not change the answer.
+    // range, row tombstones and TTL) + static (`!s:`) cells, split
+    // into random flush files: the connector's carried-state merge
+    // must equal a plain-Scala reference model of the read condition,
+    // and a marker-preserving compaction must not change the answer —
+    // on the default layout and on a typed `(id bigint) / (c int)`
+    // table holding the same cells.
     import graft.sources.CellMaintenance
     val rnd = new scala.util.Random(20260813L)
     val qt = 500L
@@ -650,6 +669,12 @@ class SourceSpec extends GraftSpec {
         if (rnd.nextInt(3) == 0)
           markers += ((pk, Int.MinValue, "!ttl*",
             (2 + rnd.nextInt(6)).toLong * 100, 0L))
+        // static cells: per-partition data at the partition front,
+        // one or two versions each
+        (0 until rnd.nextInt(3)).foreach { _ =>
+          markers += ((pk, Int.MinValue, "!s:tag",
+            rnd.nextInt(50).toLong, ts()))
+        }
       }
       val all = data ++ markers
       // ---- reference model: LWW winner per key, then the shadowing
@@ -677,22 +702,37 @@ class SourceSpec extends GraftSpec {
           !ranges.exists { case (p, lo, hi, t) =>
             p == pk && ck >= lo && ck <= hi && wt <= t } &&
           !ttls.get(pk).exists(t => wt + t < qt)
-      }.toSet
-      // ---- random flush layout through the DSv2 writer
+      }.toSet ++
+        // a static winner survives unless its partition tombstone
+        // covers it; row and range tombstones never do, and the
+        // partition's `!ttl*` sorts after `!s:` at the front position,
+        // so it is not yet in force when the static is read
+        winners.filter(_._3.startsWith("!s:"))
+          .filter(w => !pdts.get(w._1).exists(w._5 <= _))
+      // ---- random flush layout through the DSv2 writer, on both
+      // key layouts
       val d = Files.createTempDirectory(s"cells-mprop-$trial").toString
+      val dt = Files.createTempDirectory(s"cells-mprop-typed-$trial")
+        .toString
       val nFlushes = 1 + rnd.nextInt(4)
       all.groupBy(_ => rnd.nextInt(nFlushes)).values.foreach { flush =>
-        flush.toDF("pk", "ck", "col", "value", "wt")
-          .coalesce(1).write.format("graft.sources.CellSource")
+        val df = flush.toDF("pk", "ck", "col", "value", "wt").coalesce(1)
+        df.write.format("graft.sources.CellSource")
           .mode("append").save(d)
+        typedWrite(df.toDF("id", "c", "col", "value", "wt"), dt,
+          "((id),c)", "id" -> "bigint", "c" -> "int")
       }
-      def live() = spark.read.format("graft.sources.CellSource")
+      def live(dir: String) = spark.read.format("graft.sources.CellSource")
         .option("reconcile", "true").option("queryTime", qt.toString)
         .option("subsplitRecords", "64") // force several pk ranges
-        .load(d).as[(Long, Int, String, Long, Long)].collect().toSet
-      assert(live() === expected, s"trial $trial (${all.size} rows)")
-      CellMaintenance.compact(spark, d)
-      assert(live() === expected, s"trial $trial post-compaction")
+        .load(dir).as[(Long, Int, String, Long, Long)].collect().toSet
+      Seq(d -> "default", dt -> "typed").foreach { case (dir, layout) =>
+        assert(live(dir) === expected,
+          s"trial $trial $layout (${all.size} rows)")
+        CellMaintenance.compact(spark, dir)
+        assert(live(dir) === expected,
+          s"trial $trial $layout post-compaction")
+      }
     }
   }
 
@@ -3791,6 +3831,59 @@ class SourceSpec extends GraftSpec {
         t -> Seq((1L, 0, "qty", 1L, 1L))
           .toDF("pk", "ck", "col", "value", "wt")),
         Files.createTempDirectory("cells-bclog").toString)
+    }
+  }
+
+  test("logged batch of a DataFrame into a renamed typed table stages " +
+      "storage key names and replays (C56, C51e)") {
+    import graft.sources.CellTransactions
+    val t = Files.createTempDirectory("cells-brename").toString
+    val log = Files.createTempDirectory("cells-brenamelog").toString
+    typedWrite(Seq((1L, 1, "qty", 5L, 100L))
+      .toDF("id", "c", "col", "value", "wt").coalesce(1), t,
+      "((id),c)", "id" -> "bigint", "c" -> "int")
+    // C51e: the storage name `id` is declared as `user_id`
+    Files.writeString(java.nio.file.Paths.get(t, "_props"),
+      "keyRename.id=user_id\n")
+    CellTransactions.loggedBatch(spark, Seq(
+      t -> Seq((1L, 1, "qty", 6L, 200L), (2L, 1, "qty", 7L, 200L))
+        .toDF("user_id", "c", "col", "value", "wt")), log,
+      applyNow = false)
+    assert(CellTransactions.replayBatchlog(spark, log) == 1)
+    val back = spark.read.format("graft.sources.CellSource")
+      .option("reconcile", "true").load(t)
+      .select("user_id", "value").as[(Long, Long)].collect().toSet
+    assert(back == Set((1L, 6L), (2L, 7L)))
+    assert(Files.list(java.nio.file.Paths.get(log)).count() == 0)
+  }
+
+  test("equality on a timestamp or a decimal key part is pushed as a " +
+      "point probe") {
+    val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00").getTime
+    def at(i: Int) = new java.sql.Timestamp(t0 + i * 1000L)
+    def dec(i: Int) = new java.math.BigDecimal(i).movePointLeft(2)
+    val dT = Files.createTempDirectory("cells-tskey").toString
+    val dD = Files.createTempDirectory("cells-deckey").toString
+    (0 until 4).foreach { f =>
+      val keys = (0 until 5).map(i => f * 5 + i)
+      typedWrite(keys.map(i => (at(i), 1, "qty", i.toLong, 10L))
+        .toDF("t", "c", "col", "value", "wt").coalesce(1), dT,
+        "((t),c)", "t" -> "timestamp", "c" -> "int")
+      typedWrite(keys.map(i => (dec(i), 1, "qty", i.toLong, 10L))
+        .toDF("d", "c", "col", "value", "wt")
+        .withColumn("d", col("d").cast("decimal(10,2)")).coalesce(1),
+        dD, "((d),c)", "d" -> "decimal(10,2)", "c" -> "int")
+    }
+    Seq((dT, "t", lit(at(7))), (dD, "d", lit(dec(7)))).foreach {
+      case (dir, k, v) =>
+        val all = spark.read.format("graft.sources.CellSource").load(dir)
+        val probe = all.filter(col(k) === v)
+        assert(all.rdd.getNumPartitions == 4, k)
+        assert(probe.rdd.getNumPartitions < 4, s"$k = ... not pushed")
+        assert(probe.select("value").as[Long].collect().toSeq == Seq(7L))
+        val rec = spark.read.format("graft.sources.CellSource")
+          .option("reconcile", "true").load(dir).filter(col(k) === v)
+        assert(rec.select("value").as[Long].collect().toSeq == Seq(7L))
     }
   }
 
