@@ -1,19 +1,18 @@
 package graft.sources
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Executor-side readers for the CEL6 typed-key format (SURVEY §1.1
-  * "PRIMARY KEY ((p1, p2), c1)"; VERDICT r6 "Next round" §1): records
-  * carry a precomputed partition TOKEN followed by typed key-part
+/** The reconcile read path, every key layout. CEL6 typed-key records
+  * (SURVEY §1.1 "PRIMARY KEY ((p1, p2), c1)"; VERDICT r6 "Next round"
+  * §1) carry a precomputed partition TOKEN followed by typed key-part
   * values, so all file/chunk pruning stays on the long token while
-  * rows surface the real key columns.
+  * rows surface the real key columns. The plain scan of both layouts
+  * is [[CellColumnarReader]].
   *
-  * The reconcile half of this file is the ONE merge path for every key
-  * layout: [[CellKeyedStream]] also decodes default-layout records
+  * This file is the ONE merge path for every key layout:
+  * [[CellKeyedStream]] also decodes default-layout records
   * (`pk(8) ck(4) colId value wt [expiry]`) as `token = pk` (the
   * identity token of a lone `bigint` pk), `pkVals = [pk]`,
   * `ckVals = [ck]` and one constant rank, so the heap order over a
@@ -24,12 +23,11 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Per-file decoded record stream of one sub-split: token, typed pk
   * parts, marker rank, typed ck parts, column name, typed value,
   * writetime. The decoder follows the file header's layout — the
-  * same fact [[CellReaderFactory]] picks its reader by.
+  * same fact [[CellColumnarReader]] picks its record format by.
   */
 private[sources] final class CellKeyedStream(p: CellInputPartition) {
   private val spec = p.keySpec
-  // default-layout records carry no token or rank byte
-  private val defaultLayout = spec.isDefault
+  private val defaultLayout = p.defaultLayout
   private val cursor = new ChunkCursor(p)
   private var remaining = 0
   var token = 0L
@@ -96,88 +94,12 @@ private[sources] final class CellKeyedStream(p: CellInputPartition) {
   def close(): Unit = cursor.close()
 }
 
-/** Output projection shared by the keyed readers: required column
-  * names → slots of the full `key parts ++ (col, value, wt)` row.
-  */
-private[sources] final class KeyedProjection(spec: KeySpec,
-    valueType: DataType, cols: Array[String]) {
-  private val fullSchema: StructType = CellSource.schemaFor(spec, valueType)
-  // -1 = the pseudo-column `_token` (withToken scans); -2 = the
-  // CEL11 pseudo-column `_expiry` (withTtl scans)
-  private val projIdx: Array[Int] = cols.map(c =>
-    if (c == "_token") -1
-    else if (c == "_expiry") -2
-    else fullSchema.fieldIndex(c))
-  private val nPk = spec.pkParts.length
-  private val nCk = spec.ckParts.length
-
-  def row(token: Long, pkVals: Array[Any], ckVals: Array[Any],
-      colName: String, value: Any, wt: Long,
-      expiry: Long = Long.MaxValue): InternalRow = {
-    val out = new Array[Any](projIdx.length)
-    var i = 0
-    while (i < projIdx.length) {
-      val f = projIdx(i)
-      out(i) =
-        if (f == -1) token
-        else if (f == -2) expiry
-        else if (f < nPk) pkVals(f)
-        else if (f < nPk + nCk) ckVals(f - nPk)
-        else if (f == nPk + nCk) UTF8String.fromString(colName)
-        else if (f == nPk + nCk + 1) value
-        else wt
-      i += 1
-    }
-    new GenericInternalRow(out)
-  }
-}
-
-/** Plain (non-reconciling) reader over one CEL6 sub-split — the typed
-  * twin of [[CellReader]]. `tokenLower`/`tokenUpper` are the pushed
-  * token bounds (identity for single-long keys, point/IN hashes
-  * otherwise); exactness comes from Spark's residual filter, so token
-  * collisions only cost a row, never correctness.
-  */
-class CellKeyedReader(part: CellInputPartition, tokenLower: Long,
-    tokenUpper: Long, cols: Array[String])
-    extends PartitionReader[InternalRow] {
-  private val stream = new CellKeyedStream(part)
-  // the projection serves the table-level (declared, C51e-renamed)
-  // names; the header spec keeps storage names
-  private val proj = new KeyedProjection(
-    CellPlanning.declaredSpecFor(part.file, part.keySpec),
-    ValueCodec.dataTypeFor(part.valueTag, part.decPrec, part.decScale),
-    cols)
-  private var row: InternalRow = _
-  private var cellsRead = 0L
-  override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(CellTaskMetric("cells_read", cellsRead))
-
-  override def next(): Boolean = {
-    if (!stream.advance(tokenLower, tokenUpper)) return false
-    cellsRead += 1
-    row = proj.row(stream.token, stream.pkVals, stream.ckVals,
-      stream.colName, stream.value, stream.wt, stream.expiry)
-    true
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = stream.close()
-}
-
-/** Vectorized reader over one CEL6/8 sub-split — the typed twin of
-  * [[CellColumnarReader]]: one ColumnarBatch per compression chunk,
-  * key parts decoded straight into per-part column vectors, so wide
-  * typed scans feed whole-stage codegen batches instead of
-  * row-at-a-time GenericInternalRows (at 100 TB the raw typed scan —
-  * CDC streams included — is decode-bound exactly like the untyped
-  * one was before CEL5 vectorization).
+/** Typed key-part / value → column vector slot, shared by the plain
+  * scan ([[CellColumnarReader]]) and the reconcile batch reader.
   */
 private[sources] object KeyedVec {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 
-  /** Typed key-part / value → column vector slot. */
   def put(vec: OnHeapColumnVector, n: Int, tag: Int, prec: Int,
       v: Any): Unit = tag match {
     case ValueCodec.LongTag | ValueCodec.TimestampTag =>
@@ -194,116 +116,6 @@ private[sources] object KeyedVec {
     case ValueCodec.DecimalTag =>
       vec.putDecimal(n,
         v.asInstanceOf[org.apache.spark.sql.types.Decimal], prec)
-  }
-}
-
-class CellKeyedColumnarReader(part: CellInputPartition,
-    tokenLower: Long, tokenUpper: Long, cols: Array[String])
-    extends PartitionReader[
-      org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.ColumnarBatch
-  private val spec =
-    CellPlanning.declaredSpecFor(part.file, part.keySpec)
-  private val cursor = new ChunkCursor(part)
-  private val valueType: DataType =
-    ValueCodec.dataTypeFor(part.valueTag, part.decPrec, part.decScale)
-  private val fullSchema: StructType =
-    CellSource.schemaFor(spec, valueType)
-  // -1 = `_token` (withToken scans); -2 = `_expiry` (withTtl scans)
-  private val projIdx: Array[Int] = cols.map(c =>
-    if (c == "_token") -1
-    else if (c == "_expiry") -2
-    else fullSchema.fieldIndex(c))
-  private val outSchema = StructType(projIdx.map {
-    case -1 => org.apache.spark.sql.types.StructField("_token",
-      org.apache.spark.sql.types.LongType, nullable = false)
-    case -2 => org.apache.spark.sql.types.StructField("_expiry",
-      org.apache.spark.sql.types.LongType, nullable = false)
-    case f => fullSchema(f)
-  })
-  private val colNameBytes: Array[Array[Byte]] =
-    part.colNames.map(_.getBytes("UTF-8"))
-  private val nPk = spec.pkParts.length
-  private val nCk = spec.ckParts.length
-  private val partTags: Array[Int] =
-    (spec.pkParts ++ spec.ckParts).map(_.tag).toArray
-  private val partPrec: Array[Int] =
-    (spec.pkParts ++ spec.ckParts).map(_.prec).toArray
-  private val partScale: Array[Int] =
-    (spec.pkParts ++ spec.ckParts).map(_.scale).toArray
-  private var batch: ColumnarBatch = _
-
-  private def put(vec: OnHeapColumnVector, n: Int, tag: Int, prec: Int,
-      v: Any): Unit = KeyedVec.put(vec, n, tag, prec, v)
-
-  private var cellsRead = 0L
-  override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(CellTaskMetric("cells_read", cellsRead))
-
-  override def next(): Boolean = {
-    if (batch != null) { batch.close(); batch = null }
-    var n = 0
-    var vectors: Array[OnHeapColumnVector] = null
-    val rec = new Array[Any](nPk + nCk)
-    while (n == 0) {
-      if (!cursor.nextChunk()) return false
-      val nRecs = cursor.chunkRecs
-      vectors = OnHeapColumnVector.allocateColumns(nRecs, outSchema)
-      val buf = cursor.buf
-      var r = 0
-      while (r < nRecs) {
-        val token = buf.getLong()
-        var k = 0
-        while (k < nPk) {
-          rec(k) = ValueCodec.read(buf, partTags(k), partPrec(k),
-            partScale(k))
-          k += 1
-        }
-        buf.get() // rank — marker ordering only
-        while (k < nPk + nCk) {
-          rec(k) = ValueCodec.read(buf, partTags(k), partPrec(k),
-            partScale(k))
-          k += 1
-        }
-        val colId = buf.get() & 0xff
-        val value = ValueCodec.read(buf, part.valueTag, part.decPrec,
-          part.decScale)
-        val wt = buf.getLong()
-        val exp = if (part.hasExpiry) buf.getLong() else Long.MaxValue
-        cellsRead += 1 // decoded, whether or not the token filter keeps it
-        if (token >= tokenLower && token <= tokenUpper) {
-          var i = 0
-          while (i < projIdx.length) {
-            val f = projIdx(i)
-            if (f == -1) vectors(i).putLong(n, token)
-            else if (f == -2) vectors(i).putLong(n, exp)
-            else if (f < nPk + nCk) put(vectors(i), n, partTags(f),
-              partPrec(f), rec(f))
-            else if (f == nPk + nCk) {
-              val b = colNameBytes(colId)
-              vectors(i).putByteArray(n, b, 0, b.length)
-            } else if (f == nPk + nCk + 1)
-              put(vectors(i), n, part.valueTag, part.decPrec, value)
-            else vectors(i).putLong(n, wt)
-            i += 1
-          }
-          n += 1
-        }
-        r += 1
-      }
-    }
-    batch = new ColumnarBatch(
-      vectors.map(v => v: org.apache.spark.sql.vectorized.ColumnVector))
-    batch.setNumRows(n)
-    true
-  }
-
-  override def get(): ColumnarBatch = batch
-  override def close(): Unit = {
-    if (batch != null) batch.close()
-    cursor.close()
   }
 }
 
@@ -816,45 +628,6 @@ private[sources] final class CellKeyedMergeCursor(
   }
 }
 
-/** Row-at-a-time reconcile reader over one token range, either key
-  * layout (`columnar=false`, e.g. the driver-local read).
-  */
-class CellKeyedReconcileReader(part: CellReconcilePartition,
-    cols: Array[String], opts: ReconcileOptions = ReconcileOptions())
-    extends PartitionReader[InternalRow] {
-  private val cursor = KeyedCursor.of(part, opts)
-  private val spec =
-    if (part.fileParts.isEmpty) KeySpec.Default
-    else if (part.tablePath.nonEmpty)
-      CellPlanning.applyKeyRenames(part.tablePath,
-        part.fileParts(0).keySpec)
-    else CellPlanning.declaredSpecFor(part.fileParts(0).file,
-      part.fileParts(0).keySpec)
-  private val proj = new KeyedProjection(spec,
-    ValueCodec.dataTypeFor(cursor.valueTag, cursor.decPrec,
-      cursor.decScale), cols)
-  private var row: InternalRow = _
-
-  private var winners = 0L
-  override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(CellTaskMetric("winners_emitted", winners),
-      CellTaskMetric("merge_fan_in", part.fileParts.length.toLong))
-
-  override def next(): Boolean = {
-    if (!cursor.nextWinner()) return false
-    winners += 1
-    // token arg unused: reconcile scans refuse `_token` (no single
-    // source record for a merged winner)
-    row = proj.row(0L, cursor.pkVals, cursor.ckVals, cursor.colName,
-      cursor.value, cursor.wt, cursor.expiry)
-    true
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = cursor.close()
-}
-
 /** Batch-emitting reconcile reader, either key layout: the merge is
   * rows by nature, but packing winners into fixed-size ColumnarBatches
   * keeps downstream operators on ColumnarToRow + whole-stage codegen,
@@ -903,9 +676,12 @@ class CellKeyedReconcileColumnarReader(part: CellReconcilePartition,
 
   override def next(): Boolean = {
     if (batch != null) { batch.close(); batch = null }
+    // no winner left: allocate nothing (a point read pays one batch)
+    if (!cursor.nextWinner()) return false
     val vectors = OnHeapColumnVector.allocateColumns(BatchRows, outSchema)
     var n = 0
-    while (n < BatchRows && cursor.nextWinner()) {
+    var more = true
+    while (more) {
       winners += 1
       var i = 0
       while (i < projIdx.length) {
@@ -927,8 +703,8 @@ class CellKeyedReconcileColumnarReader(part: CellReconcilePartition,
         i += 1
       }
       n += 1
+      more = n < BatchRows && cursor.nextWinner()
     }
-    if (n == 0) { vectors.foreach(_.close()); return false }
     batch = new ColumnarBatch(
       vectors.map(v => v: org.apache.spark.sql.vectorized.ColumnVector))
     batch.setNumRows(n)

@@ -1107,7 +1107,6 @@ object CellMaintenance {
       rollRecords: Int = CellSource.DefaultRollRecords)
       : Option[(Int, Seq[String], Seq[String])] = {
     import java.nio.file.{Files => JFiles, Paths => JPaths}
-    val norm = CellPlanning.normalize(dir)
     val files = CellPlanning.listFiles(dir)
     val lv = levels(dir)
     def nameOf(f: String) = JPaths.get(f).getFileName.toString
@@ -1126,39 +1125,10 @@ object CellMaintenance {
 
     def mergeInto(target: Int, inputs: Seq[String])
         : Option[(Int, Seq[String], Seq[String])] = {
-      val counter = tableProp(dir, "counter").exists(_.toBoolean)
-      val spec = CellPlanning.keySpecOf(norm, files)
-      val scratch = JFiles.createTempDirectory(JPaths.get(norm), ".lvl-")
-      try {
-        inputs.foreach { f =>
-          val p = JPaths.get(f)
-          JFiles.createLink(scratch.resolve(p.getFileName), p)
-        }
-        spark.read.format("graft.sources.CellSource")
-          .option("reconcile", "true")
-          .option("keepMarkers", "true")
-          .option("withTtl", spec.isDefault.toString)
-          .option("counter", counter.toString)
-          .load(scratch.toString)
-          .write.format("graft.sources.CellSource")
-          .option("withTtl", spec.isDefault.toString)
-          .option("rollRecords", rollRecords.toString)
-          .mode("append").save(dir) // publish BEFORE deleting inputs
-        val outputs = CellPlanning.listFiles(dir)
-          .filterNot(files.contains)
-        inputs.foreach(f => JFiles.delete(JPaths.get(f)))
-        CellManifest.refresh(dir)
-        writeLevels(dir,
-          (lv -- inputs.map(nameOf)) ++
-            outputs.map(f => nameOf(f) -> target))
-        Some((target, inputs.map(nameOf), outputs.map(nameOf)))
-      } finally {
-        scala.util.Using.resource(JFiles.list(scratch)) { s =>
-          scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator())
-            .asScala.toList.foreach(JFiles.deleteIfExists(_))
-        }
-        JFiles.deleteIfExists(scratch)
-      }
+      val outputs = rewriteSubset(spark, dir, inputs, rollRecords)
+      writeLevels(dir,
+        (lv -- inputs.map(nameOf)) ++ outputs.map(f => nameOf(f) -> target))
+      Some((target, inputs.map(nameOf), outputs.map(nameOf)))
     }
 
     val l0 = byLevel.getOrElse(0, Nil)
@@ -1207,12 +1177,8 @@ object CellMaintenance {
       minThreshold: Int = 2,
       rollRecords: Int = CellSource.DefaultRollRecords)
       : Seq[(Long, Int)] = {
-    import java.nio.file.{Files => JFiles, Paths => JPaths}
     require(windowMs > 0, s"windowMs must be positive: $windowMs")
-    val norm = CellPlanning.normalize(dir)
     val files = CellPlanning.listFiles(dir)
-    val spec = CellPlanning.keySpecOf(norm, files)
-    val counter = tableProp(dir, "counter").exists(_.toBoolean)
     val byWindow = files.map { f =>
       val h = CellSource.readHeader(f)
       val maxWt =
@@ -1223,33 +1189,8 @@ object CellMaintenance {
       val tier = wf.map(_._2)
       if (tier.size < minThreshold) None
       else {
-        val scratch =
-          JFiles.createTempDirectory(JPaths.get(norm), ".twin-")
-        try {
-          tier.foreach { f =>
-            val p = JPaths.get(f)
-            JFiles.createLink(scratch.resolve(p.getFileName), p)
-          }
-          spark.read.format("graft.sources.CellSource")
-            .option("reconcile", "true")
-            .option("keepMarkers", "true")
-            .option("withTtl", spec.isDefault.toString)
-            .option("counter", counter.toString)
-            .load(scratch.toString)
-            .write.format("graft.sources.CellSource")
-            .option("withTtl", spec.isDefault.toString)
-            .option("rollRecords", rollRecords.toString)
-            .mode("append").save(dir) // publish BEFORE deleting inputs
-          tier.foreach(f => JFiles.delete(JPaths.get(f)))
-          CellManifest.refresh(dir)
-          Some((w, tier.size))
-        } finally {
-          scala.util.Using.resource(JFiles.list(scratch)) { s =>
-            scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator())
-              .asScala.toList.foreach(JFiles.deleteIfExists(_))
-          }
-          JFiles.deleteIfExists(scratch)
-        }
+        rewriteSubset(spark, dir, tier, rollRecords)
+        Some((w, tier.size))
       }
     }
   }
@@ -1259,7 +1200,6 @@ object CellMaintenance {
       rollRecords: Int = CellSource.DefaultRollRecords)
       : Option[(Seq[String], Int, Int)] = {
     import java.nio.file.{Files => JFiles, Paths => JPaths}
-    val norm = CellPlanning.normalize(dir)
     val files = CellPlanning.listFiles(dir)
     val sized = files.map(f => (f, JFiles.size(JPaths.get(f))))
       .sortBy(_._2)
@@ -1278,29 +1218,46 @@ object CellMaintenance {
     val eligible = buckets.filter(_.size >= minThreshold)
     if (eligible.isEmpty) return None
     val tier = eligible.maxBy(_.size).map(_._1).toSeq
+    rewriteSubset(spark, dir, tier, rollRecords)
+    Some((tier.map(f => JPaths.get(f).getFileName.toString),
+      files.size, CellPlanning.listFiles(dir).size))
+  }
+
+  /** The subset rewrite of [[compactTiered]], [[compactLeveled]] and
+    * [[compactWindows]]: a same-filesystem scratch view of `inputs`
+    * (hard links, no copies) merges through the reconcile scan with
+    * markers kept and no gc purge — a subset can't see table-wide
+    * shadowing — and is appended to the table; only then are the
+    * inputs deleted and the manifest refreshed. `_expiry` is read and
+    * written on both key layouts, as in [[compact]], so per-cell TTLs
+    * (CEL10 default / CEL11 typed) survive. Returns the new files.
+    */
+  private def rewriteSubset(spark: SparkSession, dir: String,
+      inputs: Seq[String], rollRecords: Int): Seq[String] = {
+    import java.nio.file.{Files => JFiles, Paths => JPaths}
+    val before = CellPlanning.listFiles(dir).toSet
     val counter = tableProp(dir, "counter").exists(_.toBoolean)
-    // Same-filesystem scratch view of the tier (links, no copies).
-    val scratch = JFiles.createTempDirectory(JPaths.get(norm), ".tier-")
+    val scratch = JFiles.createTempDirectory(
+      JPaths.get(CellPlanning.normalize(dir)), ".subset-")
     try {
-      tier.foreach { f =>
+      inputs.foreach { f =>
         val p = JPaths.get(f)
         JFiles.createLink(scratch.resolve(p.getFileName), p)
       }
-      val tierSpec = CellPlanning.keySpecOf(norm, files)
       spark.read.format("graft.sources.CellSource")
         .option("reconcile", "true")
         .option("keepMarkers", "true")
-        .option("withTtl", tierSpec.isDefault.toString) // CEL10 expiry
+        .option("withTtl", "true")
         .option("counter", counter.toString)
         .load(scratch.toString)
         .write.format("graft.sources.CellSource")
-        .option("withTtl", tierSpec.isDefault.toString)
+        .option("withTtl", "true")
         .option("rollRecords", rollRecords.toString)
         .mode("append").save(dir) // publish BEFORE deleting inputs
-      tier.foreach(f => JFiles.delete(JPaths.get(f)))
+      val outputs = CellPlanning.listFiles(dir).filterNot(before)
+      inputs.foreach(f => JFiles.delete(JPaths.get(f)))
       CellManifest.refresh(dir)
-      Some((tier.map(f => JPaths.get(f).getFileName.toString),
-        files.size, CellPlanning.listFiles(dir).size))
+      outputs
     } finally {
       scala.util.Using.resource(JFiles.list(scratch)) { s =>
         scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator())

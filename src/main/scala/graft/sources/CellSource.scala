@@ -815,8 +815,9 @@ object CellSource {
     * `queryTime` act as they do there) → `filters` pushed into the
     * builder exactly as Spark pushes them (pk point/IN pruning, typed
     * point probes, clustering slices, the strictCql guard) → the
-    * reconcile merge readers — only executed on the driver thread
-    * instead of through the scheduler, row-at-a-time. Any key layout:
+    * reconcile merge reader — only executed on the driver thread
+    * instead of through the scheduler, walking each winner batch's
+    * rows. Any key layout:
     * filters name columns as the served schema does (declared names,
     * renames applied).
     *
@@ -835,7 +836,6 @@ object CellSource {
     options.foreach { case (k, v) => omap.put(k, v) }
     omap.put("path", norm)
     omap.put("reconcile", "true")
-    omap.put("columnar", "false")
     val cis = new CaseInsensitiveStringMap(omap)
     val provider = new CellSource
     val schema = provider.inferSchema(cis)
@@ -865,14 +865,18 @@ object CellSource {
     val rf = batch.createReaderFactory()
     val out = Vector.newBuilder[org.apache.spark.sql.Row]
     batch.planInputPartitions().foreach { p =>
-      val r = rf.createReader(p)
+      val r = rf.createColumnarReader(p)
       try {
         while (r.next()) {
-          val row = conv(r.get().copy())
-            .asInstanceOf[org.apache.spark.sql.Row]
-          if (exact.forall { case (i, vs) =>
-              vs.exists(same(row.get(i), _)) })
-            out += row
+          val it = r.get().rowIterator()
+          while (it.hasNext) {
+            // batch rows are views over reused vectors: copy first
+            val row = conv(it.next().copy())
+              .asInstanceOf[org.apache.spark.sql.Row]
+            if (exact.forall { case (i, vs) =>
+                vs.exists(same(row.get(i), _)) })
+              out += row
+          }
         }
       } finally r.close()
     }
@@ -1592,7 +1596,7 @@ class CellTable(path: String,
   }
 
   /** Catalog-persisted table properties act as per-table DEFAULTS for
-    * scan/write options (`reconcile`, `subsplitRecords`, `columnar`,
+    * scan/write options (`reconcile`, `subsplitRecords`,
     * `rollRecords`) — e.g. `CREATE TABLE ... TBLPROPERTIES
     * ('reconcile'='true')` defines a table every reader sees
     * reconciled; per-read/write options still win.
@@ -1695,7 +1699,6 @@ class CellTable(path: String,
       }
     new CellScanBuilder(path,
       o.getInt("subsplitRecords", CellSource.DefaultSubsplitRecords),
-      o.getBoolean("columnar", true),
       o.getBoolean("reconcile", false),
       tableSchema,
       ReconcileOptions(
@@ -1952,7 +1955,7 @@ class CellTable(path: String,
   }
 }
 
-class CellScanBuilder(path: String, subsplitRecords: Int, columnar: Boolean,
+class CellScanBuilder(path: String, subsplitRecords: Int,
     reconcile: Boolean = false,
     tableSchema: StructType = CellSource.Schema,
     reconcileOpts: ReconcileOptions = ReconcileOptions(),
@@ -2552,14 +2555,14 @@ class CellScanBuilder(path: String, subsplitRecords: Int, columnar: Boolean,
           spec, replicas, limit, ckN)
       case None =>
         new CellReconcileScan(path, pkLower, pkUpper, required,
-          subsplitRecords, columnar,
+          subsplitRecords,
           reconcileOpts.copy(ckLower = ckLower, ckUpper = ckUpper,
             ckSlice = typedSlice),
           pkSet, spec, limit, replicas)
     }
     case None =>
       new CellScan(path, pkLower, pkUpper, wtLower, wtUpper, required,
-        subsplitRecords, columnar, pkSet, spec, limit, ckLower, ckUpper,
+        subsplitRecords, pkSet, spec, limit, ckLower, ckUpper,
         typedSlice, vLower, vUpper)
   }
 }
@@ -2593,8 +2596,7 @@ class CellGroupAggScan(path: String, tags: Array[String],
   // meet inside its one range either way)
   private val inner = new CellReconcileScan(path, Long.MinValue,
     Long.MaxValue, CellSource.schemaFor(spec, LongType),
-    subsplitRecords, columnar = false,
-    opts, None, spec, Int.MaxValue, replicas)
+    subsplitRecords, opts, None, spec, Int.MaxValue, replicas)
   override def planInputPartitions(): Array[InputPartition] =
     inner.planInputPartitions()
   override def createReaderFactory(): PartitionReaderFactory =
@@ -2805,7 +2807,6 @@ case class ReconcileOptions(
 
 class CellReconcileScan(path: String, pkLower: Long, pkUpper: Long,
     required: StructType, subsplitRecords: Int,
-    columnar: Boolean = true,
     opts: ReconcileOptions = ReconcileOptions(),
     staticPks: Option[Set[Long]] = None,
     spec: KeySpec = KeySpec.Default,
@@ -2987,8 +2988,7 @@ class CellReconcileScan(path: String, pkLower: Long, pkUpper: Long,
     }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new CellReconcileReaderFactory(required.fieldNames, columnar, opts,
-      limit)
+    new CellReconcileReaderFactory(required.fieldNames, opts, limit)
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
@@ -3001,22 +3001,19 @@ class CellReconcileScan(path: String, pkLower: Long, pkUpper: Long,
         "reconciled generation.")
 }
 
-class CellReconcileReaderFactory(cols: Array[String], columnar: Boolean,
+class CellReconcileReaderFactory(cols: Array[String],
     opts: ReconcileOptions = ReconcileOptions(),
     limit: Int = Int.MaxValue)
     extends PartitionReaderFactory {
   override def createReader(
-      p: InputPartition): PartitionReader[InternalRow] = {
-    val r: PartitionReader[InternalRow] = new CellKeyedReconcileReader(
-      p.asInstanceOf[CellReconcilePartition], cols, opts)
-    if (limit == Int.MaxValue) r else new LimitedRowReader(r, limit)
-  }
+      p: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException(
+      "reconcile cell scans are columnar only")
 
   // The merged stream is rows by nature (one winner per key out of a
   // heap), but batching the OUTPUT keeps downstream operators on the
   // ColumnarToRow + whole-stage-codegen path, same as the plain scan.
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    columnar
+  override def supportColumnarReads(p: InputPartition): Boolean = true
   override def createColumnarReader(
       p: InputPartition): PartitionReader[ColumnarBatch] = {
     val r: PartitionReader[ColumnarBatch] =
@@ -3585,7 +3582,7 @@ private[sources] object CellRuntimeFilter {
 
 class CellScan(path: String, pkLower: Long, pkUpper: Long,
     wtLower: Long, wtUpper: Long, required: StructType,
-    subsplitRecords: Int, columnar: Boolean,
+    subsplitRecords: Int,
     staticPks: Option[Set[Long]] = None,
     spec: KeySpec = KeySpec.Default,
     limit: Int = Int.MaxValue,
@@ -3727,8 +3724,7 @@ class CellScan(path: String, pkLower: Long, pkUpper: Long,
     }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new CellReaderFactory(pkLower, pkUpper, required.fieldNames, columnar,
-      limit)
+    new CellReaderFactory(pkLower, pkUpper, required.fieldNames, limit)
 
   /** The streaming face of the same scan: new `.cells` files appearing
     * in the snapshot directory are the stream (the Cassandra-flush/CDC
@@ -3741,7 +3737,7 @@ class CellScan(path: String, pkLower: Long, pkUpper: Long,
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new CellMicroBatchStream(path, pkLower, pkUpper, wtLower, wtUpper,
-      required, subsplitRecords, columnar)
+      required, subsplitRecords)
 }
 
 /** Driver-side planning shared by the batch scan and the micro-batch
@@ -4095,7 +4091,7 @@ class CellOffset(val n: Int)
 
 class CellMicroBatchStream(path: String, pkLower: Long, pkUpper: Long,
     wtLower: Long, wtUpper: Long, required: StructType,
-    subsplitRecords: Int, columnar: Boolean)
+    subsplitRecords: Int)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
 
@@ -4144,7 +4140,7 @@ class CellMicroBatchStream(path: String, pkLower: Long, pkUpper: Long,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new CellReaderFactory(pkLower, pkUpper, required.fieldNames, columnar)
+    new CellReaderFactory(pkLower, pkUpper, required.fieldNames)
 }
 
 /** One sub-split: a set of compression chunks of `file` in offset
@@ -4158,7 +4154,13 @@ case class CellInputPartition(file: String, dataStart: Long,
     valueTag: Int, decPrec: Int, decScale: Int,
     colNames: Array[String],
     keySpec: KeySpec = KeySpec.Default,
-    hasExpiry: Boolean = false) extends InputPartition
+    hasExpiry: Boolean = false) extends InputPartition {
+  /** Default-layout records (`pk(8) ck(4) colId value wt [expiry]`)
+    * carry no token or rank byte; every other header spec writes
+    * `token(8) pk parts rank ck parts colId value wt [expiry]`.
+    */
+  def defaultLayout: Boolean = keySpec.isDefault
+}
 
 /** Pushed-LIMIT caps (see [[CellScanBuilder.pushLimit]]): stop a
   * partition reader after n output rows — later chunks are never even
@@ -4197,32 +4199,26 @@ private[sources] final class LimitedBatchReader(
 }
 
 
-class CellReaderFactory(pkLower: Long, pkUpper: Long,
-    cols: Array[String], columnar: Boolean,
+/** Plain-scan reader factory, either key layout: one vectorized
+  * [[CellColumnarReader]] per sub-split. There is no row-at-a-time
+  * reader; a caller that wants rows walks each batch's `rowIterator()`.
+  */
+class CellReaderFactory(tokenLower: Long, tokenUpper: Long,
+    cols: Array[String],
     limit: Int = Int.MaxValue) extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = p.asInstanceOf[CellInputPartition]
-    val r =
-      if (part.keySpec.isDefault)
-        new CellReader(part, pkLower, pkUpper, cols)
-      else new CellKeyedReader(part, pkLower, pkUpper, cols)
-    if (limit == Int.MaxValue) r else new LimitedRowReader(r, limit)
-  }
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException(
+      "plain cell scans are columnar only")
 
   // Vectorized path (the parquet VectorizedColumnReader analogue): one
   // ColumnarBatch per compression chunk, filled straight from the
   // inflated record buffer — Spark plans ColumnarToRow on top and the
   // scan feeds whole-stage codegen batches instead of row-at-a-time.
-  // Typed-key (CEL6/8) partitions vectorize too (r7 second half).
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    columnar
+  override def supportColumnarReads(p: InputPartition): Boolean = true
   override def createColumnarReader(
       p: InputPartition): PartitionReader[ColumnarBatch] = {
-    val part = p.asInstanceOf[CellInputPartition]
-    val r =
-      if (part.keySpec.isDefault)
-        new CellColumnarReader(part, pkLower, pkUpper, cols)
-      else new CellKeyedColumnarReader(part, pkLower, pkUpper, cols)
+    val r = new CellColumnarReader(p.asInstanceOf[CellInputPartition],
+      tokenLower, tokenUpper, cols)
     if (limit == Int.MaxValue) r else new LimitedBatchReader(r, limit)
   }
 }
@@ -4267,65 +4263,28 @@ private[sources] final class ChunkCursor(part: CellInputPartition) {
   def close(): Unit = in.close()
 }
 
-/** C3 — row-at-a-time reader (`columnar=false` fallback and the
-  * reference semantics for the columnar parity test).
+/** C3 — the plain (non-reconciling) scan over one sub-split, either
+  * key layout: each compression chunk becomes one ColumnarBatch (chunk
+  * sizing already bounds batch memory), with the token range filter
+  * applied during the fill so downstream operators see only surviving
+  * rows. The record format follows the partition's header key spec:
+  *  - default layout, `pk(8) ck(4) colId value wt [expiry]`: the token
+  *    is `pk` itself (the identity token [[CellKeyedStream]] uses), and
+  *    `pk`/`ck` stay primitive locals on their way into the vectors;
+  *  - typed layouts (CEL6/8), `token(8) pk parts rank ck parts colId
+  *    value wt [expiry]`: key parts decode straight into per-part
+  *    column vectors. `tokenLower`/`tokenUpper` are the pushed token
+  *    bounds (identity for single-long keys, point/IN hashes
+  *    otherwise); exactness comes from Spark's residual filter, so
+  *    token collisions only cost a row, never correctness.
   */
-class CellReader(part: CellInputPartition, pkLower: Long, pkUpper: Long,
-    cols: Array[String]) extends PartitionReader[InternalRow] {
-  private val cursor = new ChunkCursor(part)
-  private var remainingInChunk = 0
-  private var row: InternalRow = _
-  private var cellsRead = 0L
-  override def currentMetricsValues()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(CellTaskMetric("cells_read", cellsRead))
-  // Column projection is precomputed once: projIdx(i) = field of the
-  // full record to emit at output position i (C9); 5 = the CEL10
-  // pseudo-column `_expiry` (withTtl scans).
-  private val projIdx: Array[Int] =
-    cols.map(c =>
-      if (c == "_expiry") 5 else CellSource.Schema.fieldIndex(c))
-  private val colUtf8: Array[UTF8String] =
-    part.colNames.map(UTF8String.fromString)
-
-  override def next(): Boolean = {
-    while (true) {
-      if (remainingInChunk == 0) {
-        if (!cursor.nextChunk()) return false
-        remainingInChunk = cursor.chunkRecs
-      }
-      while (remainingInChunk > 0) {
-        remainingInChunk -= 1
-        val buf = cursor.buf
-        val pk = buf.getLong(); val ck = buf.getInt()
-        val colId = buf.get() & 0xff // unsigned: ids 128-255 are legal
-        val value = ValueCodec.read(buf, part.valueTag, part.decPrec,
-          part.decScale)
-        val wt = buf.getLong()
-        val exp = if (part.hasExpiry) buf.getLong() else Long.MaxValue
-        cellsRead += 1 // decoded, whether or not the pk filter keeps it
-        if (pk >= pkLower && pk <= pkUpper) {
-          val full = Array[Any](pk, ck, colUtf8(colId), value, wt, exp)
-          row = InternalRow.fromSeq(projIdx.map(full).toSeq)
-          return true
-        }
-      }
-    }
-    false
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = cursor.close()
-}
-
-/** Vectorized twin of [[CellReader]]: each compression chunk becomes
-  * one ColumnarBatch (chunk sizing already bounds batch memory), with
-  * the pk range filter applied during the fill so downstream operators
-  * see only surviving rows.
-  */
-class CellColumnarReader(part: CellInputPartition, pkLower: Long,
-    pkUpper: Long, cols: Array[String])
+class CellColumnarReader(part: CellInputPartition, tokenLower: Long,
+    tokenUpper: Long, cols: Array[String])
     extends PartitionReader[ColumnarBatch] {
+  private val defaultLayout = part.defaultLayout
+  // the table-level (declared, C51e-renamed) names serve the schema;
+  // the header spec keeps storage names
+  private val spec = CellPlanning.declaredSpecFor(part.file, part.keySpec)
   private val cursor = new ChunkCursor(part)
   private var cellsRead = 0L
   override def currentMetricsValues()
@@ -4333,42 +4292,35 @@ class CellColumnarReader(part: CellInputPartition, pkLower: Long,
     Array(CellTaskMetric("cells_read", cellsRead))
   private val valueType: DataType =
     ValueCodec.dataTypeFor(part.valueTag, part.decPrec, part.decScale)
-  private val fullSchema = CellSource.schemaFor(valueType)
-  // 5 = the CEL10 pseudo-column `_expiry` (withTtl scans)
-  private val projIdx: Array[Int] =
-    cols.map(c => if (c == "_expiry") 5 else fullSchema.fieldIndex(c))
+  private val fullSchema = CellSource.schemaFor(spec, valueType)
+  // -1 = `_token` (withToken scans); -2 = `_expiry` (withTtl scans)
+  private val projIdx: Array[Int] = cols.map(c =>
+    if (c == "_token") -1
+    else if (c == "_expiry") -2
+    else fullSchema.fieldIndex(c))
   private val outSchema = StructType(projIdx.map {
-    case 5 => StructField("_expiry", LongType, nullable = false)
+    case -1 => StructField("_token", LongType, nullable = false)
+    case -2 => StructField("_expiry", LongType, nullable = false)
     case f => fullSchema(f)
   })
   private val colNameBytes: Array[Array[Byte]] =
     part.colNames.map(_.getBytes("UTF-8"))
+  private val nPk = spec.pkParts.length
+  private val nKey = nPk + spec.ckParts.length
+  private val partTags: Array[Int] =
+    (spec.pkParts ++ spec.ckParts).map(_.tag).toArray
+  private val partPrec: Array[Int] =
+    (spec.pkParts ++ spec.ckParts).map(_.prec).toArray
+  private val partScale: Array[Int] =
+    (spec.pkParts ++ spec.ckParts).map(_.scale).toArray
   private var batch: ColumnarBatch = _
-
-  /** Typed value → column vector slot (CEL5 value union). */
-  private def putValue(vec: OnHeapColumnVector, n: Int, v: Any): Unit =
-    part.valueTag match {
-      case ValueCodec.LongTag | ValueCodec.TimestampTag =>
-        vec.putLong(n, v.asInstanceOf[Long])
-      case ValueCodec.IntTag => vec.putInt(n, v.asInstanceOf[Int])
-      case ValueCodec.DoubleTag => vec.putDouble(n, v.asInstanceOf[Double])
-      case ValueCodec.BoolTag =>
-        vec.putBoolean(n, v.asInstanceOf[Boolean])
-      case ValueCodec.StringTag =>
-        val b = v.asInstanceOf[UTF8String].getBytes
-        vec.putByteArray(n, b, 0, b.length)
-      case ValueCodec.BinaryTag =>
-        val b = v.asInstanceOf[Array[Byte]]
-        vec.putByteArray(n, b, 0, b.length)
-      case ValueCodec.DecimalTag =>
-        vec.putDecimal(n, v.asInstanceOf[Decimal], part.decPrec)
-    }
 
   override def next(): Boolean = {
     if (batch != null) { batch.close(); batch = null }
     var n = 0
     var vectors: Array[OnHeapColumnVector] = null
-    // Chunks can be entirely pk-filtered away; keep going until a
+    val rec = new Array[Any](nKey) // typed key parts
+    // Chunks can be entirely token-filtered away; keep going until a
     // batch has rows (or the sub-split is exhausted) so Spark never
     // sees a 0-row batch.
     while (n == 0) {
@@ -4378,26 +4330,46 @@ class CellColumnarReader(part: CellInputPartition, pkLower: Long,
       val buf = cursor.buf
       var r = 0
       while (r < nRecs) {
-        val pk = buf.getLong(); val ck = buf.getInt()
+        val token = buf.getLong() // the default layout's pk
+        var ck = 0 // the default layout's ck
+        if (defaultLayout) ck = buf.getInt()
+        else {
+          var k = 0
+          while (k < nPk) {
+            rec(k) = ValueCodec.read(buf, partTags(k), partPrec(k),
+              partScale(k))
+            k += 1
+          }
+          buf.get() // rank — marker ordering only
+          while (k < nKey) {
+            rec(k) = ValueCodec.read(buf, partTags(k), partPrec(k),
+              partScale(k))
+            k += 1
+          }
+        }
         val colId = buf.get() & 0xff // unsigned: ids 128-255 are legal
         val value = ValueCodec.read(buf, part.valueTag, part.decPrec,
           part.decScale)
         val wt = buf.getLong()
         val exp = if (part.hasExpiry) buf.getLong() else Long.MaxValue
-        cellsRead += 1 // decoded, whether or not the pk filter keeps it
-        if (pk >= pkLower && pk <= pkUpper) {
+        cellsRead += 1 // decoded, whether or not the token filter keeps it
+        if (token >= tokenLower && token <= tokenUpper) {
           var i = 0
           while (i < projIdx.length) {
-            projIdx(i) match {
-              case 0 => vectors(i).putLong(n, pk)
-              case 1 => vectors(i).putInt(n, ck)
-              case 2 =>
-                val b = colNameBytes(colId)
-                vectors(i).putByteArray(n, b, 0, b.length)
-              case 3 => putValue(vectors(i), n, value)
-              case 4 => vectors(i).putLong(n, wt)
-              case 5 => vectors(i).putLong(n, exp)
-            }
+            val f = projIdx(i)
+            if (f == -1) vectors(i).putLong(n, token)
+            else if (f == -2) vectors(i).putLong(n, exp)
+            else if (f < nKey) {
+              if (!defaultLayout)
+                KeyedVec.put(vectors(i), n, partTags(f), partPrec(f), rec(f))
+              else if (f == 0) vectors(i).putLong(n, token)
+              else vectors(i).putInt(n, ck)
+            } else if (f == nKey) {
+              val b = colNameBytes(colId)
+              vectors(i).putByteArray(n, b, 0, b.length)
+            } else if (f == nKey + 1)
+              KeyedVec.put(vectors(i), n, part.valueTag, part.decPrec, value)
+            else vectors(i).putLong(n, wt)
             i += 1
           }
           n += 1

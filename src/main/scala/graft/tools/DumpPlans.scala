@@ -11,10 +11,14 @@ import graft.Registry
   * phases). Regenerate after plan-affecting changes, from the
   * checkout whose PLANS.md it rewrites (or name the output file):
   *
-  *   tools/run.sh graft.tools.DumpPlans <sfDir> [<PLANS.md path>]
+  *   tools/run.sh graft.tools.DumpPlans <sfDir> [<PLANS.md path>] [<q1,q2>]
+  *
+  * With the third argument, a comma-separated list of headline query
+  * names, only those are planned and only their `## <name>` sections
+  * are replaced; every other byte of the file stays as it was.
   */
 object DumpPlans {
-  private val headline = Seq(
+  private[graft] val headline = Seq(
     "q1_pricing_summary", "Q_JOIN2_broadcast_dims", "Q_JOIN14_profit",
     "Q_TOPK1_global", "Q_TOPK3_custom", "Q_AGG1_groupby",
     "C8_pk_pushdown", "N_SIM1_cosine_topk", "N_DEDUP2_minhash_lsh",
@@ -97,10 +101,53 @@ object DumpPlans {
   /** Hand-written sections (memos) after this marker are preserved
     * across regeneration.
     */
-  private val KeepMarker = "\n---\n\n# SSTable binary-format"
+  private[graft] val KeepMarker = "\n---\n\n# SSTable binary-format"
+
+  /** One query's section: heading, blank line, fenced plan. */
+  private[graft] def section(name: String, formatted: String): String =
+    s"\n## $name\n\n```\n$formatted```\n"
+
+  /** The headline queries a comma-separated list names, in list order.
+    * Refuses an unknown name, a registry query outside the headline
+    * list, and an empty list.
+    */
+  private[graft] def selected(list: String): Seq[String] = {
+    val names = list.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    require(names.nonEmpty, "empty query list")
+    names.foreach { n =>
+      require(headline.contains(n),
+        if (Registry.byName.contains(n))
+          s"$n is not a headline query; PLANS.md holds only those"
+        else s"unknown query $n")
+    }
+    names.distinct
+  }
+
+  /** `prior` with each named section replaced by its fresh text (see
+    * [[section]]); the header, every other section and the memo tail
+    * from [[KeepMarker]] on stay byte for byte. A section runs from its
+    * `## <name>` heading to the next `## ` heading or to the memo tail.
+    * Refuses a name that has no section yet.
+    */
+  private[graft] def splice(prior: String,
+      fresh: Seq[(String, String)]): String = {
+    val tailAt = prior.indexOf(KeepMarker) match {
+      case -1 => prior.length
+      case i => i
+    }
+    fresh.foldLeft(prior.substring(0, tailAt)) { case (head, (name, text)) =>
+      val start = head.indexOf(s"\n## $name\n")
+      require(start >= 0, s"no `## $name` section to replace")
+      val next = head.indexOf("\n## ", start + 1)
+      head.substring(0, start) + text +
+        head.substring(if (next < 0) head.length else next)
+    } + prior.substring(tailAt)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
+    // refuse a bad query list before starting a session
+    val only = if (args.length > 2) Some(selected(args(2))) else None
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -110,30 +157,31 @@ object DumpPlans {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of the headline " +
-      "queries\n\nGenerated by `graft.tools.DumpPlans` over `" + sfDir +
-      "`. What to look for:\npushed filters / pruned columns on every " +
-      "scan, broadcast exchanges on dims,\npartial aggregation before " +
-      "shuffles, TakeOrderedAndProject for top-k, and the\ntwo " +
-      "GraftTopKPerKey phases around the exchange in Q_TOPK3.\n")
-    headline.foreach { name =>
+    val sections = only.getOrElse(headline).map { name =>
       val df = Registry.byName(name).fn(spark, sfDir)
-      val formatted = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name\n\n```\n$formatted```\n")
+      name -> section(name, df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
     }
     val out =
       if (args.length > 1) Paths.get(args(1))
       else Paths.get(sys.props("user.dir"), "PLANS.md")
     val prior = if (Files.exists(out))
       new String(Files.readAllBytes(out), "UTF-8") else ""
-    val kept = prior.indexOf(KeepMarker) match {
-      case -1 => ""
-      case i => prior.substring(i)
+    val text = if (only.isDefined) splice(prior, sections) else {
+      val kept = prior.indexOf(KeepMarker) match {
+        case -1 => ""
+        case i => prior.substring(i)
+      }
+      "# PLANS — formatted physical plans of the headline " +
+        "queries\n\nGenerated by `graft.tools.DumpPlans` over `" + sfDir +
+        "`. What to look for:\npushed filters / pruned columns on every " +
+        "scan, broadcast exchanges on dims,\npartial aggregation before " +
+        "shuffles, TakeOrderedAndProject for top-k, and the\ntwo " +
+        "GraftTopKPerKey phases around the exchange in Q_TOPK3.\n" +
+        sections.map(_._2).mkString + kept
     }
-    Files.write(out, (sb.toString + kept).getBytes("UTF-8"))
-    println(s"[plans] wrote $out (${headline.size} queries)")
+    Files.write(out, text.getBytes("UTF-8"))
+    println(s"[plans] wrote $out (${sections.size} queries)")
     spark.stop()
   }
 }

@@ -123,25 +123,26 @@ class SourceSpec extends GraftSpec {
     assert(back.agg(sum(col("value"))).head().getLong(0) == 350000L)
   }
 
-  test("columnar read: batches feed the plan, parity with row reader") {
-    // Default path is vectorized: the scan's plan converts batches.
+  test("columnar read: batches feed the plan, parity with the cell model") {
+    // The scan is vectorized: the plan converts batches.
     val plan = read().queryExecution.executedPlan.toString
     assert(plan.contains("ColumnarToRow"), plan)
-    val row = spark.read.format("graft.sources.CellSource")
-      .option("columnar", "false").load(dir)
-    assert(!row.queryExecution.executedPlan.toString
-      .contains("ColumnarToRow"))
-    // Bit-identical contents: full scan, projection, and a pk filter
-    // that drops rows mid-chunk (exercises the fill-time filter).
-    assert(read().except(row).isEmpty && row.except(read()).isEmpty)
-    val pkMid = CellModel.cells(spark, sf())
+    // Multiset-identical to the cells the snapshot was written from:
+    // full scan, projection, and a pk filter that drops rows mid-chunk
+    // (exercises the fill-time filter).
+    val model = CellModel.cells(spark, sf())
+    def same(a: org.apache.spark.sql.DataFrame,
+        b: org.apache.spark.sql.DataFrame): Unit = {
+      assert(a.count() === b.count())
+      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+    }
+    same(read(), model)
+    val pkMid = model
       .select(expr("cast(percentile_disc(0.5) WITHIN GROUP (ORDER BY pk)" +
         " as long)"))
       .head().getLong(0)
-    val c = read().filter(col("pk") <= pkMid).select("pk", "value", "col")
-    val r = row.filter(col("pk") <= pkMid).select("pk", "value", "col")
-    assert(c.except(r).isEmpty && r.except(c).isEmpty)
-    assert(c.count() === r.count())
+    same(read().filter(col("pk") <= pkMid).select("pk", "value", "col"),
+      model.filter(col("pk") <= pkMid).select("pk", "value", "col"))
   }
 
   test("count/min/max answered from headers alone (aggregate pushdown)") {
@@ -219,14 +220,12 @@ class SourceSpec extends GraftSpec {
     assert(one.collect().length ===
       expected.filter(col("pk") === minPk).count())
 
-    // Columnar (default) and row reconcile readers agree exactly, and
-    // the columnar path feeds the plan as batches (ColumnarToRow).
-    val rowForm = spark.read.format("graft.sources.CellSource")
-      .option("reconcile", "true").option("columnar", "false").load(d)
-    assert(reconciled.except(rowForm).isEmpty &&
-      rowForm.except(reconciled).isEmpty)
+    // The reconcile reader feeds the plan as batches (ColumnarToRow),
+    // and its rows are exactly the model's merge, duplicates included.
     assert(reconciled.queryExecution.executedPlan.toString
       .contains("ColumnarToRow"))
+    assert(reconciled.exceptAll(expected).isEmpty &&
+      expected.exceptAll(reconciled).isEmpty)
 
     // wt filters must NOT be pushed below the merge: filtering old
     // cells pre-merge would resurrect shadowed versions. Post-merge
@@ -539,7 +538,8 @@ class SourceSpec extends GraftSpec {
     // random flush files: the connector's k-way merge must equal the
     // relational lwwMerge exactly, whatever the file layout — and
     // whatever the key layout: each trial is also written as a typed
-    // `(id bigint) / (c int)` table through the same merge cursor.
+    // `(id bigint) / (c int)` table through the same merge cursor. The
+    // plain scan of both tables must serve the written cells.
     val rnd = new scala.util.Random(20260813L)
     (1 to 4).foreach { trial =>
       val nCells = 300 + rnd.nextInt(700)
@@ -582,6 +582,22 @@ class SourceSpec extends GraftSpec {
       assert(typed.except(want).isEmpty && want.except(typed).isEmpty,
         s"trial $trial typed: layout $nFlushes flushes, $nCells cells")
       assert(typed.count() === want.count(), s"trial $trial typed dups")
+      // the plain scan decodes both record formats to exactly the
+      // written cells: whole, and under a key range that cuts inside a
+      // chunk (every flush file here is one 4096-record chunk)
+      val written = cells.toDF("pk", "ck", "col", "value", "wt")
+      def inRange(key: String) = col(key) >= 10L && col(key) <= 25L
+      Seq((d, "pk"), (dt, "id")).foreach { case (dir, key) =>
+        val raw = spark.read.format("graft.sources.CellSource")
+          .option("subsplitRecords", "64").load(dir)
+        Seq((raw, written),
+            (raw.filter(inRange(key)), written.filter(inRange("pk"))))
+          .foreach { case (g0, w) =>
+            val g = g0.toDF("pk", "ck", "col", "value", "wt")
+            assert(g.count() === w.count() && g.exceptAll(w).isEmpty &&
+              w.exceptAll(g).isEmpty, s"trial $trial plain scan of $key")
+          }
+      }
     }
   }
 
@@ -1827,6 +1843,34 @@ class SourceSpec extends GraftSpec {
       gen1 + ((4L, 1, "qty", 40L, 1L)))
   }
 
+  /** The typed-key half of each subset-compaction test: four flushes
+    * of a `((user),ck)` table, two cells with per-cell TTLs (CEL11),
+    * rewritten by `pass` into one file. Every winner's `_expiry` must
+    * survive the rewrite, and a read past both expiries must not serve
+    * the TTL'd cells.
+    */
+  private def typedTtlSurvives(name: String)(pass: String => Unit): Unit = {
+    val d = Files.createTempDirectory(name).toString
+    Seq(("u-1", 0, "qty", 1L, 1000L, Some(500L)), // expires at 1500
+      ("u-2", 0, "qty", 2L, 1000L, None),
+      ("u-1", 1, "price", 3L, 1100L, Some(900L)), // expires at 2000
+      ("u-3", 0, "qty", 4L, 1200L, None))
+      .foreach(r => writeTypedTtl(d, Seq(r)))
+    def rec(opt: (String, String)) = spark.read
+      .format("graft.sources.CellSource").option("reconcile", "true")
+      .option(opt._1, opt._2).load(d)
+    def winners() = rec("withTtl" -> "true")
+      .as[(String, Int, String, Long, Long, Long)].collect().toSet
+    val before = winners()
+    assert(before.count(_._6 != Long.MaxValue) == 2, before)
+    pass(d)
+    assert(Files.list(java.nio.file.Paths.get(d)).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".cells")) == 1)
+    assert(winners() == before)
+    assert(rec("queryTime" -> "5000").select("user", "ck")
+      .as[(String, Int)].collect().toSet == Set(("u-2", 0), ("u-3", 0)))
+  }
+
   test("size-tiered compaction rewrites only the small tier (STCS)") {
     import java.nio.file.{Files => JF, Paths => JP}
     import graft.sources.CellMaintenance
@@ -1869,6 +1913,9 @@ class SourceSpec extends GraftSpec {
     assert(reconciled() == before)
     // a second pass finds no eligible tier (1 big + 1 merged file)
     assert(CellMaintenance.compactTiered(spark, d).isEmpty)
+    typedTtlSurvives("cells-stcs-typed") { t =>
+      assert(CellMaintenance.compactTiered(spark, t).isDefined)
+    }
   }
 
   test("leveled compaction: L0 merges to disjoint L1, promotes on budget (C54)") {
@@ -1930,6 +1977,9 @@ class SourceSpec extends GraftSpec {
     assert(out3.forall(lv3.get(_).contains(2)), lv3)
     assert(reconciled() == before ++
       (0 until 4).map(k => (200L + k, 0, "qty", k.toLong, 500L)))
+    typedTtlSurvives("cells-lcs-typed") { t =>
+      assert(CellMaintenance.compactLeveled(spark, t).exists(_._1 == 1))
+    }
   }
 
   test("time-window compaction never merges across windows (C51, TWCS)") {
@@ -1966,6 +2016,11 @@ class SourceSpec extends GraftSpec {
     assert(reconciled() == before)
     // stable windows: a second pass finds nothing to do
     assert(CellMaintenance.compactWindows(spark, d, 1000L).isEmpty)
+    // all four typed flushes sit in window 1
+    typedTtlSurvives("cells-twcs-typed") { t =>
+      assert(CellMaintenance.compactWindows(spark, t, 1000L) ==
+        Seq(1L -> 4))
+    }
   }
 
   test("clustering zone maps prune chunks for ck slices (C37/CEL7)") {
