@@ -639,9 +639,10 @@ object Cql {
       // blob/counter/vector documents have no JSON grammar in this
       // subset; every SCALAR declared type routes below through its
       // own literal grammar (C63b) — Cassandra's INSERT JSON contract
-      // (the COLUMN type interprets the JSON value)
+      // (the COLUMN type interprets the JSON value). The value type
+      // is resolved once and routes the whole statement.
+      val vt = graft.sources.CellSource.valueTypeOf(dir)
       locally {
-        val vt = graft.sources.CellSource.valueTypeOf(dir)
         // an UNDECLARED storage type (no cqlValueType property) must
         // be one the bigint/text/C65q document grammars below can
         // serve — an int-storage table falling through to the bigint
@@ -669,13 +670,12 @@ object Cql {
         // text-valued ones (C65o, r14); mapped and C65q scalar
         // declared types re-route each field through the SAME
         // literal grammar INSERT VALUES uses (C63b, r15)
-        mappedValueType(dir) match {
-          case Some((ct, vt)) => appendCells(dir, vt,
+        cqlValueTypeOf(dir) match {
+          case Some(ct) => appendCells(dir, vt,
             jsonAnyCells(json, wt, mappedLiteral(ct)), ttlOpt)
-          case None if isStringValued(dir) =>
-            appendCells(dir, org.apache.spark.sql.types.StringType,
-              jsonStringCells(json, wt), ttlOpt)
-          case None => otherScalarType(dir) match {
+          case None if vt == org.apache.spark.sql.types.StringType =>
+            appendCells(dir, vt, jsonStringCells(json, wt), ttlOpt)
+          case None => otherScalarType(vt) match {
             case Some(vt) => appendCells(dir, vt,
               jsonAnyCells(json, wt, scalarLiteral(vt)), ttlOpt)
             case None =>
@@ -749,7 +749,7 @@ object Cql {
       // brace IS the value literal) tables are excluded — their own
       // arms below parse those shapes.
       if (spec.isDefault && udtLayoutOf(dir).isEmpty &&
-          !mappedValueType(dir).exists(_._1.startsWith("vector<"))) {
+          !cqlValueTypeOf(dir).exists(_.startsWith("vector<"))) {
         val names = cols.split(',').map(_.trim.toLowerCase)
         val values = splitValues(vals).map(_.trim)
         if (names.length == values.length && names.contains("pk") &&
@@ -770,6 +770,8 @@ object Cql {
       val (tsOpt, rawTtl) = parseUsing(Option(usingClause))
       val ttlOpt = effectiveTtl(dir, rawTtl)
       val wt = tsOpt.getOrElse(nextWt(spark, dir))
+      // the value type, resolved once, routes the plain arms below
+      lazy val vt = graft.sources.CellSource.valueTypeOf(dir)
       udtLayoutOf(dir) match {
         case Some(layout) if spec.isDefault =>
           // frozen<udt> value (C59b): packed blobs; unfrozen (C59d):
@@ -791,19 +793,17 @@ object Cql {
           // mapped types (C65r) route FIRST: a uuid table stores
           // text but must validate uuid literals, not accept any
           // string the text grammar would
-          mappedValueType(dir) match {
-            case Some((ct, vt)) => appendCells(dir, vt,
+          cqlValueTypeOf(dir) match {
+            case Some(ct) => appendCells(dir, vt,
               insertScalarCells(fcallLiteral(ct, wt), cols, vals, wt,
                 graft.sources.CellSource.staticCols(dir)),
               ttlOpt)
-            case None if isStringValued(dir) =>
-              appendCells(dir, org.apache.spark.sql.types.StringType,
-                insertStringCells(cols, vals, wt,
-                  graft.sources.CellSource.staticCols(dir)), ttlOpt)
-            case None if isBlobValued(dir) =>
-              appendCells(dir, org.apache.spark.sql.types.BinaryType,
-                insertBlobCells(cols, vals, wt), ttlOpt)
-            case None => otherScalarType(dir) match {
+            case None if vt == org.apache.spark.sql.types.StringType =>
+              appendCells(dir, vt, insertStringCells(cols, vals, wt,
+                graft.sources.CellSource.staticCols(dir)), ttlOpt)
+            case None if vt == org.apache.spark.sql.types.BinaryType =>
+              appendCells(dir, vt, insertBlobCells(cols, vals, wt), ttlOpt)
+            case None => otherScalarType(vt) match {
               case Some(vt) => appendCells(dir, vt,
                 insertScalarCells(fcallScalar(vt, wt), cols, vals, wt,
                   graft.sources.CellSource.staticCols(dir)),
@@ -816,8 +816,8 @@ object Cql {
         case None =>
           // typed vector tables (C70d): the bracket literal parses
           // through the declared grammar and writes binary cells
-          mappedValueType(dir) match {
-            case Some((ct, vt)) => appendRows(dir, spec,
+          cqlValueTypeOf(dir) match {
+            case Some(ct) => appendRows(dir, spec,
               insertTypedRows(spec, cols, vals, wt,
                 fcallLiteral(ct, wt)), ttlOpt, vt)
             case None =>
@@ -832,6 +832,8 @@ object Cql {
       val ttlOpt = effectiveTtl(dir, rawTtl)
       val wt = tsOpt.getOrElse(nextWt(spark, dir))
       val spec = graft.sources.CellSource.keySpec(dir)
+      // the value type, resolved once, routes the plain arms below
+      lazy val vt = graft.sources.CellSource.valueTypeOf(dir)
       if (isCounter(dir)) {
         // counter arithmetic: each increment is one SHARD-DELTA cell
         // at a fresh writetime; the counter read mode SUMS shards
@@ -862,8 +864,8 @@ object Cql {
             udtLayoutOf(dir).get), ttlOpt,
           org.apache.spark.sql.types.BinaryType)
       } else if (spec.isDefault) {
-        mappedValueType(dir) match {
-          case Some((ct, vt)) =>
+        cqlValueTypeOf(dir) match {
+          case Some(ct) =>
             // mapped types (C65r/C65x): element cells parse through
             // the DECLARED grammar — `set<inet>` adds validated
             // addresses, `map<text, date>` entries store day counts.
@@ -879,14 +881,12 @@ object Cql {
             // element cells take the table's value type: bigint on
             // the default, TEXT on a text-valued table (C65o, r14)
             collectionUpdate(spark, dir, sets, where, wt, ttlOpt)
-          case None if isStringValued(dir) =>
-            appendCells(dir, org.apache.spark.sql.types.StringType,
-              updateStringCells(sets, where, wt,
-                graft.sources.CellSource.staticCols(dir)), ttlOpt)
-          case None if isBlobValued(dir) =>
-            appendCells(dir, org.apache.spark.sql.types.BinaryType,
-              updateBlobCells(sets, where, wt), ttlOpt)
-          case None => otherScalarType(dir) match {
+          case None if vt == org.apache.spark.sql.types.StringType =>
+            appendCells(dir, vt, updateStringCells(sets, where, wt,
+              graft.sources.CellSource.staticCols(dir)), ttlOpt)
+          case None if vt == org.apache.spark.sql.types.BinaryType =>
+            appendCells(dir, vt, updateBlobCells(sets, where, wt), ttlOpt)
+          case None => otherScalarType(vt) match {
             case Some(vt) => appendCells(dir, vt,
               updateScalarCells(fcallScalar(vt, wt), sets, where, wt,
                 graft.sources.CellSource.staticCols(dir)),
@@ -896,10 +896,10 @@ object Cql {
                 graft.sources.CellSource.staticCols(dir)), ttlOpt)
           }
         }
-      } else mappedValueType(dir) match {
+      } else cqlValueTypeOf(dir) match {
         // typed vector tables (C70d) route BEFORE the collection
         // sniff — the bracket form IS the vector literal
-        case Some((ct, vt)) => appendRows(dir, spec,
+        case Some(ct) => appendRows(dir, spec,
           updateTypedRows(spec, sets, where, wt, fcallLiteral(ct, wt)),
           ttlOpt, vt)
         case None if hasCollectionSyntax(sets) =>
@@ -1184,31 +1184,32 @@ object Cql {
     effectiveTtl(dir, rawTtl)
   }
 
+  /** Cassandra's LWT result row: `[applied]` (a non-null boolean)
+    * and the `current` value the condition saw, typed by that value —
+    * text, timestamp, blob (packed udt or 0x), int-storage declared
+    * types, double, boolean, decimal as `decimal(38,18)`, and bigint
+    * for bigint cells or when no value is reported: one declared
+    * schema and one local row.
+    */
   private def lwtResult(spark: SparkSession,
       r: graft.sources.CellTransactions.CasResult): DataFrame = {
-    import spark.implicits._
-    // the current-value column takes the TABLE's value type: text
-    // tables report text (r14), everything else bigint
-    r.current match {
-      case Some(v: String) =>
-        Seq((r.applied, Option(v))).toDF("[applied]", "current")
-      case Some(v: java.sql.Timestamp) =>
-        Seq((r.applied, Option(v))).toDF("[applied]", "current")
-      case Some(v: Array[Byte]) => // packed udt / 0x blob (C55i/j)
-        Seq((r.applied, Option(v))).toDF("[applied]", "current")
-      case Some(v: Int) => // int-storage declared types (C55j)
-        Seq((r.applied, Option(v))).toDF("[applied]", "current")
-      case Some(v: Double) =>
-        Seq((r.applied, Option(v))).toDF("[applied]", "current")
-      case Some(v: Boolean) =>
-        Seq((r.applied, Option(v))).toDF("[applied]", "current")
-      case Some(v: java.math.BigDecimal) =>
-        Seq((r.applied, Option(scala.math.BigDecimal(v))))
-          .toDF("[applied]", "current")
-      case _ =>
-        Seq((r.applied, r.current.map(_.asInstanceOf[Long])))
-          .toDF("[applied]", "current")
+    import org.apache.spark.sql.types._
+    val currentType: DataType = r.current match {
+      case Some(_: String) => StringType
+      case Some(_: java.sql.Timestamp) => TimestampType
+      case Some(_: Array[Byte]) => BinaryType
+      case Some(_: Int) => IntegerType
+      case Some(_: Double) => DoubleType
+      case Some(_: Boolean) => BooleanType
+      case Some(_: java.math.BigDecimal) => DecimalType.SYSTEM_DEFAULT
+      case _ => LongType
     }
+    spark.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row(r.applied,
+        r.current.orNull): org.apache.spark.sql.Row),
+      StructType(Seq(
+        StructField("[applied]", BooleanType, nullable = false),
+        StructField("current", currentType, nullable = true))))
   }
 
   /** The CAS row of a TYPED table, from a WHERE that must bind every
@@ -2053,7 +2054,15 @@ object Cql {
     // carries its statement's optional USING TTL (relative, wt-units)
     // — resolved to an ABSOLUTE expiry once the batch wt is known.
     type Parsed = (String, Seq[(Seq[Any], Option[Long])])
-    def spec(dir: String) = graft.sources.CellSource.keySpec(dir)
+    // a target's key layout and value-type gate, resolved once per
+    // table per batch (each resolution lists the table directory)
+    val specs = scala.collection.mutable.Map
+      .empty[String, graft.sources.KeySpec]
+    def spec(dir: String) = specs.getOrElseUpdate(dir,
+      graft.sources.CellSource.keySpec(dir))
+    val valueTypeChecked = scala.collection.mutable.Set.empty[String]
+    def checkValueType(dir: String): Unit =
+      if (valueTypeChecked.add(dir)) refuseBatchValueType(dir)
     // C11i — one append-position map per table, shared across the
     // batch's collection statements: two appends to the same
     // (pk, collection) claim disjoint cks in statement order, so
@@ -2072,7 +2081,7 @@ object Cql {
       case InsertRe(table, cols, vals, usingClause) =>
         val dir = resolve(table)
         if (!(spec(dir).isDefault && udtLayoutOf(dir).isEmpty &&
-            !mappedValueType(dir).exists(_._1.startsWith("vector<"))))
+            !cqlValueTypeOf(dir).exists(_.startsWith("vector<"))))
           return stmt
         val names = cols.split(',').map(_.trim.toLowerCase)
         val values = splitValues(vals).map(_.trim)
@@ -2099,7 +2108,7 @@ object Cql {
           // the journal's cell shape is scalar — frozen<udt> blobs
           // would need a binary journal column; refuse (C59b subset)
           refuseUdt(dir, "LOGGED BATCH")
-          refuseBatchValueType(dir)
+          checkValueType(dir)
           val (ts0, rawTtl) = parseUsing(Option(usingClause))
           val ts = stmtTs(ts0)
           val ttl = effectiveTtl(dir, rawTtl)
@@ -2156,7 +2165,7 @@ object Cql {
               (dir, rr.map((_, ttl)) ++ tt.map((_, None: Option[Long])))
             }
           } else {
-            refuseBatchValueType(dir)
+            checkValueType(dir)
             val sp = spec(dir)
             val rows =
               if (sp.isDefault)
@@ -4735,10 +4744,27 @@ object Cql {
   private val ContainsRe =
     """(?is)^\s*(\w+)\s+CONTAINS\s+(KEY\s+)?(.+?)\s*$""".r
 
-  /** Parsed WHERE terms: the filter columns and their predicates. */
+  /** One parsed WHERE term: the column as written, its operator
+    * (`=`, `<`, `<=`, `>`, `>=` or `IN`) and its literal value(s).
+    */
+  private case class Pred(name: String, op: String, values: Seq[Any]) {
+    def column: String = name.toLowerCase
+    /** The term as a Spark filter (the Catalyst route of `select`). */
+    def filter: Column = op match {
+      case "IN" => col(name).isin(values: _*)
+      case "=" => col(name) === lit(values.head)
+      case "<" => col(name) < lit(values.head)
+      case "<=" => col(name) <= lit(values.head)
+      case ">" => col(name) > lit(values.head)
+      case ">=" => col(name) >= lit(values.head)
+    }
+  }
+
+  /** Parsed WHERE terms, literals parsed up front (a bad literal
+    * refuses here, whichever route the statement then takes).
+    */
   private def predicates(terms: Seq[String],
-      vLit: (String, String) => Any = (_, v) => literal(v))
-      : Seq[(String, Column)] =
+      vLit: (String, String) => Any = (_, v) => literal(v)): Seq[Pred] =
     // CQL WHERE is a pure AND-conjunction (no OR, no parens)
     terms.map {
       case InRe(c, vs) if c.equalsIgnoreCase("ck") =>
@@ -4747,21 +4773,12 @@ object Cql {
         // isin residual drops rows between the named values — key-
         // served, no ALLOW FILTERING (typed ck parts keep the
         // generic path below and its guards)
-        ("ck", col("ck").isin(
-          splitValues(vs).map(v => ckLiteral(v): Any).toIndexedSeq: _*))
+        Pred("ck", "IN", splitValues(vs).map(v => ckLiteral(v): Any)
+          .toIndexedSeq)
       case InRe(c, vs) =>
-        (c.toLowerCase,
-          col(c).isin(splitValues(vs).map(vLit(c.toLowerCase, _))
-            .toIndexedSeq: _*))
-      case PredRe(c, op, v) =>
-        val l = lit(vLit(c.toLowerCase, v))
-        (c.toLowerCase, op match {
-          case "=" => col(c) === l
-          case "<" => col(c) < l
-          case "<=" => col(c) <= l
-          case ">" => col(c) > l
-          case ">=" => col(c) >= l
-        })
+        Pred(c, "IN", splitValues(vs).map(vLit(c.toLowerCase, _))
+          .toIndexedSeq)
+      case PredRe(c, op, v) => Pred(c, op, Seq(vLit(c.toLowerCase, v)))
       case p => fail(s"unsupported predicate: $p")
     }
 
@@ -5812,7 +5829,7 @@ object Cql {
     if (ppl.isDefined && (idxPreds.nonEmpty || idxRanges.nonEmpty ||
         idxLikes.nonEmpty || idxKeyPreds.nonEmpty ||
         containsPreds.nonEmpty ||
-        preds.exists { case (c, _) => !keyCols.contains(c) }))
+        preds.exists(p => !keyCols.contains(p.column))))
       fail("PER PARTITION LIMIT cannot combine with non-key " +
         "predicates (the limit counts rows before the filter)")
     // ck IN pushes only its BOUNDING slice — the in-between rows drop
@@ -5877,7 +5894,7 @@ object Cql {
     val fnNarrows = hasWt || hasTtl || hasStatic || hasUdtSel ||
       hasCollSel
     if (fnNarrows && !allowFiltering &&
-        preds.exists { case (c, _) => !keyCols.contains(c) })
+        preds.exists(p => !keyCols.contains(p.column)))
       fail("WRITETIME/TTL/static with data predicates needs " +
         "ALLOW FILTERING")
     // CQL: SELECT DISTINCT <partition key parts> [, <static cols>] —
@@ -6134,30 +6151,51 @@ object Cql {
         // A single-partition SELECT whose only operators above the
         // scan are filters, projections and LIMIT reads DRIVER-LOCAL
         // (Cassandra's replica-local read): the same scan builder,
-        // options and pushed key filters, run on the driver, wrapped
-        // as a local relation that Catalyst folds on the driver — no
-        // Spark job. Forms that need an operator above the scan
-        // (ORDER BY, GROUP BY and aggregates, DISTINCT, paging,
-        // token() ranges, collection/unfrozen-UDT reassembly) and the
-        // index routes above keep the DataFrame scan.
+        // options and pushed key filters, run on the driver — no Spark
+        // job. Forms that need an operator above the scan (ORDER BY,
+        // GROUP BY and aggregates, DISTINCT, paging, token() ranges,
+        // collection/unfrozen-UDT reassembly) and the index routes
+        // above keep the DataFrame scan.
         val pointFilters =
           if (hasTok || page.isDefined || order.isDefined ||
               group.isDefined || distinct || aggOnly ||
               (cols != "*" && (cqlCollectionOf(dir).isDefined ||
                 (udtL.isDefined && udtUnfrozenOf(dir))))) None
           else partitionKeyFilters(spec, regularTerms, relaxed)
+        // When every WHERE term is a key term pushed as a filter (the
+        // local read re-applies each exactly) and the select list is
+        // `*` or plain key and cell-model columns, the driver also
+        // projects and limits the rows and returns ONE local relation
+        // of final rows. Every other shape (WRITETIME/TTL, CAST, UDFs,
+        // UDT fields, statics, token(), JSON, CONTAINS and data
+        // predicates under ALLOW FILTERING) keeps Catalyst's filter,
+        // projection and LIMIT over the local relation.
+        val plainItems: Option[Seq[(String, String)]] =
+          if (cols == "*") Some(Nil)
+          else {
+            val items = splitItems(cols)
+            val plain = items.collect {
+              case ColRe(c, alias)
+                  if keyCols(c.toLowerCase) || modelCols(c.toLowerCase) =>
+                (c, Option(alias).getOrElse(c))
+            }
+            if (plain.length == items.length) Some(plain) else None
+          }
         val loaded = pointFilters match {
           case Some(fs) =>
             import scala.jdk.CollectionConverters._
             val (schema, rows) = graft.sources.CellSource
               .localReconciledRowsWhere(dir, fs, opts.toMap)
+            if (!json && !fnNarrows && !hasTokSel && containsPreds.isEmpty &&
+                fs.length == regularTerms.length && plainItems.isDefined)
+              return localResult(spark, schema, rows, plainItems.get, lim)
             spark.createDataFrame(rows.asJava, schema)
           case None =>
             spark.read.format(Fmt).options(opts).load(dir)
         }
         if (tokEmpty) loaded.filter(lit(false)) else loaded
       }
-    preds.foreach { case (_, p) => df = df.filter(p) }
+    preds.foreach(p => df = df.filter(p.filter))
     containsPreds.foreach(p => df = df.filter(p))
     if (distinct) {
       val pkCols = spec.pkParts.map(p => col(p.name))
@@ -6739,6 +6777,35 @@ object Cql {
         to_json(struct(names.map(col).toIndexedSeq: _*)).as("[json]"))
     }
     df
+  }
+
+  /** The driver-local finish of a point SELECT (see `select`): the
+    * local read's rows cut to `lim` and projected onto `items`
+    * ((column, output name) pairs; empty = `*`), wrapped as one local
+    * relation of final rows. A projected field keeps the read
+    * schema's type, nullability and metadata under the name the
+    * statement wrote, as Catalyst's projection names it.
+    */
+  private def localResult(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.Row], items: Seq[(String, String)],
+      lim: Option[Int]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val kept = lim.fold(rows)(rows.take)
+    if (items.isEmpty) spark.createDataFrame(kept.asJava, schema)
+    else {
+      val at = items.map { case (c, _) =>
+        val i = schema.fields.indexWhere(_.name.equalsIgnoreCase(c))
+        require(i >= 0,
+          s"no column $c in ${schema.fieldNames.mkString(",")}")
+        i
+      }
+      spark.createDataFrame(
+        kept.map(r => org.apache.spark.sql.Row.fromSeq(at.map(r.get)))
+          .asJava,
+        org.apache.spark.sql.types.StructType(items.zip(at).map {
+          case ((_, name), i) => schema(i).copy(name = name) }))
+    }
   }
 
   // ---------------------------------------------------------------
@@ -8067,24 +8134,16 @@ object Cql {
     graft.sources.CellSource.valueTypeOf(dir) ==
       org.apache.spark.sql.types.StringType
 
-  /** True for a BLOB-valued plain table (C65p): `0x<hex>` write
-    * grammar, empty-blob tombstones. UDT tables are binary-valued
-    * too, but they route earlier via their layout property.
-    */
-  private def isBlobValued(dir: String): Boolean =
-    udtLayoutOf(dir).isEmpty &&
-      graft.sources.CellSource.valueTypeOf(dir) ==
-        org.apache.spark.sql.types.BinaryType
-
   /** The remaining front-door scalar value types (C65q, r14):
     * double, boolean, timestamp — one generic cell path serves all
     * three (the file writer is value-tagged already; only the
-    * LITERAL grammar is type-specific).
+    * LITERAL grammar is type-specific). `vt` is the table's value
+    * type, which the write arms resolve once per statement after
+    * routing UDT and counter tables elsewhere.
     */
-  private def otherScalarType(dir: String)
+  private def otherScalarType(vt: org.apache.spark.sql.types.DataType)
       : Option[org.apache.spark.sql.types.DataType] =
-    if (udtLayoutOf(dir).isDefined || isCounter(dir)) None
-    else graft.sources.CellSource.valueTypeOf(dir) match {
+    vt match {
       case t @ (org.apache.spark.sql.types.DoubleType |
           org.apache.spark.sql.types.BooleanType |
           org.apache.spark.sql.types.TimestampType) => Some(t)

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions.col
   * append and every micro-batch lands more `data-NNNN.cells` files,
   * each point lookup pays the merge fan-in, and shadowed cell
   * versions hold disk forever. `compact` rewrites the table to one
-  * fully-reconciled generation in ONE distributed pass:
+  * fully-reconciled generation in ONE pass:
   *
   *  - scan tasks k-way-merge each disjoint pk range across all files
   *    (never materializing more than O(open files) rows);
@@ -29,7 +29,12 @@ import org.apache.spark.sql.functions.col
   * all reads complete before the driver-side commit truncates.
   * At 100 TB this is exactly a major compaction: shuffle-free (the
   * reconcile ranges ARE the write partitions), executor-parallel,
-  * driver holding only file metadata.
+  * driver holding only file metadata. A table whose reconcile read
+  * plans at most one range (its files hold at most one sub-split)
+  * runs that one scan-and-write task on the driver thread instead —
+  * the same DSv2 reader, writer and commit, no Spark job; so does a
+  * subset rewrite of the tiered, leveled and windowed passes whose
+  * inputs hold at most one sub-split.
   */
 object CellMaintenance {
   /** Rewrite `dir` as one reconciled flush generation. Returns
@@ -82,25 +87,20 @@ object CellMaintenance {
     // Rewrites read + write `_expiry` so per-cell TTL (CEL10 default /
     // CEL11 typed) survives compaction — Cassandra rewrites
     // localExpirationTime with the cell for the same reason.
-    val r0 = spark.read.format("graft.sources.CellSource")
-      .option("reconcile", "true")
-      .option("keepMarkers", "true")
-      .option("withTtl", "true")
-      .option("counter", counter.toString)
-      .option("gcGraceMs", grace.toString)
-      .option("gcNowMs", nowMs.toString)
-    val w = (if (dropped.isEmpty) r0
-      else r0.option("droppedColumns",
-        dropped.map { case (c, t) => s"$c:$t" }.mkString(",")))
-      .load(dir)
-      .write.format("graft.sources.CellSource")
-      .option("withTtl", "true")
-      .option("rollRecords", rollRecords.toString)
-    (if (spec.isDefault) w
-     else w.option("primaryKey",
-       s"((${spec.pkParts.map(_.name).mkString(",")})," +
-         s"${spec.ckParts.map(_.name).mkString(",")})"))
-      .mode("overwrite").save(dir)
+    rewrite(spark, dir,
+      Map("keepMarkers" -> "true", "withTtl" -> "true",
+        "counter" -> counter.toString, "gcGraceMs" -> grace.toString,
+        "gcNowMs" -> nowMs.toString) ++
+        (if (dropped.isEmpty) Nil
+         else Seq("droppedColumns" ->
+           dropped.map { case (c, t) => s"$c:$t" }.mkString(","))),
+      dir,
+      Map("withTtl" -> "true", "rollRecords" -> rollRecords.toString) ++
+        (if (spec.isDefault) Nil
+         else Seq("primaryKey" ->
+           (s"((${spec.pkParts.map(_.name).mkString(",")})," +
+             s"${spec.ckParts.map(_.name).mkString(",")})"))),
+      truncate = true)
     (before, CellPlanning.listFiles(dir).size)
   }
 
@@ -1244,16 +1244,13 @@ object CellMaintenance {
         val p = JPaths.get(f)
         JFiles.createLink(scratch.resolve(p.getFileName), p)
       }
-      spark.read.format("graft.sources.CellSource")
-        .option("reconcile", "true")
-        .option("keepMarkers", "true")
-        .option("withTtl", "true")
-        .option("counter", counter.toString)
-        .load(scratch.toString)
-        .write.format("graft.sources.CellSource")
-        .option("withTtl", "true")
-        .option("rollRecords", rollRecords.toString)
-        .mode("append").save(dir) // publish BEFORE deleting inputs
+      // publish BEFORE deleting inputs
+      rewrite(spark, scratch.toString,
+        Map("keepMarkers" -> "true", "withTtl" -> "true",
+          "counter" -> counter.toString),
+        dir,
+        Map("withTtl" -> "true", "rollRecords" -> rollRecords.toString),
+        truncate = false)
       val outputs = CellPlanning.listFiles(dir).filterNot(before)
       inputs.foreach(f => JFiles.delete(JPaths.get(f)))
       CellManifest.refresh(dir)
@@ -1266,4 +1263,64 @@ object CellMaintenance {
       JFiles.deleteIfExists(scratch)
     }
   }
+
+  /** The one rewrite of [[compact]] and [[rewriteSubset]]: the
+    * reconcile read of `readDir` under `readOpts`, written into `dir`
+    * by the DSv2 write of the table a path-based write of `dir` with
+    * `writeOpts` resolves, truncating (`compact`) or appending. The
+    * read is planned through the provider, as the driver-local point
+    * read plans it. When it plans at most one input partition — every
+    * table whose files hold at most one sub-split — that partition
+    * runs on the driver thread with the pieces a task uses: the
+    * columnar reader, a writer of the table's `newWriteBuilder`, then
+    * `CellBatchWrite.commit`; as in Spark, a failing task aborts its
+    * writer and a failing commit aborts the batch write. A wider read
+    * runs as one Spark job.
+    * Either way every row is staged before the commit truncates or
+    * publishes.
+    */
+  private def rewrite(spark: SparkSession, readDir: String,
+      readOpts: Map[String, String], dir: String,
+      writeOpts: Map[String, String], truncate: Boolean): Unit = {
+    import org.apache.spark.sql.connector.catalog.SupportsWrite
+    import org.apache.spark.sql.connector.write.{LogicalWriteInfo,
+      PhysicalWriteInfo, SupportsTruncate}
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    val (readSchema, read) = CellSource.reconcileBatch(readDir, Nil, readOpts)
+    val parts = read.planInputPartitions()
+    if (parts.length > 1)
+      spark.read.format("graft.sources.CellSource").options(readOpts)
+        .option("reconcile", "true").load(readDir)
+        .write.format("graft.sources.CellSource").options(writeOpts)
+        .mode(if (truncate) "overwrite" else "append").save(dir)
+    else {
+      val props = new java.util.HashMap[String, String](writeOpts.asJava)
+      props.put("path", dir)
+      val opts = new CaseInsensitiveStringMap(props)
+      val provider = new CellSource
+      val builder = provider.getTable(provider.inferSchema(opts),
+          Array.empty, props).asInstanceOf[SupportsWrite]
+        .newWriteBuilder(new LogicalWriteInfo {
+          override val queryId: String = java.util.UUID.randomUUID.toString
+          override def schema = readSchema
+          override def options = opts
+        })
+      val write = (if (truncate) builder.asInstanceOf[SupportsTruncate]
+        .truncate() else builder).build().toBatch
+      // a negative task id: staged names never meet a Spark task's
+      val writer = write.createBatchWriterFactory(new PhysicalWriteInfo {
+        override def numPartitions = 1
+      }).createWriter(0, -1L - driverRewrites.getAndIncrement())
+      val msg = try {
+        val rf = read.createReaderFactory()
+        parts.foreach(p => CellSource.foreachRow(rf, p)(writer.write))
+        writer.commit()
+      } catch { case e: Throwable => writer.abort(); throw e }
+      finally writer.close()
+      try write.commit(Array(msg))
+      catch { case e: Throwable => write.abort(Array(msg)); throw e }
+    }
+  }
+
+  private val driverRewrites = new java.util.concurrent.atomic.AtomicLong
 }

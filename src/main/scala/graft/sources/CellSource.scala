@@ -822,28 +822,19 @@ object CellSource {
     * renames applied).
     *
     * Pushed filters may legally be inexact (pruning is file- and
-    * range-granular), so every `EqualTo` and `In` is re-applied here
-    * on the external rows; other filter kinds only narrow the read
-    * and stay the caller's residual. Rows come back EXTERNAL-typed
+    * chunk-granular), so every filter is re-applied here on the
+    * external rows, exactly: `EqualTo` and `In` by value, and
+    * `LessThan`, `LessThanOrEqual`, `GreaterThan` and
+    * `GreaterThanOrEqual` on bigint, int or text keys — numbers
+    * numerically, text in `UTF8String` byte order (Spark's string
+    * order). Other filter kinds refuse. Rows come back EXTERNAL-typed
     * via the same Catalyst converter collect() uses, with the schema
     * the read served.
     */
   def localReconciledRowsWhere(dir: String, filters: Seq[Filter],
       options: Map[String, String] = Map.empty)
       : (StructType, Seq[org.apache.spark.sql.Row]) = {
-    val norm = CellPlanning.normalize(dir)
-    val omap = new java.util.HashMap[String, String]()
-    options.foreach { case (k, v) => omap.put(k, v) }
-    omap.put("path", norm)
-    omap.put("reconcile", "true")
-    val cis = new CaseInsensitiveStringMap(omap)
-    val provider = new CellSource
-    val schema = provider.inferSchema(cis)
-    val sb = provider.getTable(schema, Array.empty, omap)
-      .asInstanceOf[SupportsRead].newScanBuilder(cis)
-    if (filters.nonEmpty)
-      sb.asInstanceOf[SupportsPushDownFilters].pushFilters(filters.toArray)
-    val batch = sb.build().toBatch
+    val (schema, batch) = reconcileBatch(dir, filters, options)
     val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
       .createToScalaConverter(schema)
     def idx(n: String): Int = {
@@ -858,29 +849,81 @@ object CellSource {
         x.compareTo(y) == 0
       case _ => a == b
     }
-    val exact: Seq[(Int, Seq[Any])] = filters.collect {
-      case EqualTo(n, v) => (idx(n), Seq(v))
-      case In(n, vs) => (idx(n), vs.toSeq)
+    // a range bound's order: bigint/int keys numerically, text keys
+    // in UTF8String byte order
+    def order(a: Any, b: Any): Int = (a, b) match {
+      case (x: Long, y: Long) => java.lang.Long.compare(x, y)
+      case (x: Int, y: Int) => Integer.compare(x, y)
+      case (x: String, y: String) =>
+        UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+      case _ => throw new IllegalArgumentException(
+        s"range re-check compares bigint, int or text keys, got $a vs $b")
     }
-    val rf = batch.createReaderFactory()
+    type Check = org.apache.spark.sql.Row => Boolean
+    def bound(n: String, v: Any)(ok: Int => Boolean): Check = {
+      val i = idx(n)
+      r => ok(order(r.get(i), v))
+    }
+    val exact: Seq[Check] = filters.map {
+      case EqualTo(n, v) =>
+        val i = idx(n)
+        (r: org.apache.spark.sql.Row) => same(r.get(i), v)
+      case In(n, vs) =>
+        val i = idx(n)
+        (r: org.apache.spark.sql.Row) => vs.exists(same(r.get(i), _))
+      case LessThan(n, v) => bound(n, v)(_ < 0)
+      case LessThanOrEqual(n, v) => bound(n, v)(_ <= 0)
+      case GreaterThan(n, v) => bound(n, v)(_ > 0)
+      case GreaterThanOrEqual(n, v) => bound(n, v)(_ >= 0)
+      case f => throw new IllegalArgumentException(
+        s"the driver-local read re-applies key comparisons only, got $f")
+    }
     val out = Vector.newBuilder[org.apache.spark.sql.Row]
-    batch.planInputPartitions().foreach { p =>
-      val r = rf.createColumnarReader(p)
-      try {
-        while (r.next()) {
-          val it = r.get().rowIterator()
-          while (it.hasNext) {
-            // batch rows are views over reused vectors: copy first
-            val row = conv(it.next().copy())
-              .asInstanceOf[org.apache.spark.sql.Row]
-            if (exact.forall { case (i, vs) =>
-                vs.exists(same(row.get(i), _)) })
-              out += row
-          }
-        }
-      } finally r.close()
-    }
+    val rf = batch.createReaderFactory()
+    batch.planInputPartitions().foreach(p => foreachRow(rf, p) { r =>
+      // batch rows are views over reused vectors: copy first
+      val row = conv(r.copy()).asInstanceOf[org.apache.spark.sql.Row]
+      if (exact.forall(_(row))) out += row
+    })
     (schema, out.result())
+  }
+
+  /** The reconcile read of `dir` under `options` (`reconcile` forced
+    * on), planned through the provider exactly as a DataFrame read
+    * plans it: inferSchema → CellTable.newScanBuilder → `filters`
+    * pushed as Spark pushes them → the batch. Its partitions run on
+    * the driver in [[localReconciledRowsWhere]] and in
+    * CellMaintenance's one-partition rewrites.
+    */
+  private[sources] def reconcileBatch(dir: String, filters: Seq[Filter],
+      options: Map[String, String]): (StructType, Batch) = {
+    val omap = new java.util.HashMap[String, String]()
+    options.foreach { case (k, v) => omap.put(k, v) }
+    omap.put("path", CellPlanning.normalize(dir))
+    omap.put("reconcile", "true")
+    val cis = new CaseInsensitiveStringMap(omap)
+    val provider = new CellSource
+    val schema = provider.inferSchema(cis)
+    val sb = provider.getTable(schema, Array.empty, omap)
+      .asInstanceOf[SupportsRead].newScanBuilder(cis)
+    if (filters.nonEmpty)
+      sb.asInstanceOf[SupportsPushDownFilters].pushFilters(filters.toArray)
+    (schema, sb.build().toBatch)
+  }
+
+  /** One planned input partition's rows, read on the driver thread by
+    * the columnar reader a task would use. A row is a view over the
+    * batch's reused vectors, valid until `f` returns.
+    */
+  private[sources] def foreachRow(rf: PartitionReaderFactory,
+      p: InputPartition)(f: InternalRow => Unit): Unit = {
+    val r = rf.createColumnarReader(p)
+    try {
+      while (r.next()) {
+        val it = r.get().rowIterator()
+        while (it.hasNext) f(it.next())
+      }
+    } finally r.close()
   }
 
   /** One row of the driver-local write path: the key parts' EXTERNAL

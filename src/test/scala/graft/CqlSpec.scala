@@ -3760,6 +3760,324 @@ class CqlSpec extends GraftSpec {
     }
   }
 
+  test("point SELECT shapes equal the reconcile scan's schema and rows " +
+      "on both key layouts and both clustering orders, zero Spark jobs") {
+    val root = Files.createTempDirectory("cql-pread").toString
+    spark.conf.set("spark.sql.catalog.prcat", "graft.sources.CellCatalog")
+    spark.conf.set("spark.sql.catalog.prcat.root", root)
+    try {
+      def cq(stmt: String) = Cql.catalogExecute(spark, stmt, "prcat")
+      def runZeroJobs(stmt: String)
+          : (org.apache.spark.sql.types.StructType,
+            Seq[org.apache.spark.sql.Row]) = {
+        var out: (org.apache.spark.sql.types.StructType,
+          Seq[org.apache.spark.sql.Row]) = null
+        val jobs = countJobs {
+          val df = cq(stmt)
+          out = (df.schema, df.collect().toSeq)
+        }
+        assert(jobs === 0, s"$stmt scheduled $jobs Spark jobs")
+        out
+      }
+      cq("CREATE KEYSPACE ks")
+      Seq(("d", "pk", "bigint", 5L: Any, "5", "6", false),
+          ("u", "user", "text", "u-5": Any, "'u-5'", "'u-6'", false),
+          ("dd", "pk", "bigint", 5L: Any, "5", "6", true),
+          ("ud", "user", "text", "u-5": Any, "'u-5'", "'u-6'", true))
+        .foreach { case (t, kc, kt, kv, k, other, desc) =>
+          val tn = s"ks.$t"
+          cq(s"CREATE TABLE $tn ($kc $kt, ck int, col text, " +
+            s"value bigint, wt bigint, PRIMARY KEY (($kc), ck))" +
+            (if (desc) " WITH CLUSTERING ORDER BY (ck DESC)" else ""))
+          // one logged batch is one flush file, so ck 1..6 share a
+          // chunk and a ck range cuts inside it; then one flush file
+          // per statement: an overwrite, a row DELETE, a later update
+          // and another partition
+          cq((1 to 6).map(c => s"INSERT INTO $tn ($kc, ck, qty) " +
+            s"VALUES ($k, $c, ${c * 10})")
+            .mkString("BEGIN BATCH\n", ";\n", ";\nAPPLY BATCH"))
+          Seq(s"INSERT INTO $tn ($kc, ck, qty) VALUES ($k, 2, 21)",
+            s"DELETE FROM $tn WHERE $kc = $k AND ck = 4",
+            s"UPDATE $tn SET price = 7 WHERE $kc = $k AND ck = 3",
+            s"INSERT INTO $tn ($kc, ck, qty) VALUES ($other, 1, 9)")
+            .foreach(cq)
+          val dir = s"$root/ks/$t"
+          assert(new java.io.File(dir).listFiles()
+            .count(_.getName.endsWith(".cells")) >= 5, t)
+          def reference(ckPred: Option[org.apache.spark.sql.Column],
+              proj: Seq[org.apache.spark.sql.Column], lim: Option[Int]) = {
+            val rd = spark.read.format("graft.sources.CellSource")
+              .option("reconcile", "true")
+            var r = (if (desc) rd.option("reverse", "true") else rd)
+              .load(dir).filter(col(kc) === lit(kv))
+            ckPred.foreach(p => r = r.filter(p))
+            if (proj.nonEmpty) r = r.select(proj: _*)
+            val df = lim.fold(r)(r.limit)
+            (df.schema, df.collect().toSeq)
+          }
+          val KC = kc.toUpperCase
+          Seq(
+            (s"SELECT * FROM $tn WHERE $kc = $k", None, Nil, None),
+            (s"SELECT $KC, CK, Col AS c2, VALUE FROM $tn " +
+              s"WHERE $kc = $k LIMIT 2", None,
+              Seq(col(KC), col("CK"), col("Col").as("c2"), col("VALUE")),
+              Some(2)),
+            (s"SELECT * FROM $tn WHERE $kc = $k LIMIT 3", None, Nil,
+              Some(3)),
+            (s"SELECT col, value, wt FROM $tn WHERE $kc = $k AND ck = 3",
+              Some(col("ck") === 3),
+              Seq(col("col"), col("value"), col("wt")), None),
+            (s"SELECT ck AS c, value FROM $tn WHERE $kc = $k " +
+              "AND ck IN (1, 4, 5, 9)", Some(col("ck").isin(1, 4, 5, 9)),
+              Seq(col("ck").as("c"), col("value")), None),
+            (s"SELECT ck, col, value FROM $tn WHERE $KC = $k " +
+              "AND CK > 1 AND CK <= 5",
+              Some(col("ck") > 1 && col("ck") <= 5),
+              Seq(col("ck"), col("col"), col("value")), None),
+            (s"SELECT * FROM $tn WHERE $kc = $k AND ck >= 2 AND ck < 6 " +
+              "LIMIT 2", Some(col("ck") >= 2 && col("ck") < 6), Nil,
+              Some(2))
+          ).foreach { case (stmt, ckPred, proj, lim) =>
+            val got = runZeroJobs(stmt)
+            assert(got === reference(ckPred, proj, lim), stmt)
+          }
+          // the rows themselves: declared order, LIMIT, the overwrite,
+          // the row DELETE and the ck range cut inside the batch chunk
+          val (sch, top2) = runZeroJobs(s"SELECT $KC, CK, Col AS c2, " +
+            s"VALUE FROM $tn WHERE $kc = $k LIMIT 2")
+          assert(sch.fieldNames.toSeq === Seq(KC, "CK", "c2", "VALUE"))
+          assert(top2.map(r => (r.get(0), r.getInt(1), r.getString(2),
+            r.getLong(3))) === (if (desc)
+              Seq((kv, 6, "qty", 60L), (kv, 5, "qty", 50L))
+            else Seq((kv, 1, "qty", 10L), (kv, 2, "qty", 21L))), t)
+          val range = runZeroJobs(s"SELECT ck, col, value FROM $tn " +
+            s"WHERE $kc = $k AND ck > 1 AND ck <= 5")._2
+            .map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
+          val asc = Seq((2, "qty", 21L), (3, "price", 7L), (3, "qty", 30L),
+            (5, "qty", 50L))
+          assert(range === (if (desc)
+            Seq((5, "qty", 50L), (3, "price", 7L), (3, "qty", 30L),
+              (2, "qty", 21L))
+          else asc), t)
+        }
+      // a range on a LATER clustering part is no slice the scan can
+      // push (only the first part's is), so the read re-applies it
+      // row by row: ints numerically, text in UTF-8 byte order
+      // (Spark's string order) — U+FF21 sorts before a supplementary
+      // character, though UTF-16 code units order them the other way
+      cq("CREATE TABLE ks.tx (user text, a int, name text, col text, " +
+        "value bigint, wt bigint, PRIMARY KEY ((user), a, name))")
+      cq("CREATE TABLE ks.tn (user text, a text, n int, col text, " +
+        "value bigint, wt bigint, PRIMARY KEY ((user), a, n))")
+      cq((for (a <- Seq(1, 2); (n, i) <- Seq("a", "b", "Ａ", "😀")
+          .zipWithIndex) yield s"INSERT INTO ks.tx (user, a, name, qty) " +
+          s"VALUES ('x', $a, '$n', ${a * 10 + i})")
+        .mkString("BEGIN BATCH\n", ";\n", ";\nAPPLY BATCH"))
+      cq((for (a <- Seq("p", "q"); n <- 1 to 5) yield
+          s"INSERT INTO ks.tn (user, a, n, qty) VALUES ('x', '$a', $n, $n)")
+        .mkString("BEGIN BATCH\n", ";\n", ";\nAPPLY BATCH"))
+      Seq(
+        ("SELECT a, name, value FROM ks.tx WHERE user = 'x' AND a = 1 " +
+          "AND name > 'a' AND name <= 'Ａ' ALLOW FILTERING", "tx",
+          col("a") === 1 && col("name") > "a" && col("name") <= "Ａ",
+          Seq("a", "name", "value"), Seq(Seq(1, "b", 11L), Seq(1, "Ａ", 12L))),
+        ("SELECT n, value FROM ks.tn WHERE user = 'x' AND a = 'p' " +
+          "AND n > 1 AND n < 4 ALLOW FILTERING", "tn",
+          col("a") === "p" && col("n") > 1 && col("n") < 4,
+          Seq("n", "value"), Seq(Seq(2, 2L), Seq(3, 3L)))
+      ).foreach { case (stmt, t, pred, proj, want) =>
+        val got = runZeroJobs(stmt)
+        val ref = spark.read.format("graft.sources.CellSource")
+          .option("reconcile", "true").load(s"$root/ks/$t")
+          .filter(col("user") === "x" && pred)
+          .select(proj.map(col): _*)
+        assert(got === ((ref.schema, ref.collect().toSeq)), stmt)
+        assert(got._2.map(_.toSeq) === want, stmt)
+      }
+    } finally {
+      spark.conf.unset("spark.sql.catalog.prcat")
+      spark.conf.unset("spark.sql.catalog.prcat.root")
+    }
+  }
+
+  test("LWT results: one [applied] row whose current column takes the " +
+      "value's type, on every scalar value type and a conditional BATCH") {
+    import org.apache.spark.sql.types._
+    val root = Files.createTempDirectory("cql-lwtres").toString
+    spark.conf.set("spark.sql.catalog.lrcat", "graft.sources.CellCatalog")
+    spark.conf.set("spark.sql.catalog.lrcat.root", root)
+    try {
+      def cq(stmt: String) = Cql.catalogExecute(spark, stmt, "lrcat")
+      def check(stmt: String, dt: DataType, applied: Boolean,
+          current: Any): Unit = {
+        val df = cq(stmt)
+        assert(df.schema === StructType(Seq(
+          StructField("[applied]", BooleanType, nullable = false),
+          StructField("current", dt, nullable = true))), stmt)
+        val rows = df.collect()
+        assert(rows.length === 1, stmt)
+        assert(rows.head.getBoolean(0) === applied, stmt)
+        (rows.head.get(1), current) match {
+          case (g: Array[Byte], w: Array[Byte]) =>
+            assert(g.toSeq === w.toSeq, stmt)
+          case (g, w) => assert(g === w, stmt)
+        }
+      }
+      def ts(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
+      def dec(s: String) = new java.math.BigDecimal(s)
+      cq("CREATE KEYSPACE ks")
+      Seq(
+        ("bi", "bigint", LongType, "1", 1L, "2", 2L),
+        ("tx", "text", StringType, "'a'", "a", "'b'", "b"),
+        ("it", "int", IntegerType, "1", 1, "2", 2),
+        ("db", "double", DoubleType, "1.5", 1.5, "2.5", 2.5),
+        ("bo", "boolean", BooleanType, "false", false, "true", true),
+        ("de", "decimal", DecimalType(38, 18), "1.5",
+          dec("1.500000000000000000"), "2.25", dec("2.250000000000000000")),
+        ("ts", "timestamp", TimestampType, "'2020-06-01T12:00:00Z'",
+          ts("2020-06-01T12:00:00Z"), "'2021-01-01T00:00:00Z'",
+          ts("2021-01-01T00:00:00Z")),
+        ("bl", "blob", BinaryType, "0x0a0b", Array[Byte](10, 11), "0xff01",
+          Array[Byte](-1, 1))
+      ).foreach { case (t, decl, dt, l1, v1, l2, v2) =>
+        cq(s"CREATE TABLE ks.$t (pk bigint, ck int, col text, " +
+          s"value $decl, wt bigint)")
+        // IF NOT EXISTS on an absent cell applies and reports no value
+        // (a null bigint); on a live cell it reports the winner
+        check(s"INSERT INTO ks.$t (pk, ck, v) VALUES (1, 1, $l1) " +
+          "IF NOT EXISTS", LongType, true, null)
+        check(s"INSERT INTO ks.$t (pk, ck, v) VALUES (1, 1, $l2) " +
+          "IF NOT EXISTS", dt, false, v1)
+        // UPDATE ... IF reports the value the condition saw
+        check(s"UPDATE ks.$t SET v = $l2 WHERE pk = 1 AND ck = 1 " +
+          s"IF v = $l1", dt, true, v1)
+        check(s"UPDATE ks.$t SET v = $l1 WHERE pk = 1 AND ck = 1 " +
+          s"IF v = $l1", dt, false, v2)
+      }
+      // a conditional BATCH: applied reports nothing, a miss reports
+      // the condition column's winner
+      check("BEGIN BATCH\nUPDATE ks.bi SET v = 3 WHERE pk = 1 AND " +
+        "ck = 1 IF v = 2;\nINSERT INTO ks.bi (pk, ck, w) VALUES " +
+        "(1, 1, 4);\nAPPLY BATCH", LongType, true, null)
+      check("BEGIN BATCH\nUPDATE ks.bi SET v = 5 WHERE pk = 1 AND " +
+        "ck = 1 IF v = 2;\nAPPLY BATCH", LongType, false, 3L)
+      assert(cq("SELECT col, value FROM ks.bi WHERE pk = 1 AND ck = 1")
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSet ===
+        Set(("v", 3L), ("w", 4L)))
+    } finally {
+      spark.conf.unset("spark.sql.catalog.lrcat")
+      spark.conf.unset("spark.sql.catalog.lrcat.root")
+    }
+  }
+
+  test("one-partition compactions rewrite on the driver: zero Spark " +
+      "jobs, the job route's raw cells, for compact and a tiered pass") {
+    import graft.sources.CellMaintenance
+    val root = Files.createTempDirectory("cql-cmp").toString
+    spark.conf.set("spark.sql.catalog.cmcat", "graft.sources.CellCatalog")
+    spark.conf.set("spark.sql.catalog.cmcat.root", root)
+    try {
+      def cq(stmt: String) = Cql.catalogExecute(spark, stmt, "cmcat")
+      val src = "graft.sources.CellSource"
+      // every raw record with its absolute expiry, markers included
+      def raw(dir: String, kc: String, kv: Any): Seq[String] =
+        spark.read.format(src).option("withTtl", "true").load(dir)
+          .filter(col(kc) === lit(kv)).collect()
+          .map(_.toSeq.mkString("|")).toSeq.sorted
+      def reconcilePartitions(dir: String): Int =
+        spark.read.format(src).option("reconcile", "true")
+          .option("keepMarkers", "true").option("withTtl", "true")
+          .load(dir).rdd.getNumPartitions
+      cq("CREATE KEYSPACE ks")
+      Seq(("d", "pk", "bigint", "bigint", 5L: Any, "5"),
+          ("u", "user", "text", "bigint", "u-5": Any, "'u-5'"),
+          ("c", "pk", "bigint", "counter", 5L: Any, "5")).foreach {
+        case (t, kc, kt, vt, kv, k) =>
+          // twins: `t` holds one partition; `t_big` the same statements
+          // plus one bulk write of 70,000 records in other partitions,
+          // more than one sub-split, so its rewrite is a Spark job
+          val twins = Seq("", "_big").map(s => s"$t$s")
+          twins.foreach(n => cq(s"CREATE TABLE ks.$n ($kc $kt, ck int, " +
+            s"col text, value $vt, wt bigint, PRIMARY KEY (($kc), ck))"))
+          def fill(n: String): Unit = (if (vt == "counter") Seq(
+              s"UPDATE ks.$n SET hits = hits + 5 WHERE $kc = $k AND ck = 1",
+              s"UPDATE ks.$n SET hits = hits + 3 WHERE $kc = $k AND ck = 1",
+              s"UPDATE ks.$n SET hits = hits + 7 WHERE $kc = $k AND ck = 2",
+              s"DELETE FROM ks.$n WHERE $kc = $k AND ck = 2",
+              s"UPDATE ks.$n SET hits = hits - 2 WHERE $kc = $k AND ck = 1",
+              s"UPDATE ks.$n SET hits = hits + 4 WHERE $kc = $k AND ck = 3")
+            else Seq(
+              s"INSERT INTO ks.$n ($kc, ck, qty) VALUES ($k, 1, 1)",
+              s"INSERT INTO ks.$n ($kc, ck, qty) VALUES ($k, 1, 2)",
+              s"INSERT INTO ks.$n ($kc, ck, price) VALUES ($k, 2, 3) " +
+                "USING TTL 100000",
+              s"DELETE FROM ks.$n WHERE $kc = $k AND ck = 1",
+              s"UPDATE ks.$n USING TTL 50000 SET qty = 4 " +
+                s"WHERE $kc = $k AND ck = 3",
+              s"DELETE price FROM ks.$n WHERE $kc = $k AND ck = 3",
+              s"INSERT INTO ks.$n ($kc, ck, qty) VALUES ($k, 4, 6)"))
+            .foreach(cq)
+          def bulk(n: String): Unit = {
+            val key = if (kt == "text") concat(lit("b-"), col("id"))
+              else col("id") + 1000L
+            spark.range(70000).select(key.as(kc),
+                (col("id") % 7).cast("int").as("ck"),
+                lit("qty").as("col"), col("id").as("value"),
+                lit(1L).as("wt"))
+              .coalesce(1).write.format(src).mode("append")
+              .save(s"$root/ks/$n")
+          }
+          // major compaction (no declared strategy: count-triggered)
+          twins.foreach(fill)
+          bulk(s"${t}_big")
+          val dir = s"$root/ks/$t"
+          val big = s"$root/ks/${t}_big"
+          assert(reconcilePartitions(dir) === 1, t)
+          assert(reconcilePartitions(big) >= 2, t)
+          var out: Option[(Int, Int)] = None
+          val jobs = countJobs {
+            out = CellMaintenance.compactDeclared(spark, dir)
+          }
+          assert(jobs === 0, s"$t compaction scheduled $jobs Spark jobs")
+          assert(out.map(_._2) === Some(1), t)
+          assert(countJobs(CellMaintenance.compactDeclared(spark, big)) > 0)
+          val compacted = raw(dir, kc, kv)
+          assert(compacted.nonEmpty, t)
+          assert(compacted === raw(big, kc, kv), t)
+          // the flush indices stay monotonic: the one new generation
+          // lands above every replaced file
+          assert(new java.io.File(dir).list().filter(_.endsWith(".cells"))
+            .toSeq === Seq(f"data-${out.get._1}%04d.cells"), t)
+          // a tiered pass: more statements, then one size bucket
+          // holding every file, so the tier is the whole table
+          twins.foreach(fill)
+          bulk(s"${t}_big")
+          assert(reconcilePartitions(dir) === 1, t)
+          assert(reconcilePartitions(big) >= 2, t)
+          var tier: Option[(Seq[String], Int, Int)] = None
+          val tierJobs = countJobs {
+            tier = CellMaintenance.compactTiered(spark, dir,
+              bucketHigh = Double.MaxValue)
+          }
+          assert(tierJobs === 0, s"$t tiered pass scheduled $tierJobs jobs")
+          assert(tier.map(_._3) === Some(1), t)
+          assert(countJobs(CellMaintenance.compactTiered(spark, big,
+            bucketHigh = Double.MaxValue)) > 0)
+          assert(raw(dir, kc, kv) === raw(big, kc, kv), t)
+          // the reconciled partition reads as before the passes
+          val read = cq(s"SELECT ck, col, value FROM ks.$t WHERE $kc = $k")
+            .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
+            .toSet
+          assert(read === (if (vt == "counter")
+            Set((1, "hits", 12L), (3, "hits", 8L))
+          else Set((2, "price", 3L), (3, "qty", 4L), (4, "qty", 6L))), t)
+      }
+    } finally {
+      spark.conf.unset("spark.sql.catalog.cmcat")
+      spark.conf.unset("spark.sql.catalog.cmcat.root")
+    }
+  }
+
   test("script allocator: later statements shadow earlier ones") {
     val d = freshTable()
     Cql.executeScript(spark,
