@@ -2,6 +2,7 @@ package graft.cql
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ResultFrame
 
 /** C65 — a CQL front door over the cell connector: parse a (typed
   * subset of the) CQL grammar and execute it through the SAME read
@@ -564,7 +565,7 @@ object Cql {
           warnFlushFailure("COUNTER BATCH", e) }
         scriptWts.remove(); scriptBuf.remove()
       }
-      spark.emptyDataFrame
+      ResultFrame.empty(spark)
     case UnloggedBatchRe(batchTs, body) =>
       if (batchTs != null)
         fail("batch-level USING TIMESTAMP takes a LOGGED batch (an " +
@@ -630,7 +631,7 @@ object Cql {
           warnFlushFailure("UNLOGGED BATCH", e) }
         scriptWts.remove(); scriptBuf.remove()
       }
-      spark.emptyDataFrame
+      ResultFrame.empty(spark)
     case BatchRe(batchTs, body) =>
       batch(spark, body, resolve, Option(batchTs).map(_.toLong))
     case InsertJsonRe(table, json, usingTs) =>
@@ -687,7 +688,7 @@ object Cql {
       else appendRows(dir, spec,
         jsonCellsTyped(spec, json, wt), ttlOpt)
       if (usingTs != null) forgetWt(dir)
-      spark.emptyDataFrame
+      ResultFrame.empty(spark)
     case InsertIfNotExistsRe(table, cols, vals, usingClause) =>
       flushBuffered(spark, resolve(table)) // CAS reads current state
       val r = lwtInsert(spark, resolve(table), cols, vals,
@@ -825,7 +826,7 @@ object Cql {
           }
       }
       if (tsOpt.isDefined) forgetWt(dir)
-      spark.emptyDataFrame
+      ResultFrame.empty(spark)
     case UpdateRe(table, usingClause, sets, where) =>
       val dir = resolve(table)
       val (tsOpt, rawTtl) = parseUsing(Option(usingClause))
@@ -909,7 +910,7 @@ object Cql {
           updateTyped(spark, dir, spec, sets, where, wt, ttlOpt)
       }
       if (tsOpt.isDefined) forgetWt(dir)
-      spark.emptyDataFrame
+      ResultFrame.empty(spark)
     case DeleteRe(colOpt, table, usingTs, where) =>
       val dir = resolve(table)
       val dts = Option(usingTs).map(_.toLong).getOrElse(nextWt(spark, dir))
@@ -1068,7 +1069,7 @@ object Cql {
       }
       else deleteTyped(dir, spec, Option(colOpt), where, dts)
       if (usingTs != null) forgetWt(dir)
-      spark.emptyDataFrame
+      ResultFrame.empty(spark)
     case _ => fail(s"unsupported CQL statement: $cql")
   }
 
@@ -1189,7 +1190,7 @@ object Cql {
     * text, timestamp, blob (packed udt or 0x), int-storage declared
     * types, double, boolean, decimal as `decimal(38,18)`, and bigint
     * for bigint cells or when no value is reported: one declared
-    * schema and one local row.
+    * schema and one row, returned as a [[ResultFrame]].
     */
   private def lwtResult(spark: SparkSession,
       r: graft.sources.CellTransactions.CasResult): DataFrame = {
@@ -1204,12 +1205,11 @@ object Cql {
       case Some(_: java.math.BigDecimal) => DecimalType.SYSTEM_DEFAULT
       case _ => LongType
     }
-    spark.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row(r.applied,
-        r.current.orNull): org.apache.spark.sql.Row),
+    ResultFrame(spark,
       StructType(Seq(
         StructField("[applied]", BooleanType, nullable = false),
-        StructField("current", currentType, nullable = true))))
+        StructField("current", currentType, nullable = true))),
+      Seq(org.apache.spark.sql.Row(r.applied, r.current.orNull)))
   }
 
   /** The CAS row of a TYPED table, from a WHERE that must bind every
@@ -2223,7 +2223,7 @@ object Cql {
     // the shared batch wt (and any member's explicit ts) moved the
     // involved tables' max outside the allocator's local counters
     parsed.map(_._1).distinct.foreach(forgetWt)
-    spark.emptyDataFrame
+    ResultFrame.empty(spark)
   }
 
   /** C56d — CONDITIONAL (LWT) LOGGED BATCH: Cassandra allows IF
@@ -3281,7 +3281,7 @@ object Cql {
           case None =>
             writeUdts(root, ks, existing + (name.toLowerCase -> layout))
         }
-        spark.emptyDataFrame
+        ResultFrame.empty(spark)
       case DropTypeRe(ifEx, ks, name) =>
         val existing = udtLayouts(root, ks)
         if (!existing.contains(name.toLowerCase)) {
@@ -3306,7 +3306,7 @@ object Cql {
               users.sorted.mkString(", "))
           writeUdts(root, ks, existing - name.toLowerCase)
         }
-        spark.emptyDataFrame
+        ResultFrame.empty(spark)
       case AlterTypeAddRe(ks, name, f, t) =>
         // ALTER TYPE ADD appends at the END of the layout — the C59
         // wire format's evolution rule: pre-evolution blobs unpack
@@ -3331,7 +3331,7 @@ object Cql {
         writeUdts(root, ks, existing + (name.toLowerCase -> grown))
         typeUsers(root, ks, name.toLowerCase)
           .foreach(updateTableProp(_, "udtLayout", grown))
-        spark.emptyDataFrame
+        ResultFrame.empty(spark)
       case AlterTypeRenameRe(ks, name, from, to) =>
         val existing = udtLayouts(root, ks)
         val layout = existing.getOrElse(name.toLowerCase,
@@ -3365,7 +3365,7 @@ object Cql {
         }.mkString(",")
         writeUdts(root, ks, existing + (name.toLowerCase -> renamed))
         users.foreach(updateTableProp(_, "udtLayout", renamed))
-        spark.emptyDataFrame
+        ResultFrame.empty(spark)
       // C51d — Cassandra 5's `CREATE TABLE ... LIKE` (CEP-43): the
       // new table copies the source's COLUMNS and recorded OPTIONS by
       // rendering the source through the round-trippable DESCRIBE and
@@ -3549,12 +3549,11 @@ object Cql {
           .option("header",
             (header != null && header.equalsIgnoreCase("true")).toString)
           .csv(path).count()
-        spark.createDataFrame(
-          java.util.List.of(
-            org.apache.spark.sql.Row(n): org.apache.spark.sql.Row),
+        ResultFrame(spark,
           org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("rows_exported",
-              org.apache.spark.sql.types.LongType, nullable = false))))
+              org.apache.spark.sql.types.LongType, nullable = false))),
+          Seq(org.apache.spark.sql.Row(n)))
       case CopyFromRe(ks, t, path, header) =>
         val dir = s"$root/$ks/$t"
         val schema = spark.table(s"$catalog.$ks.$t").schema
@@ -3583,12 +3582,11 @@ object Cql {
           deltas.writeTo(s"$catalog.$ks.$t").append()
         } else rows.writeTo(s"$catalog.$ks.$t").append()
         val n = rows.count()
-        spark.createDataFrame(
-          java.util.List.of(
-            org.apache.spark.sql.Row(n): org.apache.spark.sql.Row),
+        ResultFrame(spark,
           org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("rows_imported",
-              org.apache.spark.sql.types.LongType, nullable = false))))
+              org.apache.spark.sql.types.LongType, nullable = false))),
+          Seq(org.apache.spark.sql.Row(n)))
       case AlterDropRe(ks, t, c, usingTs) =>
         // Cassandra's ALTER TABLE DROP: record the drop timestamp in
         // system metadata; cells written at-or-before it become
@@ -3641,7 +3639,7 @@ object Cql {
             s"SET TBLPROPERTIES ('staticCols' = " +
             s"'${st.toSeq.sorted.mkString(",")}')")
         }
-        spark.emptyDataFrame
+        ResultFrame.empty(spark)
       case AlterRenameRe(ks, t, pairs) =>
         // C51e — PRIMARY-KEY column renames (Cassandra's one legal
         // rename; it exists to fix legacy key names). Pure metadata:
@@ -3730,7 +3728,7 @@ object Cql {
             case p => fail(s"RENAME takes <old> TO <new> pairs, " +
               s"got: $p")
           }
-        spark.emptyDataFrame
+        ResultFrame.empty(spark)
       case AlterWithRe(ks, t, opts) =>
         // Cassandra's ALTER TABLE WITH: table properties change for
         // FUTURE operations only — default_time_to_live is assigned
@@ -3797,7 +3795,7 @@ object Cql {
                 v.trim.replace("\\", "\\\\").replace("'", "''") + "')")
             case o => fail(s"unsupported table option: $o")
           }
-        spark.emptyDataFrame
+        ResultFrame.empty(spark)
       // ---- C71: CREATE/DROP FUNCTION / AGGREGATE + DESCRIBE -------
       case CreateFnRe(orRepl, ifNot, ks, name, argSpec, nullClause,
           returns, lang, bodyRaw) =>
@@ -3843,7 +3841,7 @@ object Cql {
           writeFns(ksDir, fns.updated(n, CqlFn(args, ret, body,
             nullClause.toUpperCase.startsWith("CALLED"))))
         }
-        spark.emptyDataFrame
+        ResultFrame.empty(spark)
       case DropFnRe(ifEx, ks, name) =>
         val ksDir = java.nio.file.Paths.get(root, ks)
         val n = name.toLowerCase
@@ -3859,7 +3857,7 @@ object Cql {
               " (Cassandra's dependency rule)")
           writeFns(ksDir, fns - n)
         }
-        spark.emptyDataFrame
+        ResultFrame.empty(spark)
       case CreateAggRe(orRepl, ifNot, ks, name, argType, sfunc,
           stype, finalFn, initcond) =>
         val ksDir = java.nio.file.Paths.get(root, ks)
@@ -3903,7 +3901,7 @@ object Cql {
           writeAggs(ksDir, aggs.updated(n,
             CqlAgg(at, sfn, st, ffnOpt, init)))
         }
-        spark.emptyDataFrame
+        ResultFrame.empty(spark)
       case DropAggRe(ifEx, ks, name) =>
         val ksDir = java.nio.file.Paths.get(root, ks)
         val n = name.toLowerCase
@@ -3911,7 +3909,7 @@ object Cql {
         if (!aggs.contains(n)) {
           if (ifEx == null) fail(s"aggregate $ks.$n does not exist")
         } else writeAggs(ksDir, aggs - n)
-        spark.emptyDataFrame
+        ResultFrame.empty(spark)
       case DescFnsRe() =>
         SystemSchema.describeFunctions(spark, catalog)
       case DescFnRe(ks, name) =>
@@ -4157,7 +4155,7 @@ object Cql {
           graft.sources.CellIndex.build(spark, baseDir, idxDir,
             colName, writeThrough = true, opts = effOpts)
         }
-        spark.emptyDataFrame
+        ResultFrame.empty(spark)
       case CreateMvRe(ifNot, vks, vname, bks, bt, whereCol, pkCol,
           keyTail) =>
         // Cassandra's MV statement shape — the view re-keys the base
@@ -4212,7 +4210,7 @@ object Cql {
             whereCol.toLowerCase)
           graft.sources.CellView.register(baseDir, viewDir)
         }
-        spark.emptyDataFrame
+        ResultFrame.empty(spark)
       case DropMvRe(ifEx, ks, name) =>
         val viewDir = s"$root/$ks/$name"
         if (!java.nio.file.Files.isDirectory(
@@ -4224,7 +4222,7 @@ object Cql {
             fail(s"$ks.$name is not a materialized view")
           graft.sources.CellView.drop(viewDir)
         }
-        spark.emptyDataFrame
+        ResultFrame.empty(spark)
       case DropIdxRe(ifEx, ks, name) =>
         val idxDir = s"$root/$ks/$name"
         if (!java.nio.file.Files.isDirectory(
@@ -4237,7 +4235,7 @@ object Cql {
             fail(s"$ks.$name is not a secondary index")
           graft.sources.CellIndex.drop(idxDir)
         }
-        spark.emptyDataFrame
+        ResultFrame.empty(spark)
       // C67 — the driver/cqlsh metadata round: `system_schema`
       // virtual relations and DESCRIBE, served from catalog metadata
       // (bounded by table count; no Spark job, no data read)
@@ -4315,7 +4313,7 @@ object Cql {
               java.nio.file.Paths.get(root, ks.toLowerCase)))
             fail(s"keyspace $ks does not exist")
           current = Some(ks.toLowerCase)
-          spark.emptyDataFrame
+          ResultFrame.empty(spark)
         case stmt => catalogExecute(spark, stmt, catalog, current)
       }.last
       // success path: flush before returning so a flush failure
@@ -6781,8 +6779,8 @@ object Cql {
 
   /** The driver-local finish of a point SELECT (see `select`): the
     * local read's rows cut to `lim` and projected onto `items`
-    * ((column, output name) pairs; empty = `*`), wrapped as one local
-    * relation of final rows. A projected field keeps the read
+    * ((column, output name) pairs; empty = `*`), returned as one
+    * [[ResultFrame]] of final rows. A projected field keeps the read
     * schema's type, nullability and metadata under the name the
     * statement wrote, as Catalyst's projection names it.
     */
@@ -6790,9 +6788,8 @@ object Cql {
       schema: org.apache.spark.sql.types.StructType,
       rows: Seq[org.apache.spark.sql.Row], items: Seq[(String, String)],
       lim: Option[Int]): DataFrame = {
-    import scala.jdk.CollectionConverters._
     val kept = lim.fold(rows)(rows.take)
-    if (items.isEmpty) spark.createDataFrame(kept.asJava, schema)
+    if (items.isEmpty) ResultFrame(spark, schema, kept)
     else {
       val at = items.map { case (c, _) =>
         val i = schema.fields.indexWhere(_.name.equalsIgnoreCase(c))
@@ -6800,11 +6797,10 @@ object Cql {
           s"no column $c in ${schema.fieldNames.mkString(",")}")
         i
       }
-      spark.createDataFrame(
-        kept.map(r => org.apache.spark.sql.Row.fromSeq(at.map(r.get)))
-          .asJava,
+      ResultFrame(spark,
         org.apache.spark.sql.types.StructType(items.zip(at).map {
-          case ((_, name), i) => schema(i).copy(name = name) }))
+          case ((_, name), i) => schema(i).copy(name = name) }),
+        kept.map(r => org.apache.spark.sql.Row.fromSeq(at.map(r.get))))
     }
   }
 

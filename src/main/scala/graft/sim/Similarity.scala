@@ -385,11 +385,20 @@ object Similarity {
     * 100 TB the O(n²) all-pairs shape never appears; cost is
     * Σ O(cell²) with cells sized by the codebook.
     *
+    * `vec_id` names a vector: the assignment aggregates per id and
+    * re-joins the embeddings on it, so a repeated id would multiply
+    * that vector's pairs. Repeated ids are refused (one eager
+    * aggregate over the ids).
+    *
     * @return one row per REMOVED vector: (vec_id, cell, keeper_id =
     *         lowest-id duplicate partner, n_dup_partners).
     */
   def semDedup(embeddings: DataFrame, nc: Int = 8,
       tau: Double = 0.4): DataFrame = {
+    val repeated = embeddings.groupBy(col("vec_id")).count()
+      .filter(col("count") > 1).select(col("vec_id")).limit(3).collect()
+    require(repeated.isEmpty, "semDedup needs unique vec_id values; " +
+      s"repeated: ${repeated.map(_.get(0)).mkString(", ")}")
     val e = embeddings.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"))
     val cb = e.filter(col("vec_id") < nc)

@@ -3983,16 +3983,18 @@ private[sources] object CellPlanning {
     // fresh dir commits before any reader can list it).
     if (!Files.exists(Paths.get(path))) return Nil
     Using.resource(Files.list(Paths.get(path))) { s =>
+      // (flush index, name, path): each file's sort key computed once
       val it = s.iterator()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+      val buf =
+        scala.collection.mutable.ArrayBuffer.empty[(Int, String, String)]
       while (it.hasNext) {
         val f = it.next()
-        if (f.getFileName.toString.endsWith(".cells")) buf += f.toString
+        val n = f.getFileName.toString
+        if (n.endsWith(".cells")) buf += ((fileIndex(n), n, f.toString))
       }
-      buf.sortBy { f =>
-        val n = Paths.get(f).getFileName.toString
-        (fileIndex(n), n)
-      }.toSeq
+      buf.sortInPlaceWith((a, b) =>
+        if (a._1 != b._1) a._1 < b._1 else a._2 < b._2)
+      buf.iterator.map(_._3).toSeq
     }
   }
 

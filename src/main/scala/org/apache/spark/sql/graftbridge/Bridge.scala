@@ -10,8 +10,11 @@ import org.apache.spark.sql.classic.{Dataset => CDataset,
   * Spark extensions that define their own logical operators): a custom
   * [[graft.plans.TopKPerKey]] node needs `Dataset.ofRows` to become a
   * user-facing DataFrame, and that constructor is package-private to
-  * `org.apache.spark.sql`. Nothing else crosses the boundary — all
-  * other graft code stays on public APIs.
+  * `org.apache.spark.sql`. The one other thing across the boundary is
+  * [[ResultFrame]], the CQL front door's result DataFrame, which
+  * subclasses the package-private `Dataset` constructor to collect
+  * its local rows without a Spark action. All other graft code stays
+  * on public APIs.
   */
 object Bridge {
   /** Wrap a logical plan as a DataFrame on this session. */

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.cql.Cql
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** C65 — the CQL front door: every statement shape lands on the
   * connector machinery built for its contract, and write statements
@@ -3561,13 +3562,28 @@ class CqlSpec extends GraftSpec {
   /** Count Spark jobs submitted by `body`. Job-start events arrive on
     * the async listener bus — poll until the count stabilizes.
     */
-  private def countJobs(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  private def countJobs(body: => Unit): Int =
+    countEvents(_.isInstanceOf[
+      org.apache.spark.scheduler.SparkListenerJobStart])(body)
+
+  private def countSqlExecutions(body: => Unit): Int =
+    countEvents(_.isInstanceOf[
+      org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart])(body)
+
+  /** The listener events `body` posts that `counted` accepts, read
+    * once the count has held still for 100 ms.
+    */
+  private def countEvents(
+      counted: org.apache.spark.scheduler.SparkListenerEvent => Boolean)(
+      body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
     val n = new java.util.concurrent.atomic.AtomicInteger
     val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (counted(j)) { n.incrementAndGet(); () }
+      override def onOtherEvent(e: SparkListenerEvent): Unit =
+        if (counted(e)) { n.incrementAndGet(); () }
     }
     spark.sparkContext.addSparkListener(l)
     try {
@@ -3967,6 +3983,134 @@ class CqlSpec extends GraftSpec {
     } finally {
       spark.conf.unset("spark.sql.catalog.lrcat")
       spark.conf.unset("spark.sql.catalog.lrcat.root")
+    }
+  }
+
+  /** `df`'s `collect()` and `collectAsList()` against Spark's own
+    * collect of the same plan: the rows in order, the Java class of
+    * every value, and the column names, types and nullability.
+    */
+  private def assertCollectsAsSpark(df: org.apache.spark.sql.DataFrame,
+      what: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    val ref = Bridge.ofRows(spark, df.queryExecution.logical)
+    assert(df.schema === ref.schema, what)
+    val want = ref.collect().toSeq
+    Seq(df.collect().toSeq, df.collectAsList().asScala.toSeq).foreach {
+      got =>
+        assert(got.length === want.length, what)
+        got.zip(want).foreach { case (g, w) =>
+          assert(g.schema === w.schema, what)
+          assert(g.length === w.length, what)
+          (0 until g.length).foreach { i =>
+            val (a, b) = (g.get(i), w.get(i))
+            assert(Option(a).map(_.getClass) === Option(b).map(_.getClass),
+              s"$what: column $i")
+            (a, b) match {
+              case (x: Array[Byte], y: Array[Byte]) =>
+                assert(x.toSeq === y.toSeq, s"$what: column $i")
+              case _ => assert(a === b, s"$what: column $i")
+            }
+          }
+        }
+    }
+  }
+
+  test("CQL result frames collect exactly as Spark does, with no SQL " +
+      "execution, on both key layouts") {
+    import org.apache.spark.sql.graftbridge.ResultFrame
+    val root = Files.createTempDirectory("cql-rframe").toString
+    spark.conf.set("spark.sql.catalog.rfcat", "graft.sources.CellCatalog")
+    spark.conf.set("spark.sql.catalog.rfcat.root", root)
+    try {
+      def cq(stmt: String) = Cql.catalogExecute(spark, stmt, "rfcat")
+      // the statement's result collects as Spark would, and its
+      // collect() posts no SQL execution
+      def pinned(stmt: String): Seq[org.apache.spark.sql.Row] = {
+        val df = cq(stmt)
+        assert(df.isInstanceOf[ResultFrame], stmt)
+        var rows = Seq.empty[org.apache.spark.sql.Row]
+        assert(countSqlExecutions { rows = df.collect().toSeq } === 0, stmt)
+        assertCollectsAsSpark(df, stmt)
+        rows
+      }
+      cq("CREATE KEYSPACE ks")
+      Seq(("pk", "bigint", "1", "2"), ("user", "text", "'u-1'", "'u-2'"))
+        .foreach { case (kc, kt, k, other) =>
+          // LWT on typed layouts conditions bigint cells only
+          Seq(
+            ("bi", "bigint", "1", "2"),
+            ("tx", "text", "'a'", "'b'"),
+            ("it", "int", "1", "2"),
+            ("db", "double", "1.5", "2.5"),
+            ("bo", "boolean", "false", "true"),
+            ("de", "decimal", "1.5", "2.25"),
+            ("ts", "timestamp", "'2020-06-01T12:00:00Z'",
+              "'2021-01-01T00:00:00Z'"),
+            ("bl", "blob", "0x0a0b", "0xff01")
+          ).filter(t => kt == "bigint" || t._2 == "bigint").foreach {
+            case (v, decl, l1, l2) =>
+              val tn = s"ks.${v}_$kt"
+              cq(s"CREATE TABLE $tn ($kc $kt, ck int, col text, " +
+                s"value $decl, wt bigint" +
+                (if (kt == "text") s", PRIMARY KEY (($kc), ck))" else ")"))
+              // an absent cell: applied, current is a null bigint
+              val absent = pinned(s"INSERT INTO $tn ($kc, ck, v) " +
+                s"VALUES ($k, 1, $l1) IF NOT EXISTS")
+              assert(absent.map(_.toSeq) === Seq(Seq(true, null)), tn)
+              // a live cell: the winner, typed by the value
+              val live = pinned(s"INSERT INTO $tn ($kc, ck, v) " +
+                s"VALUES ($k, 1, $l2) IF NOT EXISTS")
+              assert(live.map(_.getBoolean(0)) === Seq(false), tn)
+              assert(live.head.get(1) != null, tn)
+              pinned(s"UPDATE $tn SET v = $l2 WHERE $kc = $k AND ck = 1 " +
+                s"IF v = $l1")
+          }
+          val tn = s"ks.r_$kt"
+          cq(s"CREATE TABLE $tn ($kc $kt, ck int, col text, " +
+            s"value bigint, wt bigint" +
+            (if (kt == "text") s", PRIMARY KEY (($kc), ck))" else ")"))
+          // a write's result is the session's one empty frame
+          Seq(s"INSERT INTO $tn ($kc, ck, qty, price) VALUES ($k, 1, 1, 5)",
+            s"INSERT INTO $tn ($kc, ck, qty) VALUES ($k, 2, 2)",
+            s"UPDATE $tn SET qty = 3 WHERE $kc = $k AND ck = 3",
+            s"DELETE price FROM $tn WHERE $kc = $k AND ck = 1")
+            .foreach(stmt => assert(pinned(stmt).isEmpty, stmt))
+          assert(cq(s"INSERT INTO $tn ($kc, ck, qty) VALUES ($k, 4, 4)") eq
+            cq(s"DELETE FROM $tn WHERE $kc = $k AND ck = 4"), tn)
+          val KC = kc.toUpperCase
+          Seq(s"SELECT * FROM $tn WHERE $kc = $k",
+            s"SELECT ck, col, value FROM $tn WHERE $kc = $k",
+            s"SELECT $KC, CK AS c, col AS name, value FROM $tn " +
+              s"WHERE $kc = $k",
+            s"SELECT * FROM $tn WHERE $kc = $k LIMIT 2",
+            s"SELECT ck, value FROM $tn WHERE $kc = $k AND ck = 2",
+            s"SELECT * FROM $tn WHERE $kc = $other",
+            s"SELECT ck AS c FROM $tn WHERE $kc = $other LIMIT 1")
+            .foreach(pinned)
+          assert(pinned(s"SELECT * FROM $tn WHERE $kc = $k").length === 3)
+          assert(pinned(s"SELECT * FROM $tn WHERE $kc = $k LIMIT 2")
+            .map(_.getAs[Int]("ck")) === Seq(1, 2))
+          assert(pinned(s"SELECT * FROM $tn WHERE $kc = $other").isEmpty)
+          // a result composes like any DataFrame
+          val part = cq(s"SELECT ck, col, value FROM $tn WHERE $kc = $k")
+          assert(part.count() === 3)
+          assert(part.filter(col("ck") > 1).select(col("value") * 10)
+            .collect().map(_.getLong(0)).sorted.toSeq === Seq(20L, 30L))
+          assert(part.filter(col("col") === "qty").count() === 3)
+          val shown = new java.io.ByteArrayOutputStream
+          Console.withOut(shown)(part.show())
+          assert(shown.toString.contains("| ck|col|value|"), shown.toString)
+          val lwt = cq(s"UPDATE $tn SET qty = 9 WHERE $kc = $k AND ck = 1 " +
+            "IF qty = 1")
+          assert(lwt.filter(col("`[applied]`")).select("current")
+            .collect().map(_.getLong(0)).toSeq === Seq(1L))
+          assert(cq(s"INSERT INTO $tn ($kc, ck, qty) VALUES ($k, 5, 5)")
+            .count() === 0)
+        }
+    } finally {
+      spark.conf.unset("spark.sql.catalog.rfcat")
+      spark.conf.unset("spark.sql.catalog.rfcat.root")
     }
   }
 

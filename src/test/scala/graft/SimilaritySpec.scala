@@ -129,4 +129,19 @@ class SimilaritySpec extends GraftSpec {
     // 9 pairs with both 0 and 8 (all three are mutual near-dups)
     assert(byId(9L)._4 == 2L, byId(9L))
   }
+
+  test("semDedup refuses a repeated vec_id instead of multiplying its pairs") {
+    // 9 appears twice: the per-id assignment would re-join both rows
+    // and count each of 9's partners twice
+    val vecs = Seq(
+      (0L, Array(1f, 0f)), (1L, Array(0f, 1f)),
+      (8L, Array(0.99f, 0.01f)), (9L, Array(1.01f, 0f)),
+      (9L, Array(1.01f, 0f)), (10L, Array(0.1f, 0.9f)))
+    val e = intercept[IllegalArgumentException] {
+      Similarity.semDedup(vecs.toDF("vec_id", "embedding"), nc = 2,
+        tau = 0.95)
+    }
+    assert(e.getMessage.contains("unique vec_id"), e.getMessage)
+    assert(e.getMessage.contains("repeated: 9"), e.getMessage)
+  }
 }
